@@ -6,9 +6,9 @@ time ranges (F5); engagement analysis at scale also wants
 activity-derived sessions (burst detection, conversation turns,
 traffic shaping). Batch shape: one window pass (lag → gap flag →
 running sum) plus one aggregation — both shuffles hash on the
-participant key, so AQE coalesces them and a participant-bucketed
-stage table (analysis/pipeline.py `bucket_participants`) runs it with
-zero exchange. The streaming twin is
+participant key, so AQE coalesces them, and an input already
+hash-partitioned on the participant (a participant-bucketed table)
+runs it with zero exchange. The streaming twin is
 `streaming/sessions.py:streaming_sessionize` (applyInPandasWithState).
 """
 

@@ -26,18 +26,16 @@ _DEMOG_CCS = [(d, cc) for d in CONFIG.datasets
 _CONTROL_IN = "(" + ", ".join(f"'{c}'" for c in CONTROL_CODES) + ")"
 
 
-def _mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return engagement.messages_view(spark, sf_dir)
-
-
-def _pv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return engagement.participants_view(spark, sf_dir)
+def _run_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A-series table `name` exactly as `generate_analysis_files`
+    returned it (queries/engagement.py `_run`)."""
+    return engagement._run(spark, sf_dir).analysis[name]
 
 
 # --- A1 -------------------------------------------------------------------
 
 def engagement_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.engagement_counts(_mv(spark, sf_dir), CONFIG)
+    return _run_table(spark, sf_dir, "engagement_counts")
 
 
 ENGAGEMENT_COUNTS_SQL = _MV + f"""
@@ -53,7 +51,7 @@ FROM {_MV_OK}
 # --- A2 -------------------------------------------------------------------
 
 def repeat_participations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.repeat_participations(_mv(spark, sf_dir), CONFIG)
+    return _run_table(spark, sf_dir, "repeat_participations")
 
 
 REPEAT_PARTICIPATIONS_SQL = _MV + f""",
@@ -71,7 +69,7 @@ FROM dist
 # --- A3 -------------------------------------------------------------------
 
 def theme_distributions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.theme_distributions(_mv(spark, sf_dir), CONFIG)
+    return _run_table(spark, sf_dir, "theme_distributions")
 
 
 THEME_DISTRIBUTIONS_SQL = _MV + "\n" + "\nUNION ALL\n".join(
@@ -86,7 +84,7 @@ THEME_DISTRIBUTIONS_SQL = _MV + "\n" + "\nUNION ALL\n".join(
 # --- A4 -------------------------------------------------------------------
 
 def demographic_distributions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.demographic_distributions(_pv(spark, sf_dir), CONFIG)
+    return _run_table(spark, sf_dir, "demographic_distributions")
 
 
 DEMOGRAPHIC_DISTRIBUTIONS_SQL = _PV + "\n" + "\nUNION ALL\n".join(
@@ -101,7 +99,7 @@ DEMOGRAPHIC_DISTRIBUTIONS_SQL = _PV + "\n" + "\nUNION ALL\n".join(
 # --- A5 -------------------------------------------------------------------
 
 def cross_tabs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.cross_tabs(_pv(spark, sf_dir),
+    return automated.cross_tabs(engagement.participants_view(spark, sf_dir),
                                 "gender_codes", "age_category_codes")
 
 
@@ -115,7 +113,7 @@ FROM {_PV_OK} GROUP BY gender_codes, age_category_codes
 # --- A6 -------------------------------------------------------------------
 
 def sample_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.sample_messages(_mv(spark, sf_dir), CONFIG, k=100)
+    return _run_table(spark, sf_dir, "sample_messages")
 
 
 SAMPLE_MESSAGES_SQL = _MV + """,
@@ -139,7 +137,7 @@ SELECT * FROM (
 # --- A7 -------------------------------------------------------------------
 
 def traffic_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.traffic_analysis(_mv(spark, sf_dir), CONFIG)
+    return _run_table(spark, sf_dir, "traffic_analysis")
 
 
 TRAFFIC_ANALYSIS_SQL = _MV + f"""
@@ -152,7 +150,7 @@ FROM {_MV_OK} GROUP BY day_us, dataset
 # --- A8 -------------------------------------------------------------------
 
 def participation_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.participation_map(_pv(spark, sf_dir), CONFIG)
+    return _run_table(spark, sf_dir, "participation_map")
 
 
 PARTICIPATION_MAP_SQL = _PV + f"""
@@ -166,7 +164,7 @@ SELECT location_code, COUNT(*) AS n_participants FROM (
 # --- A9 -------------------------------------------------------------------
 
 def relevance_uuids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return automated.relevance_uuids(_mv(spark, sf_dir), CONFIG)
+    return _run_table(spark, sf_dir, "relevance_uuids")
 
 
 RELEVANCE_UUIDS_SQL = _MV + """

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..analysis.pipeline import AnalysisRun, generate_analysis_files
 from ..analysis.spine import fetch_messages, filter_messages
 from ..labels.config import (
     AGE_BUCKETS,
@@ -21,8 +22,7 @@ from ..labels.config import (
     DEMOGRAPHIC,
     SYNTHETIC_CONFIG,
 )
-from ..labels.imputation import impute_message_grain, latest_label_code
-from ..labels.views import messages_by_column, participants_by_column
+from ..labels.imputation import latest_label_code
 from ..operators.folds import fold_concat
 from ..sources.synthetic import RQA_DATASETS, latest_cte, synthetic_messages
 from ._helpers import apply_runtime_conf, micros
@@ -30,41 +30,42 @@ from ._helpers import apply_runtime_conf, micros
 CONFIG = SYNTHETIC_CONFIG
 
 
-# DataFrames are immutable, so the *lazy plan objects* for the shared
-# spine stages can be memoized per (session, sf_dir) and handed to
-# every query that builds on them. Constructing the synthetic-messages
-# projection costs ~3s of driver-side py4j calls (hundreds of nested
-# Column expressions); ~8 registry queries start from it, so without
-# memoization the bench pays that plan-build repeatedly for zero new
-# information. (This caches no *data* — only `_imputed` below persists
-# rows.)
+# One memo for every shared spine stage, per (session, sf_dir, stage).
+# DataFrames are immutable, so the lazy plan objects can be handed to
+# every query that builds on them: constructing the synthetic-messages
+# projection alone costs ~3s of driver-side py4j calls, and ~8 registry
+# queries start from it. Two entries also hold DATA: `_messages` and
+# the "run" entry (the imputed grain and both column views, which
+# `generate_analysis_files` localCheckpoints). Checkpoint blocks cannot
+# be released with unpersist/clearCache; they are held until the memo
+# entry's frames are dropped, so a long session over many sf_dirs
+# accumulates them. They also do not survive executor loss — a
+# production deployment uses `generate_analysis_files(stage_dir=...)`.
 #
 # Keyed on applicationId, not id(spark): a stopped session's id() can
 # be reused by a new SparkSession, which would hand out DataFrames
 # bound to the dead session; applicationId is unique per app.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_PLAN_CACHE: dict[tuple[str, str, str], object] = {}
 
 
 def _session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
-def _plan(spark: SparkSession, sf_dir: str, stage: str,
-          build) -> DataFrame:
+def _plan(spark: SparkSession, sf_dir: str, stage: str, build):
     key = (_session_key(spark), sf_dir, stage)
-    df = _PLAN_CACHE.get(key)
-    if df is None:
-        df = build()
-        _PLAN_CACHE[key] = df
-    return df
+    hit = _PLAN_CACHE.get(key)
+    if hit is None:
+        hit = _PLAN_CACHE[key] = build()
+    return hit
 
 
 def _messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The versioned messages table. In production this is a STORED
     table; the synthetic derivation models reading it, so the memo
     materializes it once per session (localCheckpoint — same measured
-    rationale as `_imputed`: ~15 consumers otherwise re-analyze and
-    re-execute the nested label-struct projection per query)."""
+    rationale as the run's stages: ~15 consumers otherwise re-analyze
+    and re-execute the nested label-struct projection per query)."""
     apply_runtime_conf(spark)
     return _plan(spark, sf_dir, "messages",
                  lambda: synthetic_messages(spark, sf_dir)
@@ -85,30 +86,18 @@ def _filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 CONFIG.test_participants))
 
 
-# The imputed message-grain frame feeds ~12 registry queries (views,
-# A1-A9, K2/K3). In production this stage is materialized once as a
-# parquet/Delta table; within one local session a lineage-truncating
-# localCheckpoint is the analog (guide §5), and it beats .cache()
-# twice over, measured at sf0.1: (a) the fill persists UnsafeRows
-# instead of building a columnar InMemoryRelation of the nested
-# labels frame (5.9 → 1.9 s), and (b) every consumer's plan starts
-# from a tiny LogicalRDD instead of re-analyzing the ~60 KB imputation
-# expression tree (pview/mview build+exec 3.4 → 1.6 s, and each of
-# the ~12 downstream queries saves its own analysis walk). Fault
-# tolerance of the truncated lineage is not needed here (local mode;
-# a production deployment writes this stage as a table anyway), and
-# eager=False keeps the fill inside the first consumer's timed action.
-_IMPUTED_CACHE: dict[tuple[str, str], DataFrame] = {}
+def _run(spark: SparkSession, sf_dir: str) -> AnalysisRun:
+    """The public `generate_analysis_files` over the session's messages,
+    once per (session, sf_dir): the views, A-series and every query on
+    the imputed grain read its frames, so the oracle checks the entry
+    point itself."""
+    return _plan(spark, sf_dir, "run",
+                 lambda: generate_analysis_files(_messages(spark, sf_dir),
+                                                 CONFIG))
 
 
 def _imputed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (_session_key(spark), sf_dir)
-    df = _IMPUTED_CACHE.get(key)
-    if df is None:
-        df = impute_message_grain(_filtered(spark, sf_dir),
-                                  CONFIG).localCheckpoint(eager=False)
-        _IMPUTED_CACHE[key] = df
-    return df
+    return _run(spark, sf_dir).imputed
 
 
 # ---------------------------------------------------------------------------
@@ -380,43 +369,16 @@ MESSAGES_IMPUTED_SQL = _messages_imputed_sql()
 # G1/G2 column views with M6/M7/M8
 # ---------------------------------------------------------------------------
 
-_PV_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def participants_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """participants_by_column: G1 folds + F7 + M6/M7/M8 + G3.
-
-    Cached per (session, sf_dir) like _imputed: the participant view
-    feeds K2/K6/K7, A-series and R1/R2, so in production it is
-    materialized once per run rather than re-folded per consumer
-    (localCheckpoint, not .cache() — same measured rationale as
-    _imputed)."""
-    key = (_session_key(spark), sf_dir)
-    df = _PV_CACHE.get(key)
-    if df is None:
-        df = participants_by_column(_imputed(spark, sf_dir),
-                                    CONFIG).localCheckpoint(eager=False)
-        _PV_CACHE[key] = df
-    return df
-
-
-_MV_CACHE: dict[tuple[str, str], DataFrame] = {}
+    """participants_by_column: G1 folds + F7 + M6/M7/M8 + G3 — the
+    run's materialized view (feeds K2/K6/K7, A-series and R1/R2)."""
+    return _run(spark, sf_dir).participants_view
 
 
 def messages_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """messages_by_column: G2/J3 + M6/M7/M8.
-
-    Cached per (session, sf_dir): the message view feeds A1-A3/A6/A7
-    and the K-series exports — one materialization per run
-    (localCheckpoint, not .cache() — same measured rationale as
-    _imputed)."""
-    key = (_session_key(spark), sf_dir)
-    df = _MV_CACHE.get(key)
-    if df is None:
-        df = messages_by_column(_imputed(spark, sf_dir),
-                                CONFIG).localCheckpoint(eager=False)
-        _MV_CACHE[key] = df
-    return df
+    """messages_by_column: G2/J3 + M6/M7/M8 — the run's materialized
+    view (feeds A1-A3/A6/A7 and the K-series exports)."""
+    return _run(spark, sf_dir).messages_view
 
 
 _NIC_SQL = (

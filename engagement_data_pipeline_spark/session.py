@@ -96,9 +96,13 @@ def apply_runtime_conf(spark: SparkSession, shuffle_partitions: int | None = Non
 #: session and perturbed queries whose code had not changed at all
 #: (bloom_state_merge ran 36% slower byte-identical).
 #:
-#: Deliberate CROSS-query materializations (the engagement spine's
-#: _imputed/_PV/_MV memos, the jaccard pairs memo, dedup._shingled)
-#: keep calling .cache() directly and are never registered here.
+#: Deliberate CROSS-query materializations are never registered here.
+#: The engagement spine (`generate_analysis_files`' imputed grain and
+#: column views, memoized once per session by queries/engagement.py)
+#: and the jaccard pairs memo are localCheckpoints: they do not survive
+#: executor loss (`stage_dir` is the durable mode) and cannot be
+#: unpersisted — their blocks are held until the memoized frames are
+#: dropped. dedup._shingled calls .cache() directly.
 _SCOPED_CACHES: list = []
 
 

@@ -96,7 +96,10 @@ def _gram_cells_fast(qdf: DataFrame, dim: int) -> DataFrame:
             "(|x| >= 2^11 at PCA_MICRO=2^20) — long products would "
             "wrap; use gram_stats(..., block=<dim) for the DECIMAL "
             "tile path")).isNull(),
-        F.col("__q"))
+        # a null embedding still counts as a row, as in the tile path:
+        # all-null components keep `flat` non-null, and sums skip them
+        F.coalesce(F.col("__q"),
+                   F.array_repeat(F.lit(None).cast("long"), dim)))
     prods = F.flatten(F.transform(idx, lambda i: F.transform(
         F.sequence(i, F.lit(dim - 1)),
         lambda j: F.element_at(F.col("__q"), i + 1)

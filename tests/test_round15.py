@@ -272,3 +272,21 @@ def test_fuzzy_pairs_narrow_cache_matches_bruteforce(spark):
             for a, b in itertools.combinations(rows, 2)
             if lev(a[1], b[1]) <= 1}
     assert got == want and (1, 6) in got and got[(1, 6)] == 0
+
+
+def test_make_rung_replica_ids_never_collide(spark):
+    # ids past a fixed 10_000_000 shift would land on the next
+    # replica's ids; the derived shift keeps every replica disjoint
+    from tools.make_rung import id_shift, replicate
+
+    df = spark.createDataFrame([(3, "a"), (10_000_003, "b")],
+                               "event_id long, text string")
+    shift = id_shift([(df, ["event_id"])], 3)
+    assert shift == 100_000_000
+    rep = replicate(df, ["event_id"], ["text"], 3, shift)
+    assert rep.select("event_id").distinct().count() == 6
+    assert sorted(r.text for r in rep.collect()) == [
+        "a", "a rep1", "a rep2", "b", "b rep1", "b rep2"]
+    neg = spark.createDataFrame([(-1,)], "event_id long")
+    with pytest.raises(ValueError, match="collide"):
+        id_shift([(neg, ["event_id"])], 2)

@@ -91,12 +91,14 @@ def test_gram_stats_fast_path_matches_tile_path_in_range(spark):
     from engagement_data_pipeline_spark.training.pca import gram_stats
 
     rows = [([float(i) / 7 - 0.4, 1.25 * i, -3.0 + i, 0.0],)
-            for i in range(9)]
+            for i in range(9)] + [(None,)]
     df = spark.createDataFrame(rows, "embedding array<double>")
     fast = {(r.i, r.j): r.s for r in gram_stats(df, 4).collect()}
     tile = {(r.i, r.j): r.s
             for r in gram_stats(df, 4, block=2).collect()}
     assert fast == tile and len(fast) == 4 * 5 // 2 + 4 + 1
+    # the null embedding counts as a row in both paths
+    assert fast[(-1, -1)] == "10"
 
 
 # --- text index sizing ----------------------------------------------------

@@ -138,7 +138,9 @@ def test_generate_analysis_files_end_to_end(spark, tmp_path):
 
 def test_generate_analysis_files_with_stage_tables(spark, tmp_path):
     """stage_dir materializes durable parquet stage tables (imputed
-    partitioned by dataset) and produces the same analysis results."""
+    partitioned by dataset) and produces the same views and analysis
+    tables as the default run, which localCheckpoints its stages and
+    leaves Spark's cache empty."""
     import os
 
     from engagement_data_pipeline_spark.analysis.pipeline import (
@@ -147,40 +149,25 @@ def test_generate_analysis_files_with_stage_tables(spark, tmp_path):
     from engagement_data_pipeline_spark.queries.engagement import CONFIG, _messages
 
     msgs = _messages(spark, "/root/testdata/sf0.001")
+    spark.catalog.clearCache()  # earlier tests share this session
     staged = generate_analysis_files(msgs, CONFIG,
                                      stage_dir=str(tmp_path / "stage"))
-    cached = generate_analysis_files(msgs, CONFIG)
+    default = generate_analysis_files(msgs, CONFIG)
     # partition layout: one dir per dataset under imputed/
     parts = os.listdir(tmp_path / "stage" / "imputed")
     assert any(p.startswith("dataset=") for p in parts)
-    a, b = (sorted(map(tuple, run.analysis["engagement_counts"].collect()))
-            for run in (staged, cached))
-    assert a == b
 
+    def frames(run):
+        return {"messages_view": run.messages_view,
+                "participants_view": run.participants_view,
+                **run.analysis}
 
-def test_generate_analysis_files_bucketed_stage(spark, tmp_path):
-    """bucket_participants writes the imputed grain as a bucketed
-    table: participant-keyed aggregation plans carry no Exchange (the
-    bucketed scan already provides the hash partitioning) and results
-    are identical to the cached mode."""
-    from engagement_data_pipeline_spark.analysis.pipeline import (
-        generate_analysis_files,
-    )
-    from engagement_data_pipeline_spark.queries.engagement import CONFIG, _messages
-
-    msgs = _messages(spark, "/root/testdata/sf0.001")
-    bucketed = generate_analysis_files(msgs, CONFIG,
-                                       stage_dir=str(tmp_path / "stage"),
-                                       bucket_participants=4)
-    cached = generate_analysis_files(msgs, CONFIG)
-
-    plan = (bucketed.imputed.groupBy("participant_uuid").count()
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-
-    a, b = (sorted(map(tuple, run.participants_view.collect()))
-            for run in (bucketed, cached))
-    assert a == b
+    a, b = frames(staged), frames(default)
+    assert len(a) == 10 and a.keys() == b.keys()
+    for name in a:
+        assert (sorted(map(str, a[name].collect()))
+                == sorted(map(str, b[name].collect()))), name
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_generate_analysis_files_dry_run(spark, tmp_path, capsys):
