@@ -4,8 +4,10 @@ Reference: src/engagement_db_to_analysis/code_imputation_functions.py —
 application order fixed at :545-552 (NR/CE → WS-CE → NC → age-category
 → locations). Every rule here is a pure rewrite of the nested `labels`
 array using built-in higher-order functions (filter/transform/get), so
-the whole suite runs JVM-side in one projection — no shuffle, no
-Python in the row path, safe at any scale.
+the whole suite runs JVM-side in two projections — one binding each
+scheme's latest label once, one CASE over those bindings — with no
+shuffle, no Python in the row path, and a plan that grows linearly
+with the config (see the string-compiler note below).
 
 Semantics implemented (per message, over the schemes configured for
 its dataset):
@@ -78,39 +80,75 @@ def latest_label_code(labels: Column, scheme_id: str) -> Column:
 # profiled) for the identical Catalyst tree. The public Column helpers
 # above stay Column-based for external callers; everything below is
 # string composition.
+#
+# The string stays linear in the config:
+# * each scheme the rules read has its latest label BOUND ONCE, as a
+#   hidden top-level column projected before the CASE and dropped after
+#   it. Separate columns, not one named_struct: CollapseProject inlines
+#   a struct whose only uses are field extractions, while a non-cheap
+#   column referenced more than once stays in its own projection. For
+#   SYNTHETIC_CONFIG the optimized plan holds 11 `filter(` lookups, one
+#   per bound scheme, in ~20 KB; inlining each use gives 521 in 78 KB;
+# * M4/M5 prepend all derived labels with one flat
+#   concat(IF(c_k, array(label_k), array()), ..., m3). A CASE per
+#   derived scheme would repeat the array built so far in both
+#   branches: 2^k copies of M1-M3 for k derived schemes.
+#
+# Every config value (scheme id, dataset name, code, location map
+# entry) enters the SQL through `_lit`, so a value containing a quote
+# or backslash parses as the same string.
+
+
+def _lit(value: str) -> str:
+    """A Python string as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _latest_sql(scheme_id: str) -> str:
-    return f"get(filter(labels, l -> l.scheme_id = '{scheme_id}'), 0)"
+    return f"get(filter(labels, l -> l.scheme_id = {_lit(scheme_id)}), 0)"
 
 
 def _label_sql(scheme_id: str, code_sql: str, rule: str) -> str:
     """One imputed Label struct (labels/schema.py field order)."""
-    return (f"named_struct('scheme_id', '{scheme_id}', "
+    return (f"named_struct('scheme_id', {_lit(scheme_id)}, "
             f"'code_id', {code_sql}, 'date_time_utc', last_updated, "
-            f"'checked', true, 'origin_id', 'imputation:{rule}')")
+            f"'checked', true, 'origin_id', {_lit('imputation:' + rule)})")
 
 
 def _control_array_sql(schemes: list[str], code: str, rule: str) -> str:
     return ("array(" + ", ".join(
-        _label_sql(s, f"'{code}'", rule) for s in schemes) + ")")
+        _label_sql(s, _lit(code), rule) for s in schemes) + ")")
 
 
 def _age_bucket_sql(n_sql: str) -> str:
     cases = "".join(
-        f" WHEN {n_sql} BETWEEN {lo} AND {hi} THEN '{code}'"
+        f" WHEN {n_sql} BETWEEN {lo} AND {hi} THEN {_lit(code)}"
         for lo, hi, code in AGE_BUCKETS)
     return f"CASE{cases} ELSE CAST(NULL AS STRING) END"
 
 
-def _impute_for_dataset_sql(ds: DatasetConfig) -> str:
-    """Imputed labels array for one dataset's scheme list, as SQL."""
-    schemes = ds.scheme_ids
-    latest = {s: _latest_sql(s) for s in schemes}
+def _bound_schemes(config: AnalysisConfig) -> list[str]:
+    """Every scheme whose latest label a rule reads, first use first:
+    the configured schemes, their M4/M5 sources and the WS scheme."""
+    schemes = {}
+    for ds in config.datasets:
+        for cc in ds.coding_configs:
+            schemes[cc.scheme_id] = None
+            for src in (cc.age_category_source, cc.location_source):
+                if src is not None:
+                    schemes[src] = None
+    schemes[WS_CORRECT_DATASET_SCHEME] = None
+    return list(schemes)
 
-    checked = [f"({latest[s]} IS NOT NULL AND ({latest[s]}).checked)"
+
+def _impute_for_dataset_sql(ds: DatasetConfig, latest: dict[str, str]) -> str:
+    """Imputed labels array for one dataset's scheme list, as SQL;
+    `latest` maps a scheme id to the column holding its latest label."""
+    schemes = ds.scheme_ids
+
+    checked = [f"({latest[s]} IS NOT NULL AND {latest[s]}.checked)"
                for s in schemes]
-    unchecked = [f"({latest[s]} IS NOT NULL AND NOT ({latest[s]}).checked)"
+    unchecked = [f"({latest[s]} IS NOT NULL AND NOT {latest[s]}.checked)"
                  for s in schemes]
     has_checked = "(" + " OR ".join(checked) + ")"
     has_unchecked = "(" + " OR ".join(unchecked) + ")"
@@ -126,11 +164,11 @@ def _impute_for_dataset_sql(ds: DatasetConfig) -> str:
     # only survives M1 when all labels were checked; the WS-scheme
     # label always survives (it is not a configured scheme).
     ws_any = " OR ".join(
-        f"({latest[s]} IS NOT NULL AND ({latest[s]}).checked "
-        f"AND ({latest[s]}).code_id = '{WS}')" for s in schemes)
+        f"({latest[s]} IS NOT NULL AND {latest[s]}.checked "
+        f"AND {latest[s]}.code_id = {_lit(WS)})" for s in schemes)
     ws_in_normal = f"({all_checked} AND ({ws_any}))"
-    ws_lab = _latest_sql(WS_CORRECT_DATASET_SCHEME)
-    in_ws_scheme = f"({ws_lab} IS NOT NULL AND ({ws_lab}).checked)"
+    ws_lab = latest[WS_CORRECT_DATASET_SCHEME]
+    in_ws_scheme = f"({ws_lab} IS NOT NULL AND {ws_lab}.checked)"
     ws_ce = f"({ws_in_normal} != {in_ws_scheme})"
     m2 = (f"CASE WHEN {ws_ce} "
           f"THEN {_control_array_sql(schemes, CODING_ERROR, 'm2_ws_ce')} "
@@ -152,36 +190,40 @@ def _impute_for_dataset_sql(ds: DatasetConfig) -> str:
     # on all_checked alone wrongly derived on top of M2's CE array.)
     derivable = f"({all_checked} AND NOT {ws_ce} AND NOT {text_empty})"
 
+    # (condition, label) per derived scheme, in application order
+    derived = []
+
     # M4: age-category from the age scheme's Normal code
-    out = m3
     for cc in ds.coding_configs:
         if cc.age_category_source is None:
             continue
-        src = f"({_latest_sql(cc.age_category_source)}).code_id"
+        src = f"{latest[cc.age_category_source]}.code_id"
         age_n = f"regexp_extract({src}, '^age_([0-9]+)$', 1)"
         bucket = _age_bucket_sql(f"try_cast({age_n} AS INT)")
         # out-of-bucket Normal ages impute nothing (the reference
         # asserts/crashes there, :316-322 — skipping is the
         # non-crashing analog; divergence note in the module docstring)
-        normal_checked = f"({derivable} AND ({bucket}) IS NOT NULL)"
-        cat = _label_sql(cc.scheme_id, bucket, "m4_age_category")
-        out = (f"CASE WHEN {normal_checked} "
-               f"THEN concat(array({cat}), {out}) ELSE {out} END")
+        derived.append((f"({derivable} AND ({bucket}) IS NOT NULL)",
+                        _label_sql(cc.scheme_id, bucket, "m4_age_category")))
 
     # M5: location-level schemes from the location scheme's Normal
     # code via the config-carried hierarchy mapping
     for cc in ds.coding_configs:
         if cc.location_source is None:
             continue
-        src = f"({_latest_sql(cc.location_source)}).code_id"
+        src = f"{latest[cc.location_source]}.code_id"
         level = ("CASE " + " ".join(
-            f"WHEN {src} = '{s}' THEN '{d}'"
+            f"WHEN {src} = {_lit(s)} THEN {_lit(d)}"
             for s, d in cc.location_map) + " ELSE CAST(NULL AS STRING) END")
-        normal_checked = f"({derivable} AND ({level}) IS NOT NULL)"
-        lvl = _label_sql(cc.scheme_id, level, "m5_location")
-        out = (f"CASE WHEN {normal_checked} "
-               f"THEN concat(array({lvl}), {out}) ELSE {out} END")
-    return out
+        derived.append((f"({derivable} AND ({level}) IS NOT NULL)",
+                        _label_sql(cc.scheme_id, level, "m5_location")))
+
+    if not derived:
+        return m3
+    # each rule prepends, so the last derived label comes first
+    prepends = [f"IF({cond}, array({lab}), array())"
+                for cond, lab in reversed(derived)]
+    return f"concat({', '.join(prepends)}, {m3})"
 
 
 def impute_zone_from_operator(df: DataFrame, zone_scheme: str,
@@ -210,11 +252,17 @@ def impute_zone_from_operator(df: DataFrame, zone_scheme: str,
 
 
 def impute_message_grain(df: DataFrame, config: AnalysisConfig) -> DataFrame:
-    """Apply M1 → M3 → M4 to every message, per its dataset's config.
+    """Apply M1 → M5 to every message, per its dataset's config.
     The whole rule suite compiles to one SQL string -> one F.expr call
-    (see the string-compiler note above)."""
+    over the bound latest-label columns (see the string-compiler note
+    above); the output has the input's columns."""
+    latest = {s: f"__latest_{i}"
+              for i, s in enumerate(_bound_schemes(config))}
     branches = " ".join(
-        f"WHEN dataset = '{ds.name}' THEN {_impute_for_dataset_sql(ds)}"
+        f"WHEN dataset = {_lit(ds.name)} "
+        f"THEN {_impute_for_dataset_sql(ds, latest)}"
         for ds in config.datasets)
-    return df.withColumn("labels",
-                         F.expr(f"CASE {branches} ELSE labels END"))
+    return (df.selectExpr("*", *(f"{_latest_sql(s)} AS {c}"
+                                 for s, c in latest.items()))
+            .withColumn("labels", F.expr(f"CASE {branches} ELSE labels END"))
+            .drop(*latest.values()))

@@ -16,7 +16,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..streaming.ingest import (foreach_batch_upsert, read_merged_table,
@@ -664,12 +664,19 @@ def _nested_cdf_fixture(spark: SparkSession, sf_dir: str) -> str:
         merge = foreach_batch_upsert(table, ["origin_id"], n_buckets=4,
                                      txn_app_id="src",
                                      mode="latest_wins")
-        merge(_rows(c1).where(F.col("slot").isin([0, 1, 2]))
-              .drop("slot", "s8"), 1)
-        merge(_rows(c2).where(F.col("slot").isin([1, 3]))
-              .drop("slot", "s8"), 2)
+        relabel = (_rows(c2).where(F.col("slot").isin([1, 3]))
+                   .drop("slot", "s8"))
         dead = (_rows(c1).where((F.col("slot") == 2) & (F.col("s8") == 2))
                 .select("origin_id"))
+        # table_changes_nested nets commits 2..head into one diff per
+        # origin; that equals the per-commit drain only while no origin
+        # changes in two commits after commit 1
+        if not relabel.join(dead, "origin_id").isEmpty():
+            raise ValueError("nested_cdf_table: commits 2 and 3 touch a "
+                             "common origin_id")
+        merge(_rows(c1).where(F.col("slot").isin([0, 1, 2]))
+              .drop("slot", "s8"), 1)
+        merge(relabel, 2)
         delete_origins(spark, table, dead, strategy="dv")
 
     return os.path.join(fixture_dir("nested_cdf_table", sf_dir, _build),
@@ -690,9 +697,10 @@ def table_changes_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     Consumed through the format's BATCH reader over the whole window
     (commit 1 → head) — the same netting diff the previous streaming
     drain produced (every origin changes at most once after commit 1,
-    and the oracle states the same commit-1-vs-final diff), without a
-    checkpointed streaming query's fixed cost (WAL + offset log +
-    per-batch planning) or a driver collect: the string projection
+    which `_nested_cdf_fixture` checks when it builds, and the oracle
+    states the same commit-1-vs-final diff), without a checkpointed
+    streaming query's fixed cost (WAL + offset log + per-batch
+    planning) or a driver collect: the string projection
     runs JVM-side on the reader's output. Micro-batch delivery of this
     same format is certified by `table_changes_stream`."""
     from ..streaming.cdf_source import (MergeTableChangesDataSource,
@@ -708,16 +716,19 @@ def table_changes_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
           .option("toCommit", str(head))
           .option("includeOld", "true").load())
 
-    def _s(col):
-        # null array -> null string, matching the old driver-side
-        # row._s(None) -> None
-        return F.array_join(
-            F.transform(col, lambda l: F.concat(
-                l["scheme"], F.lit(":"), l["code"])), ",")
-
     return ch.select("origin_id", "op", "changed_cols", "n",
-                     _s(F.col("labels")).alias("labels"),
-                     _s(F.col("labels__old")).alias("labels_old"))
+                     _labels_str(F.col("labels")).alias("labels"),
+                     _labels_str(F.col("labels__old")).alias("labels_old"))
+
+
+def _labels_str(col: Column) -> Column:
+    """`scheme:code` comma-join of a labels array<struct<scheme,code>>.
+    A null array renders as null and an empty one as ''. A label with a
+    null scheme or code is left out: concat makes it null and
+    array_join skips null elements (the fixture never writes one)."""
+    return F.array_join(
+        F.transform(col, lambda l: F.concat(
+            l["scheme"], F.lit(":"), l["code"])), ",")
 
 
 TABLE_CHANGES_NESTED_SQL = """

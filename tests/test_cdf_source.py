@@ -240,3 +240,51 @@ def test_stream_from_shallow_clone(registered, spark, tmp_path):
     finally:
         q.stop()
     assert sorted(got) == [("a", "insert", "1"), ("c", "insert", "3")]
+
+
+def test_nested_cdf_fixture_commits_touch_disjoint_origins(
+        registered, spark, tmp_path):
+    # table_changes_nested reads commits 2..head as ONE netted diff;
+    # that equals a per-commit drain only because no origin changes in
+    # two of those commits
+    from engagement_data_pipeline_spark.queries.streaming_q import (
+        _nested_cdf_fixture)
+    from engagement_data_pipeline_spark.streaming.cdf_source import (
+        _latest_commit)
+
+    sf = str(tmp_path / "sf")
+    (spark.range(64)
+     .select(F.col("id").alias("event_id"),
+             F.lit("2024-01-10 00:00:00").cast("timestamp").alias("ts"))
+     .write.parquet(f"{sf}/events.parquet"))
+    table = _nested_cdf_fixture(spark, sf)
+    head = _latest_commit(table)
+
+    def origins(lo, hi):
+        rows = (registered.read.format("merge_table_changes")
+                .option("path", table).option("fromCommit", str(lo))
+                .option("toCommit", str(hi)).load()
+                .select("origin_id").collect())
+        ids = [r.origin_id for r in rows]
+        assert len(ids) == len(set(ids))
+        return set(ids)
+
+    per_commit = [origins(c - 1, c) for c in range(2, head + 1)]
+    assert len(per_commit) == 2 and all(per_commit)
+    assert not per_commit[0] & per_commit[1]
+    assert origins(1, head) == per_commit[0] | per_commit[1]
+
+
+def test_nested_labels_render_null_scheme_or_code_by_dropping_it(spark):
+    from engagement_data_pipeline_spark.queries.streaming_q import (
+        _labels_str)
+
+    df = spark.createDataFrame(
+        [(1, [("topic", "3"), ("topic", None), (None, "x"),
+              ("extra", "x")]),
+         (2, None), (3, []), (4, [(None, None)])],
+        "k int, labels array<struct<scheme:string,code:string>>")
+    got = {r.k: r.s for r in
+           df.select("k", _labels_str(F.col("labels")).alias("s"))
+           .collect()}
+    assert got == {1: "topic:3,extra:x", 2: None, 3: "", 4: ""}

@@ -1,7 +1,8 @@
 """Label-imputation unit tests on literal nested-schema messages.
 
 Covers M1 (NR/CE), M3 (NC on empty text), M4 (age-category
-bucketing), and the newest-first latest-label-per-scheme rule.
+bucketing), the newest-first latest-label-per-scheme rule, quoting of
+config values in the compiled SQL, and the size of the compiled plan.
 """
 
 from __future__ import annotations
@@ -17,8 +18,10 @@ from engagement_data_pipeline_spark.labels.config import (
     DatasetConfig,
     DEMOGRAPHIC,
     RESEARCH_QUESTION_ANSWER,
+    SYNTHETIC_CONFIG,
 )
 from engagement_data_pipeline_spark.labels.imputation import (
+    _bound_schemes,
     impute_message_grain,
     latest_label_code,
 )
@@ -132,3 +135,40 @@ def test_latest_label_code_expression(spark):
               label("theme_scheme", "old")])], MESSAGE_SCHEMA)
     got = df.select(latest_label_code(F.col("labels"), "theme_scheme").alias("c")).collect()
     assert got[0].c == "new"
+
+
+def test_config_values_with_quotes_compile_as_literals(spark):
+    # scheme ids, dataset names, codes and location-map entries are
+    # pasted into the SQL string; a quote or backslash must stay data
+    quoted = AnalysisConfig(datasets=(
+        DatasetConfig("o'hara", DEMOGRAPHIC, "loc_raw",
+                      (CodingConfig("ward's_scheme", "ward_codes"),
+                       CodingConfig("county_scheme", "county_codes",
+                                    location_source="ward's_scheme",
+                                    location_map=(
+                                        ("ward_o'1", "county\\'a"),
+                                        ("ward_2", "county_b"))))),
+    ))
+    df = spark.createDataFrame([
+        msg("m1", "o'hara", "kibera", [label("ward's_scheme", "ward_o'1")]),
+        msg("m2", "o'hara", "kibera",
+            [label("ward's_scheme", "ward_o'1", checked=False)]),
+    ], MESSAGE_SCHEMA)
+    out = {r["message_id"]: r
+           for r in impute_message_grain(df, quoted).collect()}
+    assert codes(out["m1"], "county_scheme") == ["county\\'a"]
+    assert codes(out["m1"], "ward's_scheme") == ["ward_o'1"]
+    assert codes(out["m2"], "ward's_scheme") == ["NR"]
+    assert codes(out["m2"], "county_scheme") == ["NR"]
+
+
+def test_plan_reads_each_latest_label_once(spark):
+    # every rule reads a hidden column bound once per scheme, so the
+    # optimized plan holds one filter() lookup per bound scheme (the
+    # nested compile inlined 521 of them for this config)
+    df = spark.createDataFrame([], MESSAGE_SCHEMA)
+    out = impute_message_grain(df, SYNTHETIC_CONFIG)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(_bound_schemes(SYNTHETIC_CONFIG)) == 11
+    assert plan.count("filter(") == 11
+    assert out.columns == df.columns

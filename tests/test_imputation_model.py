@@ -20,6 +20,13 @@ happen. A compiled form that reads the ORIGINAL labels gated only on
 labels + a checked WS-scheme label + a valid age code must yield the
 CE array with NO age-category prepend.
 
+A second config puts the age-category scheme BETWEEN two location
+levels of one dataset, so one message derives M4 and M5 labels at once
+and the prepend order (M4 in config order, then M5 in config order,
+each prepended: the last derived label comes first) is pinned
+independently of the config's scheme order. NULL and empty `labels`
+arrays, and a dataset outside the config, ride in the same frame.
+
 Scope notes (documented divergences, not model gaps): out-of-bucket
 Normal age codes (the reference asserts/crashes,
 code_imputation_functions.py:316-322) impute nothing here; the
@@ -37,10 +44,17 @@ import re
 from engagement_data_pipeline_spark.labels.config import (
     AGE_BUCKETS,
     CODING_ERROR,
+    DEMOGRAPHIC,
+    LOCATION_COUNTY_MAP,
+    LOCATION_REGION_MAP,
     NOT_CODED,
     NOT_REVIEWED,
+    RESEARCH_QUESTION_ANSWER,
     SYNTHETIC_CONFIG,
     WS,
+    AnalysisConfig,
+    CodingConfig,
+    DatasetConfig,
 )
 from engagement_data_pipeline_spark.labels.imputation import (
     WS_CORRECT_DATASET_SCHEME,
@@ -51,6 +65,27 @@ from engagement_data_pipeline_spark.labels.schema import MESSAGE_SCHEMA
 T = dt.datetime(2024, 1, 10)
 T1 = dt.datetime(2024, 1, 8)
 DATASETS = {d.name: d for d in SYNTHETIC_CONFIG.datasets}
+
+# one dataset derives age-category (M4) and two location levels (M5);
+# the config lists the age-category scheme between the two levels
+MIXED_CONFIG = AnalysisConfig(datasets=(
+    DatasetConfig("profile", DEMOGRAPHIC, "profile_raw",
+                  (CodingConfig("location_scheme", "location_codes"),
+                   CodingConfig("location_county_scheme",
+                                "location_county_codes",
+                                location_source="location_scheme",
+                                location_map=LOCATION_COUNTY_MAP),
+                   CodingConfig("age_scheme", "age_codes"),
+                   CodingConfig("age_category_scheme", "age_category_codes",
+                                age_category_source="age_scheme"),
+                   CodingConfig("location_region_scheme",
+                                "location_region_codes",
+                                location_source="location_scheme",
+                                location_map=LOCATION_REGION_MAP))),
+    DatasetConfig("s01e01", RESEARCH_QUESTION_ANSWER, "s01e01_raw",
+                  (CodingConfig("s01e01_theme_scheme", "s01e01_theme_codes"),)),
+))
+MIXED_DATASETS = {d.name: d for d in MIXED_CONFIG.datasets}
 
 _AGE_CODES = ["age_5", "age_9", "age_10", "age_14", "age_15", "age_17",
               "age_18", "age_35", "age_36", "age_54", "age_55", "age_99",
@@ -67,7 +102,11 @@ def _latest(labels, scheme):
 
 def _model(ds, text, labels):
     """The reference chain, applied sequentially to (scheme_id,
-    code_id, ts, checked, origin_id) tuples; returns the final list."""
+    code_id, ts, checked, origin_id) tuples; returns the final list.
+    A dataset outside the config (ds None) keeps its labels as-is."""
+    if ds is None:
+        return labels
+    labels = labels or []
     schemes = ds.scheme_ids
     latest = {s: _latest(labels, s) for s in schemes}
     has_checked = any(l is not None and l[3] for l in latest.values())
@@ -139,9 +178,9 @@ def _code_for(rng, scheme):
     return rng.choice(["code_x", "code_y", WS, WS])
 
 
-def _random_row(rng, i):
-    name = rng.choice(list(DATASETS))
-    ds = DATASETS[name]
+def _random_row(rng, i, datasets=DATASETS, p_checked=0.65):
+    name = rng.choice(list(datasets))
+    ds = datasets[name]
     text = rng.choice(["hello", "hello", "hello", "", None])
     labels = []
     for _ in range(rng.randint(0, 4)):
@@ -149,7 +188,7 @@ def _random_row(rng, i):
                                              "other_scheme"])
         code = ("s01e02" if scheme == WS_CORRECT_DATASET_SCHEME
                 else _code_for(rng, scheme))
-        labels.append((scheme, code, T1, rng.random() < 0.65, "coda"))
+        labels.append((scheme, code, T1, rng.random() < p_checked, "coda"))
     return _row(i, name, text, labels)
 
 
@@ -222,3 +261,72 @@ def test_imputation_chain_matches_sequential_model(spark):
     # the seed + edge block exercise every branch and every bucket
     assert all(v > 5 for v in hits.values()), hits
     assert buckets_hit == {c for _, _, c in AGE_BUCKETS}, buckets_hit
+
+
+def _mixed_rows(start):
+    """Deterministic block for MIXED_CONFIG: age and location Normal
+    codes on one message (alone, together, against a WS-scheme label),
+    NULL and empty labels, and a dataset outside the config."""
+    loc = ("location_scheme", "code_5", T1, True, "coda")
+    age = ("age_scheme", "age_40", T1, True, "coda")
+    ws = (WS_CORRECT_DATASET_SCHEME, "s01e02", T1, True, "coda")
+    theme = ("s01e01_theme_scheme", "code_x", T1, True, "coda")
+    shapes = [
+        ("profile", "hi", [loc, age]),
+        ("profile", "hi", [age, loc]),
+        ("profile", "hi", [loc]),
+        ("profile", "hi", [age]),
+        ("profile", "hi",
+         [loc, ("location_scheme", "code_1", T1, False, "coda"), age]),
+        ("profile", "hi", [loc, age, ws]),
+        ("profile", "", [loc, age]),
+        ("profile", "hi", None),
+        ("profile", "hi", []),
+        ("profile", None, None),
+        ("s01e01", "hi", None),
+        ("s01e01", "hi", []),
+        ("s01e01", "hi", [theme]),
+        ("unconfigured", "hi", None),
+        ("unconfigured", "hi", []),
+        ("unconfigured", "hi", [loc, age]),
+    ]
+    return [_row(start + k, name, text, labels)
+            for k, (name, text, labels) in enumerate(shapes)]
+
+
+def test_interleaved_m4_m5_and_empty_labels_match_model(spark):
+    rng = random.Random(20261017)
+    rows = [_random_row(rng, i, MIXED_DATASETS, p_checked=0.9)
+            for i in range(300)]
+    rows += _mixed_rows(300)
+    df = spark.createDataFrame(rows, MESSAGE_SCHEMA)
+    got = {r.message_id: r for r in
+           impute_message_grain(df, MIXED_CONFIG).collect()}
+    assert len(got) == len(rows)
+
+    both = 0
+    for row in rows:
+        mid, dataset, text, labels = row[0], row[7], row[2], row[9]
+        want = _model(MIXED_DATASETS.get(dataset), text, labels)
+        out = got[mid]
+        got_labels = (None if out.labels is None else
+                      [(l.scheme_id, l.code_id, l.date_time_utc,
+                        l.checked, l.origin_id) for l in out.labels])
+        assert got_labels == want, (mid, dataset, text, labels,
+                                    got_labels, want)
+        rules = [l[4] for l in want or []]
+        if ("imputation:m4_age_category" in rules
+                and "imputation:m5_location" in rules):
+            both += 1
+    assert both >= 3, both  # m300, m301, m304 at least
+
+    # the pinned order: both M5 levels (last configured first), then
+    # the age category, then the untouched source labels
+    first = got["m300"].labels
+    assert [(l.scheme_id, l.code_id) for l in first[:3]] == [
+        ("location_region_scheme", "region_1"),
+        ("location_county_scheme", "county_2"),
+        ("age_category_scheme", "age_36_to_54")]
+    # NULL / empty labels on a configured dataset become NR per scheme
+    assert {l.code_id for l in got["m307"].labels} == {NOT_REVIEWED}
+    assert got["m313"].labels is None
