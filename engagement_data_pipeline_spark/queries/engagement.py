@@ -35,12 +35,13 @@ CONFIG = SYNTHETIC_CONFIG
 # every query that builds on them: constructing the synthetic-messages
 # projection alone costs ~3s of driver-side py4j calls, and ~8 registry
 # queries start from it. Two entries also hold DATA: `_messages` and
-# the "run" entry (the imputed grain and both column views, which
-# `generate_analysis_files` localCheckpoints). Checkpoint blocks cannot
-# be released with unpersist/clearCache; they are held until the memo
-# entry's frames are dropped, so a long session over many sf_dirs
-# accumulates them. They also do not survive executor loss — a
-# production deployment uses `generate_analysis_files(stage_dir=...)`.
+# the "run" entry (the imputed grain, both column views and the
+# A-series tables, which `generate_analysis_files` localCheckpoints).
+# Checkpoint blocks cannot be released with unpersist/clearCache; they
+# are held until the memo entry's frames are dropped, so a long
+# session over many sf_dirs accumulates them. They also do not survive
+# executor loss — a production deployment uses
+# `generate_analysis_files(stage_dir=...)`.
 #
 # Keyed on applicationId, not id(spark): a stopped session's id() can
 # be reused by a new SparkSession, which would hand out DataFrames

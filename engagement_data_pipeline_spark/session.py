@@ -97,8 +97,9 @@ def apply_runtime_conf(spark: SparkSession, shuffle_partitions: int | None = Non
 #: (bloom_state_merge ran 36% slower byte-identical).
 #:
 #: Deliberate CROSS-query materializations are never registered here.
-#: The engagement spine (`generate_analysis_files`' imputed grain and
-#: column views, memoized once per session by queries/engagement.py)
+#: The engagement spine (`generate_analysis_files`' imputed grain,
+#: column views and A-series tables, memoized once per session by
+#: queries/engagement.py)
 #: and the jaccard pairs memo are localCheckpoints: they do not survive
 #: executor loss (`stage_dir` is the durable mode) and cannot be
 #: unpersisted — their blocks are held until the memoized frames are

@@ -447,18 +447,46 @@ def test_corrupt_trailing_manifest_overwritten(spark, tmp_path):
 
 # --- round-7 hardening: single-winner expiry, writer-unique vdirs ---------
 
+class _Clock:
+    """Stands in for `ingest.time`: `time()` returns `now`, which the
+    test sets; every other attribute is the real `time` module. Claim
+    staleness compares `time()` with the claim file's real mtime, so
+    a frozen clock keeps every claim made during the test fresh
+    however the scheduler delays a thread."""
+
+    def __init__(self, now: float):
+        self.now = now
+
+    def time(self) -> float:
+        return self.now
+
+    def __getattr__(self, name):
+        return getattr(time, name)
+
+
+def _dead_claim(tmp_path, monkeypatch) -> tuple[str, _Clock]:
+    """A claim left by a crashed writer an hour ago, a 5 s lease, and
+    a clock the test controls."""
+    claim_path = str(tmp_path / "00000007.claim")
+    with open(claim_path, "w") as f:
+        f.write("dead-writer")
+    clock = _Clock(time.time())
+    old = clock.now - 3600
+    os.utime(claim_path, (old, old))
+    monkeypatch.setattr(ing, "CLAIM_STALE_S", 5.0)
+    monkeypatch.setattr(ing, "time", clock)
+    return claim_path, clock
+
+
 def test_concurrent_usurpers_single_winner(spark, tmp_path, monkeypatch):
     """Two (here: eight) concurrent usurpers of ONE stale claim — the
     delete-then-create TOCTOU from the r6 review: B's delete could
     remove A's freshly created claim, leaving both holding the same
     commit number. Tombstone-rename expiry admits exactly one winner,
-    and the surviving claim file records that winner's id."""
-    claim_path = str(tmp_path / "00000007.claim")
-    with open(claim_path, "w") as f:
-        f.write("dead-writer")
-    old = time.time() - 3600
-    os.utime(claim_path, (old, old))
-    monkeypatch.setattr(ing, "CLAIM_STALE_S", 5.0)
+    and the surviving claim file records that winner's id. The clock
+    stands still, so no thread, however late, outlives the lease of
+    the winner's claim (see the test below for one that does)."""
+    claim_path, _clock = _dead_claim(tmp_path, monkeypatch)
 
     winners = []
     lock = threading.Lock()
@@ -474,6 +502,29 @@ def test_concurrent_usurpers_single_winner(spark, tmp_path, monkeypatch):
     with open(claim_path) as f:
         assert f.read().strip() == winners[0].writer_id
     # no tombstone debris left behind by the losers
+    assert [n for n in os.listdir(tmp_path) if ".tomb-" in n] == []
+
+
+def test_usurper_past_the_lease_expires_the_winner(spark, tmp_path,
+                                                   monkeypatch):
+    """Why the test above controls the clock: a usurper that runs more
+    than CLAIM_STALE_S after the winner claimed sees the winner's
+    claim as stale and expires it, by design. Under real time and a
+    loaded host, a late thread of the 8-thread race did exactly that,
+    so the race saw 2 winners. The expired winner is not a second
+    holder: it aborts at `verify()` before publishing."""
+    claim_path, clock = _dead_claim(tmp_path, monkeypatch)
+
+    winner = ing.try_claim(spark, claim_path)
+    assert winner is not None
+    clock.now += ing.CLAIM_STALE_S + 1
+    late = ing.try_claim(spark, claim_path)
+    assert late is not None and late.writer_id != winner.writer_id
+    with open(claim_path) as f:
+        assert f.read().strip() == late.writer_id
+    with pytest.raises(ing.ConcurrentCommitError):
+        winner.verify()
+    late.verify()
     assert [n for n in os.listdir(tmp_path) if ".tomb-" in n] == []
 
 

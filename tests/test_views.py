@@ -109,31 +109,134 @@ def test_messages_view_one_row_per_rqa_message(spark):
     assert out["m1"].theme_codes == "t1"
 
 
+SF = "/root/testdata/sf0.001"
+
+
+def _csv_rows(df):
+    """Rows as a CSV round trip can keep them: Spark's CSV reader
+    returns null for the empty string the writer quotes."""
+    return sorted(str(tuple("" if v is None else v for v in r))
+                  for r in df.collect())
+
+
 def test_generate_analysis_files_end_to_end(spark, tmp_path):
     """§3.1/§3.2: the one-call pipeline writes the reference's file
-    set and returns consistent frames, over the real sf0.001 data."""
+    set, and every file holds exactly the frame it names: K2 and K3
+    built from the returned views, K4 the imputed grain, each A-series
+    CSV its `run.analysis` table (order-insensitive). A schedule that
+    writes one frame to another's path fails here."""
     import os
 
+    from engagement_data_pipeline_spark.analysis.pipeline import (
+        _observed_scheme_codes,
+        generate_analysis_files,
+    )
+    from engagement_data_pipeline_spark.queries.engagement import CONFIG, _messages
+    from engagement_data_pipeline_spark.sinks.exports import (
+        analysis_matrix,
+        production_columns,
+    )
+
+    run = generate_analysis_files(
+        _messages(spark, SF), CONFIG, out_dir=str(tmp_path), single_file=True)
+    assert run.participants_view.count() > 0
+    assert run.analysis["engagement_counts"].count() > 0
+    csvs = {
+        "production": production_columns(run.messages_view, CONFIG),
+        "analysis_matrix": analysis_matrix(
+            run.participants_view, CONFIG,
+            _observed_scheme_codes(run.participants_view, CONFIG)),
+        **run.analysis,
+    }
+    assert set(os.listdir(tmp_path)) == {*csvs, "traced_messages"}
+    for name, df in csvs.items():
+        path = str(tmp_path / name)
+        # every csv dir has exactly one part file (single_file=True)
+        assert len([f for f in os.listdir(path)
+                    if f.startswith("part-")]) == 1, name
+        assert spark.read.option("header", True).csv(path).columns \
+            == df.columns, name
+        back = (spark.read.schema(df.schema).option("header", True)
+                .option("multiLine", True).csv(path))
+        assert _csv_rows(back) == _csv_rows(df), name
+    # K4: the JSON lines the writer emits for the imputed grain
+    lines = spark.read.text(str(tmp_path / "traced_messages"))
+    assert (sorted(r.value for r in lines.collect())
+            == sorted(run.imputed.toJSON().collect()))
+
+
+def test_generate_analysis_files_jobs_keep_the_callers_group(spark,
+                                                             tmp_path):
+    """Jobs the run launches from its background pool carry the
+    caller's job group (cancelling the group cancels the run), and
+    the run stays within its job budget: 35 jobs for a writing run
+    over fresh sf0.001 messages, the count before the pool existed."""
+    from engagement_data_pipeline_spark.analysis.pipeline import (
+        generate_analysis_files,
+    )
+    from engagement_data_pipeline_spark.queries._helpers import (
+        apply_runtime_conf,
+    )
+    from engagement_data_pipeline_spark.queries.engagement import CONFIG
+    from engagement_data_pipeline_spark.sources.synthetic import (
+        synthetic_messages,
+    )
+
+    apply_runtime_conf(spark)
+    msgs = synthetic_messages(spark, SF)
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    group = "generate-analysis-files-under-test"
+    sc.setJobGroup(group, "job-group inheritance test")
+    try:
+        before = jsc.dagScheduler().numTotalJobs()
+        generate_analysis_files(msgs, CONFIG, out_dir=str(tmp_path))
+        launched = set(range(before, jsc.dagScheduler().numTotalJobs()))
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc.listenerBus().waitUntilEmpty()
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert launched and launched <= in_group, sorted(launched - in_group)
+    assert len(launched) <= 35
+
+
+def test_generate_analysis_files_failure_is_loud(spark, tmp_path,
+                                                 monkeypatch):
+    """A table that fails while it materializes on the background
+    pool raises from `generate_analysis_files`, and no job of the run
+    is left running once it has, not even a slow sibling's."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from engagement_data_pipeline_spark.analysis import automated
     from engagement_data_pipeline_spark.analysis.pipeline import (
         generate_analysis_files,
     )
     from engagement_data_pipeline_spark.queries.engagement import CONFIG, _messages
 
-    run = generate_analysis_files(
-        _messages(spark, "/root/testdata/sf0.001"), CONFIG,
-        out_dir=str(tmp_path), single_file=True)
-    assert run.participants_view.count() > 0
-    assert run.analysis["engagement_counts"].count() > 0
-    expected = {"production", "analysis_matrix", "traced_messages",
-                "engagement_counts", "repeat_participations",
-                "theme_distributions", "demographic_distributions",
-                "sample_messages", "traffic_analysis",
-                "participation_map", "relevance_uuids"}
-    assert expected <= set(os.listdir(tmp_path))
-    # every csv dir has exactly one part file (single_file=True)
-    parts = [f for f in os.listdir(tmp_path / "engagement_counts")
-             if f.startswith("part-")]
-    assert len(parts) == 1
+    def broken(mv, config):
+        # fails in the shuffle-map stage, i.e. inside the pool's
+        # `_materialize`, not in the export on the calling thread
+        return mv.groupBy(F.when(
+            F.col("participant_uuid").isNotNull(),
+            F.raise_error(F.lit("engagement-counts-broke")))).count()
+
+    def slow(mv, config):
+        # a one-task shuffle-map stage still running when the error
+        # reaches the calling thread
+        return mv.sparkSession.range(1).select(F.reflect(
+            F.lit("java.lang.Thread"), F.lit("sleep"),
+            F.lit(8000).cast("long")).alias("slept")).groupBy(
+            "slept").count()
+
+    monkeypatch.setattr(automated, "engagement_counts", broken)
+    monkeypatch.setattr(automated, "relevance_uuids", slow)
+    with pytest.raises(Exception, match="engagement-counts-broke"):
+        generate_analysis_files(_messages(spark, SF), CONFIG,
+                                out_dir=str(tmp_path))
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
 
 
 def test_generate_analysis_files_with_stage_tables(spark, tmp_path):
@@ -148,7 +251,7 @@ def test_generate_analysis_files_with_stage_tables(spark, tmp_path):
     )
     from engagement_data_pipeline_spark.queries.engagement import CONFIG, _messages
 
-    msgs = _messages(spark, "/root/testdata/sf0.001")
+    msgs = _messages(spark, SF)
     spark.catalog.clearCache()  # earlier tests share this session
     staged = generate_analysis_files(msgs, CONFIG,
                                      stage_dir=str(tmp_path / "stage"))
@@ -179,7 +282,7 @@ def test_generate_analysis_files_dry_run(spark, tmp_path, capsys):
     )
     from engagement_data_pipeline_spark.queries.engagement import CONFIG, _messages
 
-    msgs = _messages(spark, "/root/testdata/sf0.001")
+    msgs = _messages(spark, SF)
     run = generate_analysis_files(msgs, CONFIG, out_dir=str(tmp_path / "out"),
                                   dry_run=True)
     assert not os.path.exists(tmp_path / "out")
