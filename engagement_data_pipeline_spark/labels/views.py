@@ -458,8 +458,8 @@ def refresh_views(spark, table_path: str, pview_path: str,
     `streaming.drain.fan_out`: co-maintained views sit at the same
     source watermark after every sync, so deriving
     `touched_group_slice` once and folding both views from it halves
-    the per-sync feed work (the diff, the pre-change snapshot join
-    and the touched-set checkpoint; the folds themselves are
+    the per-sync feed work (the feed diff with its pre-images and the
+    touched-set checkpoint; the folds themselves are
     view-specific and cannot be shared). When the watermarks DIVERGE
     (one view was built later, or a previous run died between the
     two refreshes), each view refreshes independently over its own

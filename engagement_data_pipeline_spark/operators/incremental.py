@@ -86,24 +86,6 @@ def truncate_incomplete_tie_group(batch: DataFrame, ts_col: str) -> DataFrame:
     return batch.where(F.col(ts_col) < F.lit(row["mx"]))
 
 
-def incremental_dataset_fetch(messages: DataFrame, cached: DataFrame,
-                              dataset: str, watermark,
-                              ws_watermark) -> DataFrame:
-    """S2+S3+F2 for one dataset: cached rows minus retractions, plus
-    the increment. Feed the result into fetch_messages (F1+F4)."""
-    d = F.col("dataset") == dataset
-    updated = messages.where(d & (F.col("last_updated") > F.lit(watermark)))
-    moved = messages.where(
-        F.array_contains(F.col("previous_datasets"), dataset)
-        & (F.col("last_updated") > F.lit(ws_watermark)))
-    # Rows whose current dataset is still this dataset are NOT
-    # retracted (reference get_messages_in_datasets.py:76-79).
-    moved_away = moved.where(F.col("dataset") != dataset)
-    kept_cache = retraction_anti_join(
-        cached.where(d), moved_away.select("message_id"), ["message_id"])
-    return kept_cache.unionByName(updated)
-
-
 def incremental_fetch(messages: DataFrame, cached: DataFrame,
                       datasets: Sequence[str], watermark,
                       ws_watermark) -> DataFrame:

@@ -81,14 +81,13 @@ def group_rows_slice(spark, table_path: str, keys: DataFrame,
     return rows.join(F.broadcast(keys), gcols, "left_semi")
 
 
-#: Caps of the DRIVER-SIDE touched-key fast path below. The rows cap
-#: bounds the narrow (op + group cols) dicts materialized in the
-#: driver (~100 B each → a few MB at the default); the bytes cap
-#: bounds the window's on-disk input (both versions of every changed
-#: bucket) the single-threaded driver may read and diff — past it the
-#: distributed Python-datasource read takes over. Tune for clusters
-#: via the env vars; the defaults keep a bench/day-run-sized window
-#: zero-job while any corpus-scale backlog goes distributed.
+#: Row cap of the DRIVER-SIDE touched-key fast path below: it bounds
+#: the narrow (op + group cols) dicts materialized in the driver
+#: (~100 B each → a few MB at the default). The window's input bytes
+#: are capped by `cdf_source._DRIVER_WINDOW_BYTES`, the bound
+#: `table_changes` uses too. Tune for clusters via the env vars; the
+#: defaults keep a bench/day-run-sized window zero-job while any
+#: corpus-scale backlog goes distributed.
 def _env_int(name: str, default: int) -> int:
     import os
 
@@ -99,45 +98,6 @@ def _env_int(name: str, default: int) -> int:
 
 
 _TOUCHED_LOCAL_ROWS = _env_int("SPARK_GRAFT_TOUCHED_LOCAL_ROWS", 100_000)
-_TOUCHED_LOCAL_BYTES = _env_int("SPARK_GRAFT_TOUCHED_LOCAL_BYTES",
-                                64 << 20)
-
-
-def _window_bytes(table_path: str, from_commit: int,
-                  to_commit: int) -> int | None:
-    """Total LOCAL on-disk bytes the window's diff must read (both
-    versions of every changed bucket); None when the table is not
-    local (sizes unknown without RPCs) or a manifest is missing —
-    the caller then keeps the old conservative row cap."""
-    import os
-
-    from ..streaming.cdf_source import (_bucket_dir, _changed_buckets,
-                                        _manifest)
-    from ..streaming.ingest import _local_path
-
-    if _local_path(table_path) is None:
-        return None
-    man_to = _manifest(table_path, to_commit)
-    if man_to is None:
-        return None
-    man_from = (_manifest(table_path, from_commit)
-                if from_commit > 0 else None)
-    total = 0
-    for b in _changed_buckets(man_from, man_to):
-        for man in (man_from, man_to):
-            if man is None or b not in man["buckets"]:
-                continue
-            d = _bucket_dir(table_path, man, b)
-            lp = _local_path(str(d)) if d is not None else None
-            if lp is None:
-                continue
-            try:
-                with os.scandir(lp) as it:
-                    total += sum(e.stat().st_size
-                                 for e in it if e.is_file())
-            except OSError:
-                pass
-    return total
 
 
 def touched_group_slice(spark, table_path: str, from_commit: int,
@@ -147,17 +107,16 @@ def touched_group_slice(spark, table_path: str, from_commit: int,
     `from_commit` — the shared machinery of every non-invertible
     incremental recompute (top-k re-rank, K6 writeback, the G1/G2
     column-view re-fold): touched group keys come from the feed's new
-    payloads plus the pre-change snapshot of updated/deleted keys
-    (O(changed buckets)); when the table is clustered on a subset of
-    `group_cols` (creation-time `bucket_cols`, stable only if those
-    columns never change for a row) the state read is sliced to the
-    touched groups' buckets, otherwise one scan + semi-join (still
+    payloads plus the `__old` pre-images of updated/deleted rows (one
+    feed read, O(changed buckets)); when the table is clustered on a
+    subset of `group_cols` (creation-time `bucket_cols`, stable only if
+    those columns never change for a row) the state read is sliced to
+    the touched groups' buckets, otherwise one scan + semi-join (still
     shuffling only touched rows). Returns None when the table has no
     commits past `from_commit`."""
     from pyspark.sql import functions as F
 
-    from ..streaming.cdf_source import MergeTableChangesDataSource
-    from ..streaming.ingest import read_table_manifest
+    from ..streaming.ingest import read_table_manifest, table_changes
 
     gcols = list(group_cols)
     man = read_table_manifest(spark, table_path)
@@ -180,16 +139,15 @@ def touched_group_slice(spark, table_path: str, from_commit: int,
     # may read/diff (both env-tunable for clusters). Semantics
     # identical to the distributed read below (A/B pinned in tests);
     # windows past either cap fall through.
-    from ..streaming.cdf_source import read_changes_local
-
+    from ..streaming import cdf_source as _cdf
     from ..streaming.local_merge import SMALL_BATCH_ROWS
 
-    wb = _window_bytes(table_path, from_commit, current)
+    wb = _cdf._window_bytes(table_path, from_commit, current)
     cap = (_TOUCHED_LOCAL_ROWS
-           if wb is not None and wb <= _TOUCHED_LOCAL_BYTES
+           if wb is not None and wb <= _cdf._DRIVER_WINDOW_BYTES
            else SMALL_BATCH_ROWS)
-    lc = read_changes_local(table_path, from_commit, current,
-                            max_rows=cap, ship=gcols)
+    lc = _cdf.read_changes_local(table_path, from_commit, current,
+                                 max_rows=cap, ship=gcols)
     if lc is not None and any("<" in lc.col_ddl.get(g, "<")
                               for g in gcols):
         # A non-scalar group column (array/map/struct DDL) would be
@@ -219,18 +177,13 @@ def touched_group_slice(spark, table_path: str, from_commit: int,
     # pre-change snapshot read, no semi-join. Origin columns have no
     # __old twin (keys are immutable), so a group column that is also
     # a key reads as itself on the old side.
-    spark.dataSource.register(MergeTableChangesDataSource)
     # `ship` narrows the Python→JVM boundary to op + group columns
     # (+ their __old twins): the diff still compares every payload
     # column (emission semantics unchanged — a row changing only in
     # a non-group column still marks its group touched), but a wide
     # table's payloads never cross per changed row (guide §4).
-    ch = (spark.read.format("merge_table_changes")
-          .option("path", table_path)
-          .option("fromCommit", str(from_commit))
-          .option("toCommit", str(current))
-          .option("ship", ",".join(gcols))
-          .option("includeOld", "true").load())
+    ch = table_changes(spark, table_path, from_commit, current,
+                       include_old=True, ship=gcols)
     new_side = (ch.where(F.col("op").isin("insert", "update"))
                 .select(*gcols))
     old_side = (ch.where(F.col("op").isin("update", "delete"))
@@ -256,9 +209,9 @@ def top_k_incremental(spark, table_path: str, from_commit: int,
     sync. A deletion or recode can promote the (k+1)-th row, so the
     top-k is not retract-maintainable flat; the incremental answer is
     the k6 trick: touched groups from the feed's new payloads plus
-    the pre-change snapshot of updated/deleted keys (O(changed
-    buckets)), then an EXACT re-rank of just those groups. When the
-    table is clustered on a subset of `group_cols` (creation-time
+    the pre-images of updated/deleted rows (`touched_group_slice`,
+    O(changed buckets)), then an EXACT re-rank of just those groups.
+    When the table is clustered on a subset of `group_cols` (creation-time
     `bucket_cols` — stable only if those columns never change for a
     row), the re-rank reads ONLY the touched groups' buckets: a sync
     is O(touched groups' buckets + changed rows), never a table scan.

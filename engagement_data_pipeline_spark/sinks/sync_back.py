@@ -64,59 +64,32 @@ def contact_fields_incremental(spark, table_path: str, from_commit: int,
     only for participants whose messages changed since `from_commit`
     — the reference refetches and re-renders EVERY contact on every
     sync run (engagement_db_to_rapid_pro.py:62-135), which at 100 TB
-    is a full pass per sync. Touched participants come from the feed's
-    new payloads plus the pre-change snapshot of updated/deleted keys
-    (O(changed buckets), the refresh_mv trick); their fields are then
-    recomputed exactly. When the messages table is CLUSTERED on
-    participant_uuid (created with bucket_cols=["participant_uuid"] —
-    a message's participant never changes, so the partial-key
-    bucketing is stable), the recompute reads ONLY the touched
-    participants' buckets: a sync run is O(touched participants'
-    buckets + changed rows), never a table scan. Otherwise it falls
-    back to one scan + semi-join (still only shuffling touched rows).
+    is a full pass per sync. The touched participants and their live
+    messages are `topk.touched_group_slice` over participant_uuid:
+    new payloads plus the feed's `__old` pre-images of updated and
+    deleted messages, then their fields are recomputed exactly. When
+    the messages table is CLUSTERED on participant_uuid (created with
+    bucket_cols=["participant_uuid"] — a message's participant never
+    changes, so the partial-key bucketing is stable), the recompute
+    reads ONLY the touched participants' buckets: a sync run is
+    O(touched participants' buckets + changed rows), never a table
+    scan. Otherwise one scan + semi-join (still only shuffling
+    touched rows).
 
     Returns the same shape as `contact_fields`, restricted to touched
     participants; a participant whose every message was deleted drops
     out (the reference leaves the contact's old field values in
     place)."""
-    from ..streaming.ingest import (_bucket_on, _read_resolved,
-                                    origin_bucket, read_changed_at,
-                                    read_merged_table,
-                                    read_table_manifest, table_changes)
+    from ..operators.topk import touched_group_slice
+    from ..streaming.ingest import read_merged_table
 
-    man = read_table_manifest(spark, table_path)
-    if man is None:
-        raise ValueError(f"{table_path} has no commits")
-    current = int(man["commit"])
-    empty = contact_fields(
-        read_merged_table(spark, table_path).limit(0), datasets,
-        show_presence)
-    if current <= from_commit:
-        return empty
-    origin = list(man["origin"])
-    ch = table_changes(spark, table_path, from_commit, current)
-    new_side = (ch.where(F.col("participant_uuid").isNotNull())
-                .select("participant_uuid"))
-    old_side = (ch.where(F.col("op").isin("update", "delete"))
-                .select(*origin)
-                .join(read_changed_at(spark, table_path, from_commit,
-                                      current), origin)
-                .select("participant_uuid"))
-    touched = new_side.unionByName(old_side).distinct()
-    bk = _bucket_on(man)
-    if bk == ["participant_uuid"]:
-        nb = int(man["n_buckets"])
-        # O(n_buckets) collect of bucket ids, never participant keys
-        hit = sorted({int(r[0]) for r in
-                      touched.select(origin_bucket(bk, nb).alias("b"))
-                      .distinct().collect()} & set(man["buckets"]))
-        rows = (_read_resolved(spark, table_path, man, only=hit)
-                if hit else
-                read_merged_table(spark, table_path).limit(0))
-    else:
-        rows = read_merged_table(spark, table_path)
-    live = rows.join(touched, "participant_uuid", "left_semi")
-    return contact_fields(live, datasets, show_presence)
+    sliced = touched_group_slice(spark, table_path, from_commit,
+                                 ["participant_uuid"])
+    if sliced is None:
+        return contact_fields(
+            read_merged_table(spark, table_path).limit(0), datasets,
+            show_presence)
+    return contact_fields(sliced[0], datasets, show_presence)
 
 
 def advert_sync_batch(advert_uuids: DataFrame, synced_cache: DataFrame,

@@ -10,9 +10,11 @@ Offsets are commit ids from the table's own log, so the stream is
 exactly the commit history: each micro-batch carries the row-level
 changes (op = insert/update/delete + the new payload, NULL for
 deletes) between two commits — deletion-vector commits included,
-since a bucket's logical content is (version, dv). Downstream
-consumers (MV refresh, index maintenance, sync-out) can therefore
-subscribe to a table instead of polling `table_changes`.
+since a bucket's logical content is (version, dv). The same source
+answers batch reads of one commit window (`spark.read`, options
+`fromCommit` / `toCommit`): `ingest.table_changes` is that read, so
+the pull consumers (MV refresh, index maintenance, sync-back, top-k,
+transform refresh) and the stream subscribers share one diff kernel.
 
 Scale shape: `partitions()` emits ONE partition per changed bucket
 (manifest diff only — no data touched on the driver), and each
@@ -63,6 +65,7 @@ The reference's analog is its Firestore incremental fetch loop
 from __future__ import annotations
 
 import json
+import os
 import posixpath
 from collections.abc import Iterator, Sequence
 
@@ -669,6 +672,58 @@ class _ChangesReader(DataSourceStreamReader):
 #: diff into 1-2 tasks and REGRESSED the incremental views ~25%.
 _FEED_PARTITION_BYTES = 1 << 20
 
+#: LOCAL input bytes of a window (both versions of every changed
+#: bucket, `_window_bytes`) up to which it is diffed on the DRIVER:
+#: `ingest.table_changes` runs the batch reader in-process
+#: (`read_window_in_process`) and `topk.touched_group_slice` reads
+#: `read_changes_local`. Past it the Python DataSource read takes
+#: over; its planner and worker processes cost ~5 s in a fresh
+#: session, which only a window this large repays. Override via
+#: SPARK_GRAFT_TOUCHED_LOCAL_BYTES for clusters.
+_DRIVER_WINDOW_BYTES = int(os.environ.get(
+    "SPARK_GRAFT_TOUCHED_LOCAL_BYTES", 64 << 20))
+
+
+def _bucket_bytes(table_path: str, man_from: dict | None, man_to: dict,
+                  bucket: int) -> int:
+    """LOCAL on-disk bytes of both versions of one changed bucket —
+    what the diff of that bucket reads. Directories that are not
+    local or not readable count 0 (sizes unknown without RPCs)."""
+    from .ingest import _local_path
+
+    n = 0
+    for man in (man_from, man_to):
+        if man is None or bucket not in man["buckets"]:
+            continue
+        d = _bucket_dir(table_path, man, bucket)
+        lp = _local_path(str(d)) if d is not None else None
+        if lp is None:
+            continue
+        try:
+            with os.scandir(lp) as it:
+                n += sum(e.stat().st_size for e in it if e.is_file())
+        except OSError:
+            pass
+    return n
+
+
+def _window_bytes(table_path: str, from_commit: int,
+                  to_commit: int) -> int | None:
+    """Total LOCAL on-disk bytes a window's diff reads (`_bucket_bytes`
+    of every changed bucket); None when the table is not local or a
+    manifest is missing — callers then keep their conservative cap."""
+    from .ingest import _local_path
+
+    if _local_path(table_path) is None:
+        return None
+    man_to = _manifest(table_path, to_commit)
+    if man_to is None:
+        return None
+    man_from = (_manifest(table_path, from_commit)
+                if from_commit > 0 else None)
+    return sum(_bucket_bytes(table_path, man_from, man_to, b)
+               for b in _changed_buckets(man_from, man_to))
+
 
 def _pack_changed_buckets(table_path: str, man_from: dict | None,
                           man_to: dict, buckets: list[int]) -> list:
@@ -681,38 +736,17 @@ def _pack_changed_buckets(table_path: str, man_from: dict | None,
     RPCs) keep one bucket per partition, today's behavior; a single
     bucket larger than the target still gets its own partition, so
     big-bucket parallelism at scale is unchanged."""
-    import os
-
     from .ingest import _local_path
 
     if _local_path(table_path) is None:
         return list(buckets)
     target = int(os.environ.get("SPARK_GRAFT_FEED_PARTITION_BYTES",
                                 _FEED_PARTITION_BYTES))
-
-    def _bucket_bytes(b: int) -> int:
-        n = 0
-        for man in (man_from, man_to):
-            if man is None or b not in man["buckets"]:
-                continue
-            d = _bucket_dir(table_path, man, b)
-            if d is None:
-                continue
-            lp = _local_path(str(d))
-            if lp is None:
-                continue
-            try:
-                with os.scandir(lp) as it:
-                    n += sum(e.stat().st_size for e in it if e.is_file())
-            except OSError:
-                pass
-        return n
-
     groups: list[list[int]] = []
     cur: list[int] = []
     cur_bytes = 0
     for b in buckets:
-        sz = _bucket_bytes(b)
+        sz = _bucket_bytes(table_path, man_from, man_to, b)
         if cur and cur_bytes + sz > target:
             groups.append(cur)
             cur, cur_bytes = [], 0
@@ -899,7 +933,7 @@ def read_changes_local(table_path: str, from_commit: int,
             f"includeOld clashes with payload column(s) {clash}")
     # arrow types come from the table's own data files (the kernel
     # only needs internally-consistent types to build its arrays)
-    fields = dict(_data_file_fields(table_path, man_to))
+    fields = dict(ds._table_fields()[1])
     # `ship` = OUTPUT projection (same contract as the batch reader's
     # option): the diff still compares every payload column, but only
     # the listed ones materialize as Python dicts — the touched-key
@@ -974,40 +1008,60 @@ def _all_nullable(t):
 
 
 def _data_file_fields(table_path: str, man: dict) -> list[tuple]:
-    """(name, arrow type) of the table's data columns, read from the
-    first available data file — the pyarrow twin of
-    `MergeTableChangesDataSource._columns_and_types`'s discovery.
-    Types are nullability-normalized (`_all_nullable`) so buckets
-    written by a stricter writer still cast cleanly."""
+    """(name, arrow type) of the table's data columns: the union, in
+    first-seen bucket order, of ONE footer per distinct version
+    directory the manifest references. A version directory is written
+    by one commit, so its files share a schema; a schema-evolving
+    merge rewrites only the buckets it hits, so a column it adds can
+    be missing from the lowest bucket's files. Types are
+    nullability-normalized (`_all_nullable`) so buckets written by a
+    stricter writer still cast cleanly. Two versions that give one
+    column different Spark types raise: the feed has one schema, and
+    every writer keeps the table's column types."""
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
-    for b in sorted(man["buckets"]):
-        d = _bucket_dir(table_path, man, b)
-        if d is None:
+    fields: dict[str, object] = {}
+    seen: set[int] = set()
+    for b, ver in sorted(man["buckets"].items()):
+        if ver in seen:
             continue
+        d = _bucket_dir(table_path, man, b)
         fs, dp = _fs_path(d)
         if not _is_dir(fs, dp):
             continue
         files = sorted(i.path for i in
                        fs.get_file_info(pafs.FileSelector(dp))
                        if i.path.endswith(".parquet"))
-        if files:
-            with fs.open_input_file(files[0]) as f:
-                return [(f2.name, _all_nullable(f2.type))
-                        for f2 in pq.read_schema(f)]
-    raise ValueError(f"{table_path} has no data files")
+        if not files:
+            continue
+        seen.add(ver)
+        with fs.open_input_file(files[0]) as f:
+            for fld in pq.read_schema(f):
+                t = _all_nullable(fld.type)
+                prev = fields.setdefault(fld.name, t)
+                if prev is not t and _ddl_of(prev) != _ddl_of(t):
+                    raise ValueError(
+                        f"{table_path}: column {fld.name!r} is "
+                        f"{_ddl_of(prev)} in one version and "
+                        f"{_ddl_of(t)} in version {ver}")
+    if not fields:
+        raise ValueError(f"{table_path} has no data files")
+    return list(fields.items())
 
 
 class _ChangesBatchReader(DataSourceReader):
     """BATCH twin of `_ChangesReader`: the row-level changes between
-    two explicit commits as a plain `spark.read` — one partition per
-    changed bucket, the same executor-side Arrow diff kernel, zero
-    stream/checkpoint machinery. `drain.drain_changes_direct` uses it
-    to run the per-commit retract feed through foreachBatch-shaped
-    sinks when the pending delta is small and bounded — the composed
-    day run's fixed cost becomes a few manifest reads instead of two
-    checkpointed Structured-Streaming queries."""
+    two explicit commits as a plain `spark.read` — the same Arrow
+    diff kernel, zero stream/checkpoint machinery. This is the reader
+    behind `ingest.table_changes`, the one batch entry point every
+    pull consumer uses (MV, secondary and ANN refresh, the direct
+    drain, transform refresh, the touched-group slice): on Python
+    workers past `_DRIVER_WINDOW_BYTES`, in the driver process below
+    it (`read_window_in_process`). Partitions cover ONLY the changed buckets,
+    packed to `_FEED_PARTITION_BYTES` of local input each, so a read
+    costs O(changed buckets); a window whose directories were
+    vacuumed fails loudly (`_open_dir`)."""
 
     def __init__(self, table_path: str, from_commit: int,
                  to_commit: int, columns: list[str], pa_schema,
@@ -1078,6 +1132,27 @@ def _ddl_of(t) -> str:
     return s
 
 
+def read_window_in_process(spark, options: dict):
+    """The batch read of one change window run on the DRIVER: the
+    same `MergeTableChangesDataSource` reader — schema, partitions,
+    per-bucket Arrow diff — executed in this process, its batches
+    handed to Spark as one Arrow table. A bounded window then costs
+    its pyarrow reads plus one Arrow transfer to the JVM, and no
+    Python DataSource planner or worker process starts. `options` are
+    the batch read's options (`path`, `fromCommit`, `toCommit`,
+    `includeOld`, `select`, `ship`). An unreadable manifest or a
+    vacuumed window raises here, at call time."""
+    import pyarrow as pa
+    from pyspark.sql.types import _parse_datatype_string
+
+    ds = MergeTableChangesDataSource(options=options)
+    schema = _parse_datatype_string(ds.schema())
+    reader = ds.reader(schema)
+    batches = [rb for p in reader.partitions() for rb in reader.read(p)]
+    return spark.createDataFrame(
+        pa.Table.from_batches(batches, schema=reader.pa_schema), schema)
+
+
 class MergeTableChangesDataSource(DataSource):
     """`format("merge_table_changes")` — stream a versioned merge
     table's row-level changes. Options: `path` (table root, required);
@@ -1117,34 +1192,24 @@ class MergeTableChangesDataSource(DataSource):
             raise ValueError("option 'path' (table root) is required")
         return path
 
-    def _columns_and_types(self) -> list[tuple[str, str]]:
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
+    def _table_fields(self) -> tuple[list[str], list[tuple]]:
+        """(origin columns, `_data_file_fields`) of the table's latest
+        commit — the one schema source of the feed, memoized on the
+        instance so schema and reader planning read the footers once."""
+        memo = getattr(self, "_fields_memo", None)
+        if memo is None:
+            path = self._table_path()
+            latest = _latest_commit(path)
+            if latest is None:
+                raise ValueError(f"{path} has no commits")
+            man = _manifest(path, latest)
+            memo = (list(man["origin"]), _data_file_fields(path, man))
+            self._fields_memo = memo
+        return memo
 
-        path = self._table_path()
-        latest = _latest_commit(path)
-        if latest is None:
-            raise ValueError(f"{path} has no commits")
-        man = _manifest(path, latest)
-        origin = list(man["origin"])
-        schema = None
-        for b in sorted(man["buckets"]):
-            d = _bucket_dir(path, man, b)
-            if d is None:
-                continue
-            fs, dp = _fs_path(d)
-            if not _is_dir(fs, dp):
-                continue
-            files = sorted(i.path for i in
-                           fs.get_file_info(pafs.FileSelector(dp))
-                           if i.path.endswith(".parquet"))
-            if files:
-                with fs.open_input_file(files[0]) as f:
-                    schema = pq.read_schema(f)
-                break
-        if schema is None:
-            raise ValueError(f"{path} has no data files")
-        fields = [(f.name, _ddl_of(f.type)) for f in schema]
+    def _columns_and_types(self) -> list[tuple[str, str]]:
+        origin, arrow_fields = self._table_fields()
+        fields = [(n, _ddl_of(t)) for n, t in arrow_fields]
         by_name = dict(fields)
         sel = self.options.get("select")
         if sel is not None:
@@ -1264,11 +1329,7 @@ class MergeTableChangesDataSource(DataSource):
             # seed from the data files (nullability-normalized, the
             # read_changes_local idiom) and override every output
             # column with the Spark-expected Arrow type.
-            man_to = _manifest(path, int(to))
-            if man_to is None:
-                raise ValueError(
-                    f"manifest {to} of {path} is unreadable")
-            pa_types = dict(_data_file_fields(path, man_to))
+            pa_types = dict(self._table_fields()[1])
             for f in pa_schema:
                 base = f.name[:-len(_OLD)] if f.name.endswith(_OLD) else None
                 if base is not None and base in pa_types:

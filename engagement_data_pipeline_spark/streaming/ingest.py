@@ -1179,96 +1179,78 @@ def _manifest_at(spark: SparkSession, table_path: str, commit: int) -> dict:
     return man
 
 
-def _changed_buckets(man_from: dict, man_to: dict) -> list[int]:
-    """Buckets whose logical content differs between two manifests. A
-    bucket's content is (data version, deletion vector): a merge-on-
-    read delete changes the dv WITHOUT advancing the version, and
-    must still count as changed."""
-    old_b, new_b = man_from["buckets"], man_to["buckets"]
-    old_dv, new_dv = _dv(man_from), _dv(man_to)
-    return sorted(b for b in set(old_b) | set(new_b)
-                  if (old_b.get(b), old_dv.get(b))
-                  != (new_b.get(b), new_dv.get(b)))
-
-
-def read_changed_at(spark: SparkSession, table_path: str,
-                    from_commit: int,
-                    to_commit: int | None = None) -> DataFrame:
-    """The FROM-commit snapshot restricted to the buckets that changed
-    between the two commits — the old-payload source for feed
-    consumers that must SUBTRACT or un-index what a change replaced
-    (MV refresh, secondary-index refresh). Every key the feed reports
-    lived in a changed bucket, so this read covers them all at
-    O(changed buckets); joining against the full `read_table_at`
-    snapshot instead would silently rescan the whole table on every
-    refresh."""
-    man_from = _manifest_at(spark, table_path, from_commit)
-    man_to = (_manifest_at(spark, table_path, to_commit)
-              if to_commit is not None
-              else read_table_manifest(spark, table_path))
-    if man_to is None:
-        raise ValueError(f"{table_path} has no commits")
-    changed = [b for b in _changed_buckets(man_from, man_to)
-               if b in man_from["buckets"]]
-    if not changed:
-        return read_merged_table(spark, table_path).limit(0)
-    return _read_resolved(spark, table_path, man_from, only=changed)
-
-
 def table_changes(spark: SparkSession, table_path: str, from_commit: int,
-                  to_commit: int | None = None) -> DataFrame:
+                  to_commit: int | None = None, *,
+                  include_old: bool = False,
+                  select: Sequence[str] | None = None,
+                  ship: Sequence[str] | None = None) -> DataFrame:
     """Row-level changes between two commits of a versioned merge
     table — the Delta/Iceberg change-data-feed analog, derived purely
     from the commit log plus the immutable version directories (the
     reference reads its incremental feed per-message from Firestore
     timestamps, SURVEY §2.1 S2; here the table's own history is the
-    feed).
+    feed). This is the ONE batch entry point to the feed: the batch
+    read of `format("merge_table_changes")` over the window
+    (`from_commit`, `to_commit`], `to_commit` defaulting to the head.
 
-    Returns the `snapshot_diff` changeset (key cols + op +
-    changed_cols) joined back to the NEW snapshot's payload columns
-    (null payload for deletes). Cost is O(changed buckets), never
-    O(table): only buckets whose version advanced between the two
-    manifests are read, on both sides. Version directories are
-    immutable, so a bucket with an unchanged version is byte-identical
-    and cannot contain a change; a compaction/rebucket commit rewrites
-    buckets without changing logical rows and yields an EMPTY
-    changeset (keyed diff, not file diff). Requires the `from`
-    commit's referenced versions to still exist — `vacuum_table`
-    trades old-commit readability for space exactly like Delta's
+    Columns: origin keys, `op`, `changed_cols`, then the payload (NULL
+    for deletes). `include_old=True` adds a `<col>__old` pre-image per
+    payload column (NULL for inserts) — consumers that must SUBTRACT
+    or un-index what a change replaced read it there; origin columns
+    have no `__old` twin (keys are immutable). `select` projects the
+    feed itself (a row changing only outside the selection does not
+    emit); `ship` narrows only the output, the diff still spans every
+    payload column (`cdf_source.MergeTableChangesDataSource`).
+
+    Cost is O(changed buckets), never O(table): the manifests name the
+    buckets whose (version, deletion vector) moved, and only those are
+    read and diffed in Arrow. Where the diff runs depends on the
+    window's local input (`cdf_source._window_bytes`): up to
+    `cdf_source._DRIVER_WINDOW_BYTES` the reader runs in this process
+    (`cdf_source.read_window_in_process`), past it — or for a table
+    that is not on a local path — on Python workers, packed into
+    partitions of `cdf_source._FEED_PARTITION_BYTES` each. Both run the
+    same reader object, so the rows are the same. A compaction/rebucket
+    commit rewrites buckets without changing logical rows and yields
+    an EMPTY changeset (keyed diff, not file diff). `from_commit=0` is
+    the empty table before the first commit (the whole history
+    replays as inserts). A reversed window raises, and so does a
+    window from 0 over a clone: a clone has no history before its
+    clone commit (that belongs to the source table). The `from`
+    commit's manifest and referenced versions must still exist: a
+    window that `vacuum_table` reclaimed fails loudly, the way Delta's
     VACUUM breaks CDF past the retention horizon.
     """
-    from ..operators.cdc import snapshot_diff
+    from . import cdf_source as _cdf
 
-    man_from = _manifest_at(spark, table_path, from_commit)
-    man_to = (_manifest_at(spark, table_path, to_commit)
-              if to_commit is not None
-              else read_table_manifest(spark, table_path))
-    if man_to is None:
-        raise ValueError(f"{table_path} has no commits")
-    changed = _changed_buckets(man_from, man_to)
-    changed_new = [b for b in changed if b in man_to["buckets"]]
-    changed_old = [b for b in changed if b in man_from["buckets"]]
-    if changed_new:
-        new_df = _read_resolved(spark, table_path, man_to,
-                                only=changed_new)
-    else:  # nothing changed: empty changeset with the table's schema
-        new_df = read_merged_table(spark, table_path).limit(0)
-    old_df = (_read_resolved(spark, table_path, man_from,
-                             only=changed_old) if changed_old
-              else spark.createDataFrame([], new_df.schema))
-    if set(old_df.columns) != set(new_df.columns):
-        # Schema evolved between the commits: align both sides to the
-        # column union (NULL-filled) so the diff sees an added column
-        # as a change on rows that later set it, not a select error.
-        old_df = old_df.unionByName(spark.createDataFrame([], new_df.schema),
-                                    allowMissingColumns=True)
-        new_df = new_df.unionByName(spark.createDataFrame([], old_df.schema),
-                                    allowMissingColumns=True)
-    keys = list(man_to["origin"])
-    payload = [c for c in new_df.columns if c not in keys]
-    diff = snapshot_diff(old_df, new_df, keys, payload)
-    return diff.join(new_df, keys, "left").select(
-        *keys, diff["op"], diff["changed_cols"], *payload)
+    if to_commit is None:
+        to_commit = _cdf._latest_commit(table_path)
+        if to_commit is None:
+            raise ValueError(f"{table_path} has no commits")
+    if to_commit < from_commit:
+        raise ValueError(
+            f"change window ({from_commit}, {to_commit}] of {table_path} "
+            "is reversed")
+    if from_commit == 0:
+        first = min(_list_commit_ids(spark, table_path), default=None)
+        man = _cdf._manifest(table_path, first) if first is not None else None
+        if man is not None and man.get("op") == "clone":
+            raise ValueError(
+                f"{table_path} is a clone created at commit {first}; "
+                "its history before that belongs to the source table "
+                f"— read changes from commit {first} on")
+    options = {"path": table_path, "fromCommit": str(from_commit),
+               "toCommit": str(to_commit),
+               "includeOld": str(include_old).lower()}
+    if select is not None:
+        options["select"] = ",".join(select)
+    if ship is not None:
+        options["ship"] = ",".join(ship)
+    wb = _cdf._window_bytes(table_path, from_commit, to_commit)
+    if wb is not None and wb <= _cdf._DRIVER_WINDOW_BYTES:
+        return _cdf.read_window_in_process(spark, options)
+    spark.dataSource.register(_cdf.MergeTableChangesDataSource)
+    return spark.read.format("merge_table_changes").options(**options).load()
 
 
 # --- table maintenance ----------------------------------------------------

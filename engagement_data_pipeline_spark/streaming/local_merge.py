@@ -266,6 +266,9 @@ def try_local_upsert(spark: SparkSession, table_path: str, batch,
     keys = [tuple(d.get(c) for c in origin_cols) for d in dicts]
     if len(set(keys)) != len(keys):
         return False
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(batch.schema)
     man = _ing.read_table_manifest(spark, table_path)
     names = set(batch.schema.names)
     if man is not None:
@@ -287,15 +290,17 @@ def try_local_upsert(spark: SparkSession, table_path: str, batch,
                           if i.path.endswith(".parquet")]
                 if pfiles:
                     with fs.open_input_file(pfiles[0]) as f:
-                        if set(pq.read_schema(f).names) != names:
-                            return False  # schema evolution: engine path
+                        table_schema = pq.read_schema(f)
+                    if set(table_schema.names) != names:
+                        return False  # schema evolution: engine path
+                    schema = _in_table_types(schema, table_schema)
+                    if schema is None:
+                        return False  # a type change: engine path
             except OSError:
                 return False
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     try:
-        upsert_rows_local(spark, table_path, dicts,
-                          to_arrow_schema(batch.schema), origin_cols,
+        upsert_rows_local(spark, table_path, dicts, schema, origin_cols,
                           n_buckets=n_buckets, bucket_cols=bucket_cols,
                           txn_app_id=txn_app_id, batch_id=batch_id,
                           mode=mode)
@@ -307,6 +312,32 @@ def try_local_upsert(spark: SparkSession, table_path: str, batch,
         # union-align is the only safe rewrite. Nothing was written.
         return False
     return True
+
+
+def _in_table_types(batch_schema, table_schema):
+    """`batch_schema` with each column that the table's data files
+    type WIDER (an int literal merged into a long column) retyped to
+    the table's type, so every version of the table keeps one type
+    per column — the change feed reads one schema
+    (`cdf_source._data_file_fields`). None when a column's types
+    differ in any other way (the caller leaves the merge to the
+    engine path)."""
+    import pyarrow as pa
+
+    from .cdf_source import _all_nullable
+
+    out = []
+    for f in batch_schema:
+        t = table_schema.field(f.name).type
+        if _all_nullable(t) == _all_nullable(f.type):
+            out.append(f)
+        elif (any(k(t) and k(f.type) for k in
+                  (pa.types.is_integer, pa.types.is_floating))
+              and t.bit_width >= f.type.bit_width):
+            out.append(f.with_type(t))
+        else:
+            return None
+    return pa.schema(out)
 
 
 def read_live_rows_local(table_path: str, man: dict,

@@ -7,9 +7,9 @@ recompute is the bottleneck. An MV created once from the snapshot and
 then refreshed from `table_changes` touches O(touched groups +
 changed rows) per refresh, never the table (and never the untouched
 groups of its own state): op='insert' rows add into their group,
-op='delete' rows SUBTRACT (their old payload read from the pre-change
-snapshot — O(changed buckets), the same trick the secondary index
-uses), and op='update' subtracts the old payload and adds the new.
+op='delete' rows SUBTRACT (their old payload read from the feed's
+`<col>__old` pre-images — the same read the secondary index uses),
+and op='update' subtracts the old payload and adds the new.
 
 Subtraction restricts metrics to the invertible distributive
 aggregates — ``count`` and ``sum`` (avg = sum/count at read time) —
@@ -59,8 +59,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ingest import (delete_origins, foreach_batch_upsert,
-                     read_changed_at, read_merged_table,
-                     read_table_manifest, table_changes)
+                     read_merged_table, read_table_manifest,
+                     table_changes)
 
 #: txn app id under which the MV records the last APPLIED source
 #: commit — the refresh replay-skip watermark.
@@ -163,6 +163,32 @@ def _prep(prepare, df: DataFrame, sign: int) -> DataFrame:
     return df.withColumn("sign", F.lit(sign))
 
 
+def _needed(prepare, source_cols, metrics, gcols) -> list[str]:
+    """Source columns a fold reads: `source_cols` under `prepare`,
+    else the group and metric columns."""
+    if prepare is not None:
+        return sorted(source_cols)
+    return sorted({col for col, _kind in metrics.values()} | set(gcols))
+
+
+def _signed_sides(prepare, ch: DataFrame,
+                  needed: list[str]) -> tuple[DataFrame, DataFrame]:
+    """(plus, minus) of a retract-shaped feed window: the new payloads
+    of inserts/updates signed +1, and the `<col>__old` pre-images of
+    updates/deletes signed -1. Origin columns have no `__old` twin
+    (keys are immutable), so they read as themselves."""
+    old_of = {c: (f"{c}__old" if f"{c}__old" in ch.columns else c)
+              for c in needed}
+    plus = _prep(prepare,
+                 ch.where(F.col("op").isin("insert", "update"))
+                 .select(*needed), 1)
+    minus = _prep(prepare,
+                  ch.where(F.col("op").isin("update", "delete"))
+                  .select(*[F.col(old_of[c]).alias(c) for c in needed]),
+                  -1)
+    return plus, minus
+
+
 def create_mv(spark: SparkSession, table_path: str, mv_path: str,
               group_cols: Sequence[str],
               metrics: dict[str, tuple[str, str]],
@@ -223,22 +249,14 @@ def refresh_mv(spark: SparkSession, table_path: str, mv_path: str,
         return None
     origin = list(src_man["origin"])
     gcols = list(group_cols)
-    ch = table_changes(spark, table_path, applied, current)
-    needed = (sorted(source_cols) if prepare is not None else
-              sorted({col for col, _kind in metrics.values()}
-                     | set(gcols)))
-    plus = _prep(prepare,
-                 ch.where(F.col("op").isin("insert", "update"))
-                 .select(*needed), 1)
-    # old payloads of deleted/updated keys, read from the pre-change
-    # snapshot RESTRICTED to the changed buckets (every feed key
-    # lived in one) — O(changed buckets), never a table rescan
-    minus = _prep(prepare,
-                  ch.where(F.col("op").isin("update", "delete"))
-                  .select(*origin)
-                  .join(read_changed_at(spark, table_path, applied,
-                                        current), origin)
-                  .select(*needed), -1)
+    needed = _needed(prepare, source_cols, metrics, gcols)
+    # one feed read projected to the needed columns, pre-images
+    # included: the minus side reads the `__old` payloads of
+    # deleted/updated keys — O(changed buckets), never a rescan
+    ch = table_changes(spark, table_path, applied, current,
+                       include_old=True,
+                       select=[c for c in needed if c not in origin])
+    plus, minus = _signed_sides(prepare, ch, needed)
     if not invertible:
         current = _refresh_recompute(spark, table_path, mv_path, gcols,
                                      metrics, src_man, plus, minus,
@@ -449,18 +467,8 @@ def mv_stream_sink(mv_path: str, group_cols: Sequence[str],
             # drive live groups to __mv_n == 0 and wrongly delete
             # them. Guard the whole fold, not just the merge.
             return
-        needed = (sorted(source_cols) if prepare is not None else
-                  sorted({col for col, _k in metrics.values()}
-                         | set(gcols)))
-        plus = _prep(prepare,
-                     batch.where(F.col("op").isin("insert", "update"))
-                     .select(*needed), 1)
-        old_of = {c: (f"{c}__old" if f"{c}__old" in batch.columns
-                      else c) for c in needed}
-        minus = _prep(prepare,
-                      batch.where(F.col("op").isin("update", "delete"))
-                      .select(*[F.col(old_of[c]).alias(c)
-                                for c in needed]), -1)
+        plus, minus = _signed_sides(
+            prepare, batch, _needed(prepare, source_cols, metrics, gcols))
         delta = _signed_state(plus.unionByName(minus), gcols, metrics)
         if man is None:
             # first batch bootstraps the state table

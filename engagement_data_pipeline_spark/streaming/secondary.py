@@ -16,7 +16,7 @@ source: a refresh reads the feed between the last-applied source
 commit (carried in the index's own txn watermark, the same
 exactly-once idiom the streaming merge uses) and the current one.
 Updates/deletes need the OLD value to remove its posting — that comes
-from `read_changed_at` on the pre-change snapshot, which is O(changed
+from the same feed read's `<col>__old` pre-image, which is O(changed
 buckets) because only changed buckets are consulted. Cost per refresh
 is therefore O(changes), never O(table), and a crash between the
 remove and add phases replays idempotently (deletes of absent keys
@@ -37,8 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ingest import (delete_origins, foreach_batch_upsert, lookup_origin,
-                     read_changed_at, read_table_manifest,
-                     read_merged_table, table_changes)
+                     read_table_manifest, read_merged_table,
+                     table_changes)
 
 #: txn app id under which the index records the last APPLIED source
 #: commit — the refresh replay-skip watermark.
@@ -77,9 +77,8 @@ def refresh_value_index(spark: SparkSession, table_path: str,
     """Fold the source's change feed since the last refresh into the
     index. Returns the source commit now reflected (None = already
     current). op='insert' adds postings from the feed's new payload;
-    'update'/'delete' first remove the OLD value's posting (old
-    snapshot consulted only for changed keys), and 'update' re-adds
-    the new one."""
+    'update'/'delete' first remove the OLD value's posting (read from
+    the feed's pre-image), and 'update' re-adds the new one."""
     src_man = read_table_manifest(spark, table_path)
     idx_man = read_table_manifest(spark, index_path)
     if src_man is None or idx_man is None:
@@ -94,21 +93,21 @@ def refresh_value_index(spark: SparkSession, table_path: str,
     if current <= applied:
         return None
     origin = list(src_man["origin"])
-    ch = table_changes(spark, table_path, applied, current)
-    # old values come from the pre-change snapshot RESTRICTED to the
-    # changed buckets (read_changed_at) — every feed key lived in
-    # one, and the full-snapshot join would rescan the table
+    # one feed read projected to the indexed column: old values come
+    # from its `__old` pre-image (an origin column has no twin and
+    # reads as itself) — O(changed buckets), never a table rescan
+    ch = table_changes(spark, table_path, applied, current,
+                       include_old=True,
+                       select=[] if col in origin else [col])
+    old_col = f"{col}__old" if f"{col}__old" in ch.columns else col
     removals = (ch.where(F.col("op").isin("update", "delete"))
-                .select(*origin)
-                .join(read_changed_at(spark, table_path, applied,
-                                      current)
-                      .select(col, *origin), origin)
-                .select(col, *origin).where(F.col(col).isNotNull()))
+                .select(F.col(old_col).alias(col), *origin)
+                .where(F.col(col).isNotNull()))
     additions = (ch.where(F.col("op").isin("insert", "update"))
                  .select(col, *origin).where(F.col(col).isNotNull()))
     # remove first, then add: an update whose value did not change
-    # round-trips (delete posting + re-insert) — still idempotent.
-    # A pure-insert feed (the common case) skips the delete commit
+    # is not in the projected feed at all, and a replayed window is
+    # still idempotent. A pure-insert feed (the common case) skips the delete commit
     # entirely; the emptiness probe runs on the already-tiny feed.
     if not removals.isEmpty():
         # dv: the removal is O(removed postings) — no bucket rewrite

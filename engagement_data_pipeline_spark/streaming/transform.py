@@ -58,7 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ingest import (delete_origins, foreach_batch_upsert, maybe_compact,
-                     read_merged_table, read_table_manifest)
+                     read_merged_table, read_table_manifest,
+                     table_changes)
 
 #: txn app id of a PULL-maintained derived table: the SOURCE commit
 #: last folded in.
@@ -198,13 +199,8 @@ def refresh_transform_table(spark: SparkSession, src_path: str,
     # old payloads of updated/deleted keys ride along as `<col>__old`
     # columns, so the window needs no pre-change snapshot read and no
     # semi-join — one Arrow scan serves both sides of the fold
-    from .cdf_source import MergeTableChangesDataSource
-
-    spark.dataSource.register(MergeTableChangesDataSource)
-    ch = (spark.read.format("merge_table_changes")
-          .option("path", src_path).option("fromCommit", str(applied))
-          .option("toCommit", str(current))
-          .option("includeOld", "true").load())
+    ch = table_changes(spark, src_path, applied, current,
+                       include_old=True)
     payload = [c for c in ch.columns
                if c not in ("op", "changed_cols") and c not in origin
                and not c.endswith("__old")]

@@ -389,9 +389,9 @@ def refresh_ann_index(spark: SparkSession, table_path: str,
                       id_col: str = "vec_id",
                       emb_col: str = "embedding") -> int | None:
     """Fold the corpus table's change feed since the last refresh into
-    the index: old cells derived from the pre-change snapshot's
-    embeddings (read O(changed buckets) via `read_changed_at`), new
-    cells from the feed's new payloads, under the FROZEN stored
+    the index: old cells derived from the feed's `__old` pre-image
+    embeddings and new cells from its new payloads (one
+    `table_changes` read, O(changed buckets)), under the FROZEN stored
     quantizer. Returns the source commit now reflected (None =
     already current). O(changes) per refresh, crash-replay safe via
     the `_SRC_TXN` watermark."""
@@ -413,13 +413,16 @@ def refresh_ann_index(spark: SparkSession, table_path: str,
         return None
     cents = load_centroids(spark, index_path)
     origin = list(src_man["origin"])
-    ch = _ing.table_changes(spark, table_path, applied, current)
-    removals = (_ing.read_changed_at(spark, table_path, applied, current)
-                .join(F.broadcast(
-                    ch.where(F.col("op").isin("update", "delete"))
-                    .select(*origin)), origin, "left_semi")
-                .select(_cell_expr(F.col(emb_col), cents).alias("cell"),
-                        F.col(id_col).cast("string").alias("vec_id"))
+    cols = (id_col, emb_col)
+    ch = _ing.table_changes(spark, table_path, applied, current,
+                            include_old=True,
+                            select=[c for c in cols if c not in origin])
+    # pre-images from `__old`; an origin column has no twin (immutable)
+    old = {c: F.col(f"{c}__old" if f"{c}__old" in ch.columns else c)
+           for c in cols}
+    removals = (ch.where(F.col("op").isin("update", "delete"))
+                .select(_cell_expr(old[emb_col], cents).alias("cell"),
+                        old[id_col].cast("string").alias("vec_id"))
                 .where(F.col("cell").isNotNull()))
     additions = (ch.where(F.col("op").isin("insert", "update"))
                  .select(_cell_expr(F.col(emb_col), cents).alias("cell"),

@@ -1,7 +1,9 @@
 """The change feed as a Structured Streaming SOURCE (PySpark 4 Python
 Data Source API): offsets are commit ids, each micro-batch is the
-row-level diff between two commits, dv deletes included, and the
-stream's union must equal `table_changes` over the same window."""
+row-level diff between two commits, dv deletes included. The
+reference for both the stream and the batch read (`table_changes`,
+the same Arrow kernel) is `_feed_oracle`: the Spark-SQL
+`snapshot_diff` of two time-travel snapshots."""
 
 from __future__ import annotations
 
@@ -10,13 +12,60 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from engagement_data_pipeline_spark.operators.cdc import snapshot_diff
 from engagement_data_pipeline_spark.streaming import ingest as ing
 from engagement_data_pipeline_spark.streaming.cdf_source import (
-    MergeTableChangesDataSource)
+    MergeTableChangesDataSource, read_changes_local)
 
 
 def _batch(spark, rows):
     return spark.createDataFrame(rows, "origin string, payload string")
+
+
+def _feed_oracle(spark, path, a, b):
+    """The feed window (a, b] computed independently of the Arrow
+    kernel: `snapshot_diff` of `read_table_at(a)` and
+    `read_table_at(b)`, joined to the new payload and, as
+    `<col>__old`, the old one. Both snapshots are aligned to the
+    column union with the head (the feed's schema is the table's
+    latest), so columns and `changed_cols` order match
+    `table_changes(include_old=True)`."""
+    def aligned(df, *others):
+        for o in others:
+            df = df.unionByName(spark.createDataFrame([], o.schema),
+                                allowMissingColumns=True)
+        return df
+
+    head = ing.read_merged_table(spark, path).limit(0)
+    new = aligned(ing.read_table_at(spark, path, b), head)
+    old = (ing.read_table_at(spark, path, a) if a > 0 else head)
+    old = aligned(old, new)
+    new = aligned(new, old)
+    keys = list(ing.read_table_manifest(spark, path)["origin"])
+    payload = [c for c in new.columns if c not in keys]
+    diff = snapshot_diff(old, new, keys, sorted(payload))
+    olds = old.select(*keys, *[F.col(c).alias(f"{c}__old")
+                               for c in payload])
+    return (diff.join(new, keys, "left").join(olds, keys, "left")
+            .select(*keys, "op", "changed_cols", *payload,
+                    *[f"{c}__old" for c in payload]))
+
+
+@pytest.fixture(params=["driver", "workers"])
+def placement(request, monkeypatch):
+    """Run `table_changes` in-process (the default for test-sized
+    windows) or, with the driver bound forced below every window, on
+    Python DataSource workers."""
+    from engagement_data_pipeline_spark.streaming import cdf_source
+
+    if request.param == "workers":
+        monkeypatch.setattr(cdf_source, "_DRIVER_WINDOW_BYTES", -1)
+    return request.param
+
+
+def _rows(df, cols=None):
+    return sorted(tuple(r) for r in df.select(*(cols or df.columns))
+                  .collect())
 
 
 @pytest.fixture(scope="module")
@@ -75,9 +124,10 @@ def test_stream_replays_history_and_follows_commits(
         q.stop()
 
 
-def test_stream_batches_match_table_changes(registered, spark, tmp_path):
-    """Cross-check the streaming source against the batch feed over
-    the same commit window."""
+def test_stream_batches_match_snapshot_diff_oracle(registered, spark,
+                                                   tmp_path):
+    """Cross-check the streaming source against the snapshot-diff
+    oracle over the same commit window."""
     path = str(tmp_path / "t")
     merge = ing.foreach_batch_upsert(path, ["origin"], n_buckets=4,
                                      txn_app_id="src")
@@ -101,9 +151,10 @@ def test_stream_batches_match_table_changes(registered, spark, tmp_path):
         _drain(q)
     finally:
         q.stop()
-    batch = {(r.origin, r.op, r.payload)
-             for r in ing.table_changes(spark, path, 1).collect()}
-    assert set(got) == batch
+    head = ing.read_table_manifest(spark, path)["commit"]
+    oracle = set(_rows(_feed_oracle(spark, path, 1, head),
+                       ["origin", "op", "payload"]))
+    assert set(got) == oracle
     assert len(got) == len(set(got))  # no duplicated emission
 
 
@@ -146,6 +197,10 @@ def test_include_old_retract_stream(registered, spark, tmp_path):
     assert sorted(got) == [("a", "update", "9", "1"),
                            ("b", "delete", None, "2"),
                            ("c", "insert", "3", None)]
+    head = ing.read_table_manifest(spark, path)["commit"]
+    assert sorted(got) == _rows(_feed_oracle(spark, path, 1, head),
+                                ["origin", "op", "payload",
+                                 "payload__old"])
 
 
 def test_stream_follows_random_history_to_final_state(
@@ -288,3 +343,176 @@ def test_nested_labels_render_null_scheme_or_code_by_dropping_it(spark):
            df.select("k", _labels_str(F.col("labels")).alias("s"))
            .collect()}
     assert got == {1: "topic:3,extra:x", 2: None, 3: "", 4: ""}
+
+
+def _bucket_of(spark, key, n_buckets):
+    return spark.createDataFrame([(key,)], "k string").select(
+        ing.origin_bucket(["k"], n_buckets)).first()[0]
+
+
+def test_feed_keeps_column_added_outside_the_first_bucket(
+        registered, spark, tmp_path, placement):
+    """A schema-evolving merge that leaves bucket 0 alone: the feed's
+    schema must still carry the added column — in the stream, the
+    batch read (`table_changes`, with and without `select`) and the
+    driver-side `read_changes_local` alike."""
+    path = str(tmp_path / "t")
+    merge = ing.foreach_batch_upsert(path, ["k"], n_buckets=4)
+    merge(spark.createDataFrame([(f"k{i}", i) for i in range(20)],
+                                "k string, v int"), 0)
+    base = ing.read_table_manifest(spark, path)
+    assert 0 in base["buckets"]
+    key = next(f"e{i}" for i in range(100)
+               if _bucket_of(spark, f"e{i}", 4) != 0)
+    merge(spark.createDataFrame([(key, 7, "x")],
+                                "k string, v int, extra string"), 1)
+    head = ing.read_table_manifest(spark, path)
+    # the evolving commit really left bucket 0 on the old schema
+    assert head["buckets"][0] == base["buckets"][0]
+    lo, hi = int(base["commit"]), int(head["commit"])
+    want = [(key, "insert", 7, "x")]
+    cols = ["k", "op", "v", "extra"]
+
+    lc = read_changes_local(path, lo, hi, max_rows=100)
+    assert [tuple(r.get(c) for c in cols) for r in lc.rows] == want
+    assert _rows(ing.table_changes(spark, path, lo), cols) == want
+    assert _rows(ing.table_changes(spark, path, lo, select=["extra"]),
+                 ["k", "op", "extra"]) == [(key, "insert", "x")]
+    got: list[tuple] = []
+    q = (spark.readStream.format("merge_table_changes")
+         .option("path", path).option("startingCommit", str(lo)).load()
+         .writeStream.foreachBatch(
+             lambda df, _b: got.extend(_rows(df, cols)))
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .start())
+    try:
+        _drain(q)
+    finally:
+        q.stop()
+    assert got == want
+
+
+def test_table_changes_matches_snapshot_diff_over_random_history(
+        spark, tmp_path, placement):
+    """Property: over a random history holding inserts, latest-wins
+    updates, dv and rewrite deletes, a compaction and one schema
+    evolution, `table_changes(a, b, include_old=True)` equals the
+    snapshot-diff oracle for every single-commit window and for
+    spanning windows; the compaction's own window is empty."""
+    import random
+
+    rng = random.Random(23)
+    path = str(tmp_path / "t")
+    merge = ing.foreach_batch_upsert(path, ["origin"], n_buckets=4,
+                                     txn_app_id="src", mode="latest_wins")
+    keys = [f"k{i}" for i in range(24)]
+    live: set[str] = set()
+    ddl = "origin string, payload string"
+    evolved = False
+
+    def upsert(rows, bid):
+        merge(spark.createDataFrame(rows, ddl), bid)
+        live.update(r[0] for r in rows)
+
+    upsert([(k, "v0") for k in rng.sample(keys, 10)], 0)
+    ops = ["insert", "update", "dv_delete", "rewrite_delete", "evolve",
+           "compact", "update", "dv_delete"]
+    rng.shuffle(ops)
+    compact_commit = None
+    for step, op in enumerate(ops, start=1):
+        tag = f"v{step}"
+        if op == "evolve":
+            evolved, ddl = True, ddl + ", extra string"
+            upsert([(k, tag, f"x{step}")
+                    for k in rng.sample(sorted(live), 2)]
+                   + [(f"n{step}", tag, None)], step)
+        elif op in ("insert", "update"):
+            pool = (sorted(live) if op == "update"
+                    else [k for k in keys if k not in live])
+            rows = [(k, tag) for k in rng.sample(pool, min(3, len(pool)))]
+            upsert([r + ((f"y{step}",) if evolved else ()) for r in rows],
+                   step)
+        elif op == "compact":
+            ing.compact_table(spark, path, vacuum=False)
+            compact_commit = ing.read_table_manifest(spark, path)["commit"]
+        else:
+            dead = rng.sample(sorted(live), 2)
+            ing.delete_origins(
+                spark, path,
+                spark.createDataFrame([(k,) for k in dead],
+                                      "origin string"),
+                strategy="dv" if op == "dv_delete" else "rewrite")
+            live.difference_update(dead)
+    head = int(ing.read_table_manifest(spark, path)["commit"])
+    windows = ([(c - 1, c) for c in range(2, head + 1)]
+               + [(0, head), (1, head), (2, head - 1)])
+    for a, b in windows:
+        got = ing.table_changes(spark, path, a, b, include_old=True)
+        oracle = _feed_oracle(spark, path, a, b)
+        assert got.columns == oracle.columns, (a, b)
+        assert _rows(got) == _rows(oracle), (a, b)
+    assert compact_commit is not None
+    assert ing.table_changes(spark, path, compact_commit - 1,
+                             compact_commit).count() == 0
+
+
+def test_feed_schema_unions_versions_and_refuses_type_conflicts(tmp_path):
+    """`_data_file_fields` reads one footer per version directory:
+    columns union in first-seen bucket order, and a column that two
+    versions type differently raises instead of picking one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engagement_data_pipeline_spark.streaming.cdf_source import (
+        _data_file_fields)
+
+    def write(ver, bucket, table):
+        d = tmp_path / f"v{ver:08d}" / f"bucket={bucket}"
+        d.mkdir(parents=True)
+        pq.write_table(table, d / "part-0.parquet")
+
+    write(1, 0, pa.table({"k": ["a"], "v": pa.array([1], pa.int32())}))
+    write(1, 1, pa.table({"k": ["b"], "v": pa.array([2], pa.int32())}))
+    write(2, 2, pa.table({"k": ["c"], "v": pa.array([3], pa.int32()),
+                          "extra": ["x"]}))
+    man = {"commit": 2, "n_buckets": 4, "origin": ["k"],
+           "buckets": {0: 1, 1: 1, 2: 2}}
+    got = _data_file_fields(str(tmp_path), man)
+    assert [(n, str(t)) for n, t in got] == [
+        ("k", "string"), ("v", "int32"), ("extra", "string")]
+    # a later version typing the column differently raises, a wider
+    # integer included: writers keep the table's types
+    for ver, v in ((3, pa.array([4], pa.int64())), (4, ["not-an-int"])):
+        write(ver, 3, pa.table({"k": ["d"], "v": v}))
+        man["buckets"][3] = ver
+        with pytest.raises(ValueError, match="column 'v'"):
+            _data_file_fields(str(tmp_path), man)
+
+
+def test_table_changes_placement_and_reversed_window(spark, tmp_path,
+                                                    monkeypatch):
+    """A window within `_DRIVER_WINDOW_BYTES` is diffed in the driver
+    process (its plan scans no Python DataSource), a larger one on
+    Python workers, with the same rows; a reversed window raises at
+    call time instead of reading as "no changes"."""
+    from engagement_data_pipeline_spark.streaming import cdf_source
+
+    path = str(tmp_path / "t")
+    merge = ing.foreach_batch_upsert(path, ["origin"], n_buckets=4,
+                                     txn_app_id="src", mode="latest_wins")
+    merge(_batch(spark, [("a", "1"), ("b", "2")]), 0)
+    merge(_batch(spark, [("a", "9"), ("c", "3")]), 1)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    local = ing.table_changes(spark, path, 1, 2, include_old=True)
+    assert "merge_table_changes" not in plan(local)
+    monkeypatch.setattr(cdf_source, "_DRIVER_WINDOW_BYTES", -1)
+    remote = ing.table_changes(spark, path, 1, 2, include_old=True)
+    assert "merge_table_changes" in plan(remote)
+    assert _rows(local) == _rows(remote) == [
+        ("a", "update", "payload", "9", "1"),
+        ("c", "insert", "", "3", None)]
+    with pytest.raises(ValueError, match="reversed"):
+        ing.table_changes(spark, path, 2, 1)

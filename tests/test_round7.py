@@ -384,21 +384,32 @@ def test_compact_cluster_by_sorts_within_buckets(spark, tmp_path):
     assert ing.read_merged_table(spark, path).count() == 60
 
 
-def test_read_changed_at_touches_only_changed_buckets(spark, tmp_path):
-    """The old-payload source for MV/index refresh must read ONLY the
-    buckets the feed window changed — joining the full old snapshot
+def test_feed_batch_read_plans_only_changed_buckets(spark, tmp_path):
+    """The feed's batch read (`table_changes`) serves MV/index refresh
+    pre-images from its `__old` columns, so it must plan partitions
+    for ONLY the buckets the window changed — planning every bucket
     would silently rescan the table every refresh."""
+    from engagement_data_pipeline_spark.streaming.cdf_source import (
+        MergeTableChangesDataSource)
+
     path = str(tmp_path / "t")
     merge = ing.foreach_batch_upsert(path, ["origin"], n_buckets=8)
     merge(_batch(spark, [f"k{i}" for i in range(64)], "seed"), 0)
     pre = ing.read_table_manifest(spark, path)["commit"]
-    # touch exactly one key -> at most one bucket changes
+    # touch exactly one key -> exactly its bucket changes
     ing.delete_origins(spark, path, _keys(spark, ["k1"]), strategy="dv")
-    old = ing.read_changed_at(spark, path, pre)
-    files = {r[0] for r in
-             old.select(F.input_file_name()).distinct().collect()}
-    buckets_touched = {f.rsplit("bucket=", 1)[1].split("/")[0]
-                       for f in files}
-    assert len(buckets_touched) == 1
+    ch = ing.table_changes(spark, path, pre, include_old=True)
+    ds = MergeTableChangesDataSource(options={
+        "path": path, "fromCommit": str(pre), "includeOld": "true",
+        "toCommit": str(ing.read_table_manifest(spark, path)["commit"])})
+    planned = set()
+    for p in ds.reader(ch.schema).partitions():
+        planned.update(p.bucket if isinstance(p.bucket, list)
+                       else [p.bucket])
+    [k1_bucket] = [r[0] for r in _keys(spark, ["k1"]).select(
+        ing.origin_bucket(["origin"], 8)).collect()]
+    assert planned == {k1_bucket}
     # and it still serves the old payload of the deleted key
-    assert old.where(F.col("origin") == "k1").count() == 1
+    assert [tuple(r) for r in ch.select(
+        "origin", "op", "payload", "payload__old").collect()] == [
+        ("k1", "delete", None, "seed")]

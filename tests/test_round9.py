@@ -607,9 +607,10 @@ def test_mv_stream_fold_plan_single_bucket_broadcast(spark, tmp_path,
 
 def test_mv_refresh_fold_plan_shape(spark, tmp_path, monkeypatch):
     """Pull-path fold: the plan additionally contains the batch
-    `table_changes` diff of the changed source buckets (two keyed
-    full-outer diffs — plus and minus sides), so the exchange budget
-    is 5; the fold itself must still broadcast the delta against a
+    `table_changes` read of the changed source buckets — a
+    shuffle-free scan whose `__old` pre-images feed the minus side —
+    so the exchange budget is 1 (the delta aggregate), as on the push
+    path; the fold itself must still broadcast the delta against a
     single-bucket state slice. Forces the DISTRIBUTED fold (see
     test_mv_stream_fold_plan_single_bucket_broadcast)."""
     monkeypatch.setattr(MV, "_LOCAL_FOLD_MAX", 0)
@@ -633,9 +634,9 @@ def test_mv_refresh_fold_plan_shape(spark, tmp_path, monkeypatch):
     folded = captured[-1]
     plan = folded._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftOuter" in plan
-    assert _n_exchanges(plan) <= 5, (
+    assert _n_exchanges(plan) <= 1, (
         f"refresh fold has {_n_exchanges(plan)} exchanges "
-        f"(budget 5):\n{plan}")
+        f"(budget 1):\n{plan}")
     expect = {f"bucket={r[0]}" for r in
               spark.createDataFrame([("g0",)], "grp string")
               .select(ing.origin_bucket(["grp"], 8).alias("b"))
