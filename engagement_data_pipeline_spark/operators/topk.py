@@ -81,25 +81,6 @@ def group_rows_slice(spark, table_path: str, keys: DataFrame,
     return rows.join(F.broadcast(keys), gcols, "left_semi")
 
 
-#: Row cap of the DRIVER-SIDE touched-key fast path below: it bounds
-#: the narrow (op + group cols) dicts materialized in the driver
-#: (~100 B each → a few MB at the default). The window's input bytes
-#: are capped by `cdf_source._DRIVER_WINDOW_BYTES`, the bound
-#: `table_changes` uses too. Tune for clusters via the env vars; the
-#: defaults keep a bench/day-run-sized window zero-job while any
-#: corpus-scale backlog goes distributed.
-def _env_int(name: str, default: int) -> int:
-    import os
-
-    try:
-        return int(os.environ.get(name, default))
-    except ValueError:
-        return default
-
-
-_TOUCHED_LOCAL_ROWS = _env_int("SPARK_GRAFT_TOUCHED_LOCAL_ROWS", 100_000)
-
-
 def touched_group_slice(spark, table_path: str, from_commit: int,
                         group_cols: Sequence[str]
                         ) -> tuple[DataFrame, DataFrame] | None:
@@ -125,58 +106,14 @@ def touched_group_slice(spark, table_path: str, from_commit: int,
     current = int(man["commit"])
     if current <= from_commit:
         return None
-    # Bounded-window fast path: the touched-key derivation needs only
-    # the feed's group columns, so a bounded window is diffed
-    # DRIVER-SIDE (cdf_source.read_changes_local — same manifests,
-    # same Arrow kernel, zero scan jobs) and the key set computed as
-    # a Python set — no Python-datasource scan job (~0.5 s worker
-    # spin-up), no distinct shuffle, no checkpoint job. The read
-    # ships ONLY op + group columns (+ their __old twins) out of the
-    # Arrow diff (guide §4: the compare spans every payload column,
-    # the consumer reads three), so the caps can sit far above the
-    # 512-row local-merge cap: row cap ~1e5 narrow dicts (a few MB)
-    # and an input-bytes cap bounding what the single-threaded driver
-    # may read/diff (both env-tunable for clusters). Semantics
-    # identical to the distributed read below (A/B pinned in tests);
-    # windows past either cap fall through.
-    from ..streaming import cdf_source as _cdf
-    from ..streaming.local_merge import SMALL_BATCH_ROWS
-
-    wb = _cdf._window_bytes(table_path, from_commit, current)
-    cap = (_TOUCHED_LOCAL_ROWS
-           if wb is not None and wb <= _cdf._DRIVER_WINDOW_BYTES
-           else SMALL_BATCH_ROWS)
-    lc = _cdf.read_changes_local(table_path, from_commit, current,
-                                 max_rows=cap, ship=gcols)
-    if lc is not None and any("<" in lc.col_ddl.get(g, "<")
-                              for g in gcols):
-        # A non-scalar group column (array/map/struct DDL) would be
-        # unhashable in the Python key set below; the distributed
-        # reader handles those — fall through.
-        lc = None
-    if lc is not None:
-        keyset = set()
-        for r in lc.rows:
-            if r["op"] in ("insert", "update"):
-                keyset.add(tuple(r[g] for g in gcols))
-            if r["op"] in ("update", "delete"):
-                # origin/key columns carry no __old twin (immutable)
-                keyset.add(tuple(
-                    r[g + "__old"] if g + "__old" in r else r[g]
-                    for g in gcols))
-        data = [dict(zip(gcols, k))
-                for k in sorted(keyset, key=repr)]
-        touched = (spark.createDataFrame(data, lc.ddl_for(gcols))
-                   if data else
-                   spark.createDataFrame([], lc.ddl_for(gcols)))
-        return group_rows_slice(spark, table_path, touched,
-                                gcols), touched
     # ONE netting change-feed read with `includeOld`: new groups from
     # the new payloads, old groups (updates that MOVED a row across
     # groups, deletes) from the `<col>__old` pre-images — no
     # pre-change snapshot read, no semi-join. Origin columns have no
     # __old twin (keys are immutable), so a group column that is also
-    # a key reads as itself on the old side.
+    # a key reads as itself on the old side. `table_changes` places
+    # the read: a bounded window is diffed in this process and reaches
+    # Spark as one Arrow table, a large one runs on Python workers.
     # `ship` narrows the Python→JVM boundary to op + group columns
     # (+ their __old twins): the diff still compares every payload
     # column (emission semantics unchanged — a row changing only in

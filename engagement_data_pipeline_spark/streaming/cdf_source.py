@@ -673,13 +673,13 @@ class _ChangesReader(DataSourceStreamReader):
 _FEED_PARTITION_BYTES = 1 << 20
 
 #: LOCAL input bytes of a window (both versions of every changed
-#: bucket, `_window_bytes`) up to which it is diffed on the DRIVER:
-#: `ingest.table_changes` runs the batch reader in-process
-#: (`read_window_in_process`) and `topk.touched_group_slice` reads
-#: `read_changes_local`. Past it the Python DataSource read takes
-#: over; its planner and worker processes cost ~5 s in a fresh
-#: session, which only a window this large repays. Override via
-#: SPARK_GRAFT_TOUCHED_LOCAL_BYTES for clusters.
+#: bucket, `_window_bytes`) up to which `ingest.table_changes` diffs
+#: it on the DRIVER (`read_window_in_process`) — for every pull
+#: consumer alike (MV, secondary and ANN refresh, the direct drain,
+#: transform refresh, the touched-group slice). Past it the Python
+#: DataSource read takes over; its planner and worker processes cost
+#: ~5 s in a fresh session, which only a window this large repays.
+#: Override via SPARK_GRAFT_TOUCHED_LOCAL_BYTES for clusters.
 _DRIVER_WINDOW_BYTES = int(os.environ.get(
     "SPARK_GRAFT_TOUCHED_LOCAL_BYTES", 64 << 20))
 
@@ -879,110 +879,34 @@ def _read_one_bucket_changes(partition: _ChangesPartition,
 
 class LocalChanges:
     """Result of `read_changes_local`: the window's retract rows as
-    plain dicts plus the Spark DDL needed to rebuild payload-shaped
-    DataFrames from them."""
+    plain dicts (origin keys, `op`, `changed_cols`, payload and
+    `<col>__old` pre-images)."""
 
-    __slots__ = ("rows", "origin", "payload", "ddl", "col_ddl")
+    __slots__ = ("rows",)
 
-    def __init__(self, rows, origin, payload, ddl, col_ddl=None):
-        self.rows = rows          # list[dict] incl op/changed_cols/__old
-        self.origin = origin      # origin column names
-        self.payload = payload    # payload column names (feed order)
-        self.ddl = ddl            # "col type, ..." for origin+payload
-        self.col_ddl = col_ddl or {}  # per-column type ddl
-
-    def ddl_for(self, cols) -> str:
-        """Schema DDL for a column subset (e.g. a group-key frame)."""
-        return ", ".join(f"{c} {self.col_ddl[c]}" for c in cols)
+    def __init__(self, rows):
+        self.rows = rows
 
 
 def read_changes_local(table_path: str, from_commit: int,
-                       to_commit: int, *, max_rows: int,
-                       select: str | None = None,
-                       ship: list[str] | None = None
+                       to_commit: int, *, max_rows: int
                        ) -> LocalChanges | None:
-    """DRIVER-SIDE batch read of one bounded change window — the same
-    manifests, the same per-bucket Arrow diff kernel as the
-    distributed readers, executed in-process with zero Spark jobs.
-    Returns None as soon as the window exceeds `max_rows` (the caller
-    falls back to the distributed reader), so the cost is hard-capped.
-
-    This is the control-plane read path of the composed daily run: a
-    delta of a few hundred rows pays a couple of pyarrow bucket reads
-    (~ms) instead of a Python-datasource scan job (~0.5 s of worker
-    spin-up + scheduling) per consumer. `includeOld` is always on —
-    the pre-image columns are the point of reading locally."""
-    import pyarrow as pa
-
-    ds = MergeTableChangesDataSource(options={
-        "path": table_path,
-        **({"select": select} if select else {})})
-    cols_types = ds._columns_and_types()
-    names = [n for n, _t in cols_types]
-    man_to = _manifest(table_path, to_commit)
-    if man_to is None:
-        raise ValueError(
-            f"manifest {to_commit} of {table_path} is unreadable")
-    origin = list(man_to["origin"])
-    payload = [n for n in names if n not in origin
-               and n not in (_OP, _CHANGED)]
-    clash = sorted(n for n in payload
-                   if n.endswith(_OLD) and n[:-len(_OLD)] in payload)
-    if clash:
-        raise ValueError(
-            f"includeOld clashes with payload column(s) {clash}")
-    # arrow types come from the table's own data files (the kernel
-    # only needs internally-consistent types to build its arrays)
-    fields = dict(ds._table_fields()[1])
-    # `ship` = OUTPUT projection (same contract as the batch reader's
-    # option): the diff still compares every payload column, but only
-    # the listed ones materialize as Python dicts — the touched-key
-    # derivation ships 2-3 narrow columns per changed row instead of
-    # the table's full width, which is what makes a six-figure row cap
-    # affordable driver-side.
-    out_payload = ([c for c in payload if c in set(ship)]
-                   if ship is not None else payload)
-    out = ([pa.field(c, fields[c]) for c in origin]
-           + [pa.field(_OP, pa.string()), pa.field(_CHANGED, pa.string())]
-           + [pa.field(c, fields[c]) for c in out_payload]
-           + [pa.field(c + _OLD, fields[c]) for c in out_payload])
-    pa_schema = pa.schema(out)
-    pa_types = {c: fields[c] for c in origin + payload}
-    pa_types[_OP] = pa.string()
-    pa_types[_CHANGED] = pa.string()
-    man_from = (_manifest(table_path, from_commit)
-                if from_commit > 0 else None)
-    if from_commit > 0 and man_from is None:
-        raise ValueError(
-            f"manifest {from_commit} of {table_path} is unreadable — "
-            "log pruned past fromCommit; read from a later commit")
+    """The window (`from_commit`, `to_commit`] with `includeOld`, read
+    in this process as Python rows through the same reader object as
+    `read_window_in_process` (`_window_batches`). `perfbench` counts a
+    day's feed rows with it (`feed.changes`); no engine path reads
+    through it — every consumer calls `ingest.table_changes`. Returns
+    None as soon as the window exceeds `max_rows`, so the cost is
+    hard-capped."""
+    _schema, _pa_schema, batches = _window_batches({
+        "path": table_path, "fromCommit": str(from_commit),
+        "toCommit": str(to_commit), "includeOld": "true"})
     rows: list[dict] = []
-    for b in _changed_buckets(man_from, man_to):
-        part = _ChangesPartition(table_path, man_from, man_to, b,
-                                 origin + payload, pa_schema, pa_types)
-        for rb in _read_changes_partition(part):
-            rows.extend(rb.to_pylist())
-            if len(rows) > max_rows:
-                return None
-    rows = [{k: _plain_py(v) for k, v in r.items()} for r in rows]
-    col_ddl = {c: _ddl_of(fields[c]) for c in origin + payload}
-    ddl = ", ".join(f"{c} {col_ddl[c]}" for c in origin + out_payload)
-    return LocalChanges(rows, origin, out_payload, ddl, col_ddl)
-
-
-def _plain_py(v):
-    """Recursively strip pandas scalar wrappers out of `to_pylist`
-    values (pd.Timestamp -> datetime, NaT -> None) so the rows feed
-    `createDataFrame` directly."""
-    if isinstance(v, dict):
-        return {k: _plain_py(x) for k, x in v.items()}
-    if isinstance(v, list):
-        return [_plain_py(x) for x in v]
-    if hasattr(v, "to_pydatetime"):
-        if v != v:  # NaT
+    for rb in batches:
+        if len(rows) + rb.num_rows > max_rows:
             return None
-        return v.to_pydatetime()
-    return v
+        rows.extend(rb.to_pylist())
+    return LocalChanges(rows)
 
 
 def _all_nullable(t):
@@ -1143,14 +1067,31 @@ def read_window_in_process(spark, options: dict):
     `includeOld`, `select`, `ship`). An unreadable manifest or a
     vacuumed window raises here, at call time."""
     import pyarrow as pa
+
+    schema, pa_schema, batches = _window_batches(options)
+    batches = list(batches)
+    # an empty window still gets one empty chunk per column: Spark's
+    # Arrow conversion rebuilds nested columns chunk by chunk and
+    # cannot type a column that has no chunk
+    table = (pa.Table.from_batches(batches, schema=pa_schema)
+             if batches else pa_schema.empty_table())
+    return spark.createDataFrame(table, schema)
+
+
+def _window_batches(options: dict):
+    """(Spark schema, Arrow schema, Arrow batches) of one batch read of
+    the feed run in this process: `MergeTableChangesDataSource`'s own
+    schema, partitions and per-bucket diff. The partitions are planned
+    here, so an unreadable manifest raises before any batch is read;
+    the batches are yielded lazily."""
     from pyspark.sql.types import _parse_datatype_string
 
     ds = MergeTableChangesDataSource(options=options)
     schema = _parse_datatype_string(ds.schema())
     reader = ds.reader(schema)
-    batches = [rb for p in reader.partitions() for rb in reader.read(p)]
-    return spark.createDataFrame(
-        pa.Table.from_batches(batches, schema=reader.pa_schema), schema)
+    parts = reader.partitions()
+    return (schema, reader.pa_schema,
+            (rb for p in parts for rb in reader.read(p)))
 
 
 class MergeTableChangesDataSource(DataSource):
@@ -1326,9 +1267,9 @@ class MergeTableChangesDataSource(DataSource):
         if self._ship() is not None:
             # `ship` narrows the OUTPUT below the compare set, so the
             # kernel needs types for the unshipped compare columns too:
-            # seed from the data files (nullability-normalized, the
-            # read_changes_local idiom) and override every output
-            # column with the Spark-expected Arrow type.
+            # seed from the data files (nullability-normalized) and
+            # override every output column with the Spark-expected
+            # Arrow type.
             pa_types = dict(self._table_fields()[1])
             for f in pa_schema:
                 base = f.name[:-len(_OLD)] if f.name.endswith(_OLD) else None

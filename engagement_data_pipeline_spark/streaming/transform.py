@@ -101,54 +101,6 @@ def build_transform_table(spark: SparkSession, src_path: str,
     merge(out, int(man["commit"]))
 
 
-def _refresh_local(spark: SparkSession, lc, dst_path: str,
-                   dst_man: dict, transform, current: int) -> None:
-    """Fold one driver-read bounded window (`cdf_source.
-    read_changes_local`) into the derived table: the transform runs
-    over ONE-partition local frames (its semantics and plan are
-    unchanged — only the input partitioning is), gone-key detection
-    is a Python set diff over the two folds' collected keys, and the
-    merge rides `foreach_batch_upsert`'s own bounded fast path."""
-    from pyspark.sql import functions as F  # noqa: F401 (plan parity)
-
-    cols = lc.origin + lc.payload
-    new_data = [{c: r[c] for c in cols} for r in lc.rows
-                if r["op"] in ("insert", "update")]
-    old_data = [{**{c: r[c] for c in lc.origin},
-                 **{c: r[c + "__old"] for c in lc.payload}}
-                for r in lc.rows if r["op"] in ("update", "delete")]
-
-    def _df(data):
-        if not data:
-            return spark.createDataFrame([], lc.ddl)
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(data, 1), lc.ddl)
-
-    fresh_t = transform(_df(new_data))
-    fresh_rows = fresh_t.collect()
-    origin_d = list(dst_man["origin"])
-    carry = sorted(set(origin_d) | set(dst_man.get("bucket_on") or []))
-    fresh_keys = {tuple(r[c] for c in origin_d) for r in fresh_rows}
-    gone: dict[tuple, object] = {}
-    if old_data:
-        for r in transform(_df(old_data)).select(*carry).collect():
-            if tuple(r[c] for c in origin_d) not in fresh_keys:
-                gone[tuple(r[c] for c in carry)] = r
-    if gone:
-        gdf = spark.createDataFrame(
-            list(gone.values()),
-            schema=type(fresh_t.schema)(
-                [fresh_t.schema[c] for c in carry]))
-        delete_origins(spark, dst_path, gdf, strategy="dv")
-    fresh_df = (spark.createDataFrame(
-        spark.sparkContext.parallelize(fresh_rows, 1), fresh_t.schema)
-        if fresh_rows else spark.createDataFrame([], fresh_t.schema))
-    merge = foreach_batch_upsert(dst_path, origin_d,
-                                 txn_app_id=_TT_TXN,
-                                 mode="latest_wins")
-    merge(fresh_df, current)
-
-
 def refresh_transform_table(spark: SparkSession, src_path: str,
                             dst_path: str,
                             transform: Callable[[DataFrame], DataFrame],
@@ -177,33 +129,20 @@ def refresh_transform_table(spark: SparkSession, src_path: str,
     if current <= applied:
         return None
     origin = list(src_man["origin"])
-    # Bounded-window fast path: read the retract window DRIVER-SIDE
-    # (same manifests + Arrow diff kernel, zero scan jobs) and run
-    # the transform over one-partition local frames — a daily delta's
-    # refresh then costs two tiny jobs (fresh fold + old-keys fold)
-    # plus the merge, instead of a Python-datasource scan per
-    # consumer. A window past the bound falls through to the
-    # distributed read below; the semantics are identical.
-    from .cdf_source import read_changes_local
-    from .local_merge import SMALL_BATCH_ROWS
-
-    lc = read_changes_local(src_path, applied, current,
-                            max_rows=SMALL_BATCH_ROWS)
-    if lc is not None:
-        _refresh_local(spark, lc, dst_path, dst_man, transform,
-                       current)
-        if auto_compact:
-            maybe_compact(spark, dst_path)
-        return current
     # ONE netting change-feed read with `includeOld` pre-images: the
     # old payloads of updated/deleted keys ride along as `<col>__old`
     # columns, so the window needs no pre-change snapshot read and no
     # semi-join — one Arrow scan serves both sides of the fold
+    # (`table_changes` diffs a bounded window in this process and a
+    # large one on Python workers)
     ch = table_changes(spark, src_path, applied, current,
                        include_old=True)
-    payload = [c for c in ch.columns
-               if c not in ("op", "changed_cols") and c not in origin
-               and not c.endswith("__old")]
+    # the feed lists the payload after `changed_cols`, then one
+    # `<col>__old` twin per payload column in the same order: split by
+    # position, not by suffix, so a payload column whose own name ends
+    # in `__old` is kept
+    tail = ch.columns[ch.columns.index("changed_cols") + 1:]
+    payload = tail[:len(tail) // 2]
     # fresh output of the window's new payloads, materialized once:
     # the gone anti-join and the merge would otherwise each re-run
     # the feed-scan + transform DAG

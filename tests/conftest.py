@@ -35,5 +35,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(params=["driver", "workers"])
+def placement(request, monkeypatch):
+    """Run `table_changes` in-process (the default for test-sized
+    windows) or, with the driver bound forced below every window, on
+    Python DataSource workers."""
+    from engagement_data_pipeline_spark.streaming import cdf_source
+
+    if request.param == "workers":
+        monkeypatch.setattr(cdf_source, "_DRIVER_WINDOW_BYTES", -1)
+    return request.param
+
+
 def ts(iso: str) -> dt.datetime:
     return dt.datetime.fromisoformat(iso)

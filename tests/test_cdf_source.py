@@ -51,18 +51,6 @@ def _feed_oracle(spark, path, a, b):
                     *[f"{c}__old" for c in payload]))
 
 
-@pytest.fixture(params=["driver", "workers"])
-def placement(request, monkeypatch):
-    """Run `table_changes` in-process (the default for test-sized
-    windows) or, with the driver bound forced below every window, on
-    Python DataSource workers."""
-    from engagement_data_pipeline_spark.streaming import cdf_source
-
-    if request.param == "workers":
-        monkeypatch.setattr(cdf_source, "_DRIVER_WINDOW_BYTES", -1)
-    return request.param
-
-
 def _rows(df, cols=None):
     return sorted(tuple(r) for r in df.select(*(cols or df.columns))
                   .collect())
@@ -390,6 +378,25 @@ def test_feed_keeps_column_added_outside_the_first_bucket(
     finally:
         q.stop()
     assert got == want
+
+
+def test_empty_window_over_nested_column_reads_empty(spark, tmp_path,
+                                                    placement):
+    """A window whose changed buckets hold no row-level change (a
+    replay of identical rows) reads as an empty frame with the feed's
+    columns, also when the table has a nested column."""
+    path = str(tmp_path / "t")
+    merge = ing.foreach_batch_upsert(path, ["k"], n_buckets=2,
+                                     txn_app_id="src",
+                                     mode="latest_wins")
+    df = spark.createDataFrame(
+        [(f"k{i}", [("a", i)]) for i in range(6)],
+        "k string, labs array<struct<s:string,n:int>>")
+    merge(df, 1)
+    merge(df.limit(2), 2)
+    ch = ing.table_changes(spark, path, 1, 2, include_old=True)
+    assert ch.columns == ["k", "op", "changed_cols", "labs", "labs__old"]
+    assert ch.count() == 0
 
 
 def test_table_changes_matches_snapshot_diff_over_random_history(

@@ -220,50 +220,56 @@ def _evolving_table(spark, path):
     return m, df
 
 
-def test_read_changes_local_matches_distributed_reader(spark, tmp_path):
+def _canon(v):
+    """Order- and container-neutral form of a collected cell: Spark
+    `Row`s and Arrow-read dicts alike, timestamps as epoch seconds
+    (Spark collects naive local time, Arrow tz-aware UTC)."""
+    if isinstance(v, list):
+        return tuple(_canon(x) for x in v)
+    if hasattr(v, "asDict"):
+        v = v.asDict(recursive=True)
+    if isinstance(v, dict):
+        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
+    if hasattr(v, "timestamp"):
+        return v.timestamp()
+    return v
+
+
+def test_read_changes_local_matches_feed_oracle(spark, tmp_path):
+    """`read_changes_local` (the benchmark's feed-row counter) returns
+    exactly the snapshot-diff oracle's window — nested payloads,
+    timestamps, updates, dv deletes and `__old` pre-images — and its
+    `max_rows` bound is a hard cap, not advisory."""
+    from test_cdf_source import _feed_oracle
+
     from engagement_data_pipeline_spark.streaming.cdf_source import (
-        MergeTableChangesDataSource, read_changes_local)
+        read_changes_local)
 
     src = str(tmp_path / "src")
     _evolving_table(spark, src)
-    lc = read_changes_local(src, 1, 4, max_rows=4096)
+    oracle = _feed_oracle(spark, src, 1, 4)
+    cols = oracle.columns
+    want = sorted(tuple(_canon(r[c]) for c in cols)
+                  for r in oracle.collect())
+    lc = read_changes_local(src, 1, 4, max_rows=len(want))
     assert lc is not None
-    spark.dataSource.register(MergeTableChangesDataSource)
-    dist = (spark.read.format("merge_table_changes")
-            .option("path", src).option("fromCommit", "1")
-            .option("toCommit", "4")
-            .option("includeOld", "true").load())
-    cols = sorted(dist.columns)
-
-    def canon(v):
-        if isinstance(v, list):
-            return tuple(canon(x) for x in v)
-        if hasattr(v, "asDict"):
-            return tuple(sorted(v.asDict().items()))
-        if isinstance(v, dict):
-            return tuple(sorted((k, canon(x)) for k, x in v.items()))
-        return v
-
-    got = sorted((tuple(canon(r[c]) for c in cols) for r in lc.rows))
-    want = sorted((tuple(canon(r[c]) for c in cols)
-                   for r in (x.asDict(recursive=True)
-                             for x in dist.collect())))
+    assert all(sorted(r) == sorted(cols) for r in lc.rows)
+    got = sorted(tuple(_canon(r[c]) for c in cols) for r in lc.rows)
     assert got == want and len(got) > 0
-    # the bound is a hard cap, not advisory
-    assert read_changes_local(src, 1, 4, max_rows=1) is None
+    assert {r[1] for r in want} >= {"update", "delete"}
+    assert read_changes_local(src, 1, 4, max_rows=len(want) - 1) is None
 
 
-def test_local_refresh_equals_distributed_refresh(spark, tmp_path,
-                                                  monkeypatch):
-    """The bounded driver-side refresh fast path must produce the
-    byte-identical derived table the distributed fold produces —
-    including gone keys from deletes AND from rows the transform now
-    filters out."""
+def test_transform_refresh_equals_batch_recompute(spark, tmp_path,
+                                                  placement):
+    """A refresh folds a window of updates, dv deletes and
+    filter-crossing rewrites into exactly the derived table a batch
+    recompute over the final source gives — including gone keys from
+    deletes AND from rows the transform now filters out."""
     from pyspark.sql import functions as F
 
-    import engagement_data_pipeline_spark.streaming.local_merge as lm
     from engagement_data_pipeline_spark.streaming.ingest import (
-        read_merged_table)
+        delete_origins, read_merged_table)
     from engagement_data_pipeline_spark.streaming.transform import (
         build_transform_table, refresh_transform_table)
 
@@ -271,96 +277,78 @@ def test_local_refresh_equals_distributed_refresh(spark, tmp_path,
         return d.where("v % 7 != 3").select(
             "k", "v", F.expr("labs[0].s").alias("s0"), "ts")
 
-    def build_then_refresh(label, small_rows):
-        from engagement_data_pipeline_spark.streaming.ingest import (
-            foreach_batch_upsert)
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    m, df = _evolving_table(spark, src)
+    build_transform_table(spark, src, dst, tf, ["k"], n_buckets=4)
+    # ids 3 and 60 move onto v % 7 == 3 (filtered out), 61 is deleted
+    m(df.where("id < 10").withColumn("v", F.col("v") + 7), 5)
+    m(df.where("id = 60").withColumn("v", F.lit(10)), 6)
+    delete_origins(spark, src, df.where("id = 61").select("k"),
+                   strategy="dv")
 
-        src = str(tmp_path / f"s_{label}")
-        dst = str(tmp_path / f"d_{label}")
-        monkeypatch.setattr(lm, "SMALL_BATCH_ROWS", small_rows)
-        from pyspark.sql import functions as F2
-        m_, df = _evolving_table(spark, src)
-        # rebuild from commit-1 state: set the watermark by building
-        # from a table at commit 1 is awkward; instead build at head,
-        # add one more window, then refresh
-        build_transform_table(spark, src, dst, tf, ["k"], n_buckets=4)
-        m_(df.where("id < 10").withColumn("v", F2.col("v") + 7), 5)
-        m_(df.where("id = 60").withColumn(
-            "v", F2.lit(10)), 6)  # 10 % 7 != 3 -> stays
-        from engagement_data_pipeline_spark.streaming.ingest import (
-            delete_origins)
-        delete_origins(spark, src, df.where("id = 61").select("k"),
-                       strategy="dv")
-        got = refresh_transform_table(spark, src, dst, tf)
-        assert got == 7
-        rows = sorted(
-            (r.k, r.v, r.s0, r.ts)
-            for r in read_merged_table(spark, dst).collect())
-        return rows
+    def state(d):
+        return sorted((r.k, r.v, r.s0, r.ts) for r in d.collect())
 
-    local = build_then_refresh("local", 512)
-    dist = build_then_refresh("dist", 0)
-    assert local == dist and len(local) > 0
-    # and both equal the batch recompute over the final state
-    src = str(tmp_path / "s_local")
-    want = sorted((r.k, r.v, r.s0, r.ts) for r in
-                  tf(read_merged_table(spark, src)).collect())
-    assert local == want
+    before = {r[0] for r in state(read_merged_table(spark, dst))}
+    assert refresh_transform_table(spark, src, dst, tf) == 7
+    got = state(read_merged_table(spark, dst))
+    assert got == state(tf(read_merged_table(spark, src))) and got
+    gone = {"3", "60", "61"}
+    assert gone <= before and not gone & {r[0] for r in got}
 
 
-def test_touched_group_slice_local_equals_distributed(spark, tmp_path,
-                                                      monkeypatch):
-    """The bounded driver-side touched-set fast path (keys diffed
-    in-process from read_changes_local, no Python-datasource scan)
-    must yield exactly the touched set and live slice the distributed
-    feed read yields — including old-side keys of group-moving
-    updates and deletes."""
+def test_touched_group_slice_equals_feed_oracle(spark, tmp_path,
+                                                placement):
+    """The touched set is exactly the groups of the window's
+    post-images (inserts, updates) plus pre-images (updates, deletes)
+    in the snapshot-diff oracle — old groups of group-moving updates
+    included — and the live slice is every live row of those groups.
+    The `F.lit(999)` update merges an int literal into a long column
+    (the local merge must write the table's column types)."""
     from pyspark.sql import functions as F
+    from test_cdf_source import _feed_oracle
 
-    import engagement_data_pipeline_spark.streaming.local_merge as lm
     from engagement_data_pipeline_spark.operators.topk import (
         touched_group_slice)
     from engagement_data_pipeline_spark.streaming.ingest import (
-        delete_origins, foreach_batch_upsert)
+        delete_origins, foreach_batch_upsert, read_merged_table)
 
-    def build(label):
-        path = str(tmp_path / label)
-        # bucket on a PAYLOAD column so the old-side (__old) pre-image
-        # path is exercised by a group-moving update
-        m = foreach_batch_upsert(path, ["k"], n_buckets=4,
-                                 bucket_cols=["grp"],
-                                 txn_app_id="src", mode="latest_wins")
-        df = spark.range(60).select(
-            F.col("id").cast("string").alias("k"),
-            F.concat(F.lit("g"), (F.col("id") % 7).cast("string"))
-            .alias("grp"),
-            F.col("id").alias("v"))
-        m(df, 1)
-        # update moving rows ACROSS groups + plain update + delete
-        m(df.where("id < 5").withColumn("grp", F.lit("gX")), 2)
-        m(df.where("id = 20").withColumn("v", F.lit(999)), 3)
-        delete_origins(spark, path, df.where("id = 41")
-                       .select("k", "grp"), strategy="dv")
-        return path
+    path = str(tmp_path / "t")
+    # the group column is a PAYLOAD column, so a group-moving update
+    # reaches the touched set through its `grp__old` pre-image. The
+    # table buckets on its key: bucketing on `grp` would strand the
+    # moved rows' old copies in their old buckets.
+    m = foreach_batch_upsert(path, ["k"], n_buckets=4,
+                             txn_app_id="src", mode="latest_wins")
+    df = spark.range(60).select(
+        F.col("id").cast("string").alias("k"),
+        F.concat(F.lit("g"), (F.col("id") % 7).cast("string"))
+        .alias("grp"),
+        F.col("id").alias("v"))
+    m(df, 1)
+    # update moving rows ACROSS groups + plain update + delete
+    m(df.where("id < 5").withColumn("grp", F.lit("gX")), 2)
+    m(df.where("id = 20").withColumn("v", F.lit(999)), 3)
+    delete_origins(spark, path, df.where("id = 41")
+                   .select("k", "grp"), strategy="dv")
 
-    import engagement_data_pipeline_spark.operators.topk as topk_mod
-
-    def slices(path, small_rows):
-        # both caps must drop to force the distributed path: the
-        # narrow-ship local read has its own (much larger) row cap
-        monkeypatch.setattr(lm, "SMALL_BATCH_ROWS", small_rows)
-        monkeypatch.setattr(topk_mod, "_TOUCHED_LOCAL_ROWS", small_rows)
-        live, touched = touched_group_slice(spark, path, 1, ["grp"])
-        return (sorted(tuple(r) for r in touched.collect()),
-                sorted(tuple(r) for r in live.select(
-                    "k", "grp", "v").collect()))
-
-    lt, ll = slices(build("local"), 4096)
-    dt, dl = slices(build("dist"), 0)
-    assert lt == dt and len(lt) > 0
-    # old groups of the moved rows (g0..g4 via ids 0-4) ARE touched
-    assert ("g0",) in dict.fromkeys(lt) or ("g0",) in lt
-    assert ll == dl and len(ll) > 0
+    oracle = _feed_oracle(spark, path, 1, 4).collect()
+    want = sorted({(r.grp,) for r in oracle
+                   if r.op in ("insert", "update")}
+                  | {(r.grp__old,) for r in oracle
+                     if r.op in ("update", "delete")})
+    live, touched = touched_group_slice(spark, path, 1, ["grp"])
+    got = sorted(tuple(r) for r in touched.collect())
+    assert got == want
+    # old groups of the moved rows (ids 0-4) and the new one
+    assert {("g0",), ("g4",), ("gX",), ("g6",)} <= set(got)
+    groups = {g for (g,) in got}
+    assert sorted(tuple(r) for r in live.select("k", "grp", "v")
+                  .collect()) == sorted(
+        tuple(r) for r in read_merged_table(spark, path)
+        .select("k", "grp", "v").collect() if r.grp in groups)
+    assert touched_group_slice(spark, path, 4, ["grp"]) is None
 
 
 def test_bucket_pairs_equals_posting_self_join(spark):

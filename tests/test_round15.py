@@ -5,7 +5,6 @@ Pins the semantics of this round's optimizations:
   still spans every payload column — emission and changed_cols are
   the full-width feed's — but only origin + op/changed + the listed
   columns (+ their __old twins) cross the Python→JVM boundary;
-* `read_changes_local(..., ship=...)`: same contract driver-side;
 * query-scoped cache release (session.scoped_cache /
   release_scoped_caches) drops registered caches and survives stopped
   sessions.
@@ -100,26 +99,6 @@ def test_ship_rejected_for_streams(spark, tmp_path):
         options={"path": path, "ship": "grp"})
     with pytest.raises(ValueError, match="batch-read option"):
         ds.streamReader(None)
-
-
-def test_read_changes_local_ship_matches_distributed(spark, tmp_path):
-    from engagement_data_pipeline_spark.streaming.cdf_source import (
-        read_changes_local)
-
-    path = str(tmp_path / "t")
-    _history(spark, path)
-    lc = read_changes_local(path, 1, 4, max_rows=4096, ship=["grp"])
-    assert lc is not None
-    assert lc.payload == ["grp"]
-    dist = {r["k"]: r for r in
-            _read(spark, path, includeOld="true", ship="grp").collect()}
-    loc = {r["k"]: r for r in lc.rows}
-    assert sorted(loc) == sorted(dist)
-    for k, r in loc.items():
-        assert r["op"] == dist[k]["op"]
-        assert r["grp"] == dist[k]["grp"]
-        assert r.get("grp__old") == dist[k]["grp__old"]
-        assert r["changed_cols"] == dist[k]["changed_cols"]
 
 
 def test_local_union_schema_sees_mixed_schema_dir(spark, tmp_path):

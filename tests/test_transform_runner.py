@@ -253,3 +253,36 @@ def test_record_stage_survives_version_race(spark, tmp_path, monkeypatch):
     record_stage(spark, manifest, "rB", "s1", "done", 9)
     assert read_run(spark, manifest, "rB") == {"s1": ("done", 9)}
     assert calls["n"] >= 2  # first write was skipped, retry landed
+
+
+def test_transform_refresh_keeps_payload_named_like_a_pre_image(
+        spark, tmp_path, placement):
+    """A source payload column literally named `x__old` is payload, not
+    a pre-image: the feed carries it plus its own `x__old__old` twin,
+    and a refresh over a window past the local-merge row bound (512)
+    must fold it like any other column."""
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    merge = foreach_batch_upsert(src, ["k"], n_buckets=4,
+                                 txn_app_id="src", mode="latest_wins")
+    base = spark.range(1000).select(
+        F.col("id").alias("k"), F.col("id").alias("v"),
+        F.concat(F.lit("x"), F.col("id").cast("string")).alias("x__old"))
+    merge(base, 1)
+
+    def tf(d):
+        return d.where("k % 5 != 0").select("k", "x__old")
+
+    build_transform_table(spark, src, dst, tf, ["k"], n_buckets=4)
+    merge(base.where("k < 700").withColumn(
+        "x__old", F.concat(F.lit("y"), F.col("k").cast("string"))), 2)
+    delete_origins(spark, src, base.where("k >= 990").select("k"),
+                   strategy="dv")
+    assert refresh_transform_table(spark, src, dst, tf) == 3
+
+    def state(df):
+        return sorted((r.k, r.x__old) for r in df.collect())
+
+    got = state(read_merged_table(spark, dst))
+    assert got == state(tf(read_merged_table(spark, src)))
+    assert (1, "y1") in got and (995, "x995") not in got
