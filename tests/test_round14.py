@@ -235,15 +235,16 @@ def _canon(v):
     return v
 
 
-def test_read_changes_local_matches_feed_oracle(spark, tmp_path):
+def test_read_changes_local_matches_distributed_reader(spark, tmp_path):
     """`read_changes_local` (the benchmark's feed-row counter) returns
-    exactly the snapshot-diff oracle's window — nested payloads,
-    timestamps, updates, dv deletes and `__old` pre-images — and its
-    `max_rows` bound is a hard cap, not advisory."""
+    exactly the window the distributed `merge_table_changes` read and
+    the snapshot-diff oracle return — nested payloads, timestamps,
+    updates, dv deletes and `__old` pre-images — and its `max_rows`
+    bound is a hard cap, not advisory."""
     from test_cdf_source import _feed_oracle
 
     from engagement_data_pipeline_spark.streaming.cdf_source import (
-        read_changes_local)
+        MergeTableChangesDataSource, read_changes_local)
 
     src = str(tmp_path / "src")
     _evolving_table(spark, src)
@@ -256,6 +257,14 @@ def test_read_changes_local_matches_feed_oracle(spark, tmp_path):
     assert all(sorted(r) == sorted(cols) for r in lc.rows)
     got = sorted(tuple(_canon(r[c]) for c in cols) for r in lc.rows)
     assert got == want and len(got) > 0
+    spark.dataSource.register(MergeTableChangesDataSource)
+    dist = (spark.read.format("merge_table_changes")
+            .option("path", src).option("fromCommit", "1")
+            .option("toCommit", "4")
+            .option("includeOld", "true").load())
+    assert sorted(dist.columns) == sorted(cols)
+    assert sorted(tuple(_canon(r[c]) for c in cols)
+                  for r in dist.collect()) == want
     assert {r[1] for r in want} >= {"update", "delete"}
     assert read_changes_local(src, 1, 4, max_rows=len(want) - 1) is None
 

@@ -4,7 +4,8 @@ Pins the semantics of this round's optimizations:
 * the change feed's `ship` OUTPUT projection (batch reads): the diff
   still spans every payload column — emission and changed_cols are
   the full-width feed's — but only origin + op/changed + the listed
-  columns (+ their __old twins) cross the Python→JVM boundary;
+  columns (+ their __old twins) cross the Python→JVM boundary, and the
+  full-width driver-side `read_changes_local` agrees on those columns;
 * query-scoped cache release (session.scoped_cache /
   release_scoped_caches) drops registered caches and survives stopped
   sessions.
@@ -99,6 +100,31 @@ def test_ship_rejected_for_streams(spark, tmp_path):
         options={"path": path, "ship": "grp"})
     with pytest.raises(ValueError, match="batch-read option"):
         ds.streamReader(None)
+
+
+def test_read_changes_local_ship_matches_distributed(spark, tmp_path):
+    """The full-width driver-side read and a distributed read shipped
+    to `grp` agree on every shipped cell: same emitted rows (the
+    payload-only update included), ops, `grp`/`grp__old` and
+    changed_cols — shipping narrows the output, never the diff."""
+    from engagement_data_pipeline_spark.streaming.cdf_source import (
+        read_changes_local)
+
+    path = str(tmp_path / "t")
+    _history(spark, path)
+    lc = read_changes_local(path, 1, 4, max_rows=4096)
+    assert lc is not None
+    dist = _read(spark, path, includeOld="true", ship="grp")
+    assert not {"v", "txt", "v__old", "txt__old"} & set(dist.columns)
+    dist = {r["k"]: r for r in dist.collect()}
+    loc = {r["k"]: r for r in lc.rows}
+    assert all({"v", "txt", "grp__old"} <= set(r) for r in lc.rows)
+    assert sorted(loc) == sorted(dist) and "7" in loc
+    for k, r in loc.items():
+        assert r["op"] == dist[k]["op"]
+        assert r["grp"] == dist[k]["grp"]
+        assert r.get("grp__old") == dist[k]["grp__old"]
+        assert r["changed_cols"] == dist[k]["changed_cols"]
 
 
 def test_local_union_schema_sees_mixed_schema_dir(spark, tmp_path):
