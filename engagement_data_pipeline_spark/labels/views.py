@@ -336,14 +336,14 @@ def refresh_participants_view(spark, table_path: str, view_path: str,
     MATERIALIZED G1 view: exact re-fold of the touched participants
     (O(touched buckets + changed rows)), upsert their fresh rows,
     dv-delete participants that folded to nothing (lost their last
-    RQA message — F7 — or were fully erased). Returns the source
-    commit now reflected (None = already current). Crash-replay safe
-    the same way `refresh_value_index` is: deletes of absent keys are
-    no-ops and the merge's txn watermark skips an already-applied
-    refresh. `shared_slice` (from `refresh_views`) reuses one feed
+    RQA message — F7 — or were fully erased) in the same commit.
+    Returns the source commit now reflected (None = already current).
+    Crash-replay safe the same way `refresh_value_index` is: the one
+    commit's txn watermark skips an already-applied refresh, deletes
+    included. `shared_slice` (from `refresh_views`) reuses one feed
     diff across sibling views at the same watermark."""
-    from ..streaming.ingest import (delete_origins, foreach_batch_upsert,
-                                    maybe_compact, read_table_manifest)
+    from ..streaming.ingest import (foreach_batch_upsert, maybe_compact,
+                                    read_table_manifest)
 
     src_man = read_table_manifest(spark, table_path)
     v_man = read_table_manifest(spark, view_path)
@@ -359,17 +359,16 @@ def refresh_participants_view(spark, table_path: str, view_path: str,
         return None
     live, touched, current = _resolve_slice(spark, table_path, applied,
                                             current, shared_slice)
-    # materialize the fold once: gone's anti-join, delete and merge
+    # materialize the fold once: the merge's probe and its write
     # would otherwise each re-run the feed-diff + re-fold DAG
     fresh = participants_by_column(live, config).localCheckpoint()
-    gone = touched.join(fresh.select("participant_uuid"),
-                        "participant_uuid", "left_anti")
-    if not gone.isEmpty():
-        delete_origins(spark, view_path, gone, strategy="dv")
+    # every touched participant is deleted and the fold's rows come
+    # back in the same commit (deletes apply first): the ones that
+    # folded to nothing stay gone
     merge = foreach_batch_upsert(view_path, ["participant_uuid"],
                                  txn_app_id=_PVIEW_TXN,
                                  mode="latest_wins")
-    merge(fresh, current)
+    merge(fresh, current, deletes=touched)
     maybe_compact(spark, view_path)
     return current
 
@@ -410,14 +409,15 @@ def refresh_messages_view(spark, table_path: str, view_path: str,
     message-grain state, PARTICIPANT-grain refresh (a demog or
     consent change rewrites every message row of its sender) — fresh
     rows upserted by message_id, stale rows (deleted messages, or
-    messages whose participant no longer clears F7) dv-deleted. The
-    stale sweep reads only the touched participants' VIEW buckets
-    (the view is clustered on participant_uuid). `shared_slice`
-    (from `refresh_views`) reuses one feed diff across sibling views
-    at the same watermark."""
+    messages whose participant no longer clears F7) deleted in the
+    same commit. The stale sweep reads only the touched participants'
+    VIEW buckets (the view is clustered on participant_uuid, so the
+    stale keys carry it). `shared_slice` (from `refresh_views`)
+    reuses one feed diff across sibling views at the same
+    watermark."""
     from ..operators.topk import group_rows_slice
-    from ..streaming.ingest import (delete_origins, foreach_batch_upsert,
-                                    maybe_compact, read_table_manifest)
+    from ..streaming.ingest import (foreach_batch_upsert, maybe_compact,
+                                    read_table_manifest)
 
     src_man = read_table_manifest(spark, table_path)
     v_man = read_table_manifest(spark, view_path)
@@ -433,19 +433,17 @@ def refresh_messages_view(spark, table_path: str, view_path: str,
         return None
     live, touched, current = _resolve_slice(spark, table_path, applied,
                                             current, shared_slice)
-    # materialize the fold once: the stale sweep, delete and merge
-    # would otherwise each re-run the feed-diff + re-fold DAG
+    # materialize the fold once: the stale sweep and the merge would
+    # otherwise each re-run the feed-diff + re-fold DAG
     fresh = messages_by_column(live, config).localCheckpoint()
     old_rows = group_rows_slice(spark, view_path, touched,
                                 ["participant_uuid"])
     gone = (old_rows.select("message_id", "participant_uuid")
             .join(fresh.select("message_id"), "message_id", "left_anti"))
-    if not gone.isEmpty():
-        delete_origins(spark, view_path, gone, strategy="dv")
     merge = foreach_batch_upsert(view_path, ["message_id"],
                                  txn_app_id=_MVIEW_TXN,
                                  mode="latest_wins")
-    merge(fresh, current)
+    merge(fresh, current, deletes=gone)
     maybe_compact(spark, view_path)
     return current
 

@@ -28,10 +28,10 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..labels.config import AnalysisConfig
+from ..labels.imputation import _lit
 
 
 def _column_name(coded_field: str) -> str:
@@ -56,28 +56,32 @@ def analysis_matrix_headers(config: AnalysisConfig,
     return headers
 
 
+def _ident(name: str) -> str:
+    """A column name as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def analysis_matrix(participants_view: DataFrame, config: AnalysisConfig,
                     scheme_codes: Mapping[str, Sequence[str]],
                     membership_groups: Sequence[str] = ()) -> DataFrame:
     """K3: pivot each folded code list into 0/1 matrix columns, in the
-    exact reference header order."""
-    exprs: dict[str, Column] = {
-        "participant_uuid": F.col("participant_uuid"),
-        "consent_withdrawn": F.col("consent_withdrawn"),
-    }
-    for g in membership_groups:
-        exprs[g] = F.col(g)
+    exact reference header order — ONE `selectExpr`: a py4j Column
+    per code cell costs ~6 driver round trips (0.49 s vs 0.06 s per
+    build of the synthetic config's 127 columns)."""
+    exprs = {h: _ident(h) for h in
+             ("participant_uuid", "consent_withdrawn", *membership_groups)}
     for d in config.datasets:
-        exprs[d.raw_field] = F.col(d.raw_field)
+        exprs[d.raw_field] = _ident(d.raw_field)
         for cc in d.coding_configs:
             name = _column_name(cc.coded_field)
-            codes_arr = F.split(F.col(cc.coded_field), ";")
+            codes_arr = f"split({_ident(cc.coded_field)}, ';')"
             for code in scheme_codes[cc.scheme_id]:
                 exprs[f"{name}:{code}"] = (
-                    F.when(F.array_contains(codes_arr, code), F.lit(1))
-                    .otherwise(F.lit(0)))
+                    f"CASE WHEN array_contains({codes_arr}, {_lit(code)}) "
+                    "THEN 1 ELSE 0 END")
     headers = analysis_matrix_headers(config, scheme_codes, membership_groups)
-    return participants_view.select(*[exprs[h].alias(h) for h in headers])
+    return participants_view.selectExpr(
+        *[f"{exprs[h]} AS {_ident(h)}" for h in headers])
 
 
 def production_columns(messages_view: DataFrame,

@@ -1061,6 +1061,13 @@ def foreach_batch_upsert(table_path: str, origin_cols: Sequence[str],
     reports changed payloads as op='update'). latest_wins REQUIRES
     `txn_app_id`: only the replay watermark keeps a checkpoint replay
     of an old batch from clobbering newer payloads.
+
+    The returned merge also takes ``deletes=``, a key frame (origin
+    plus any bucket column outside it) whose keys leave the table IN
+    THE SAME atomic commit, applied before the upsert (a key in both
+    frames keeps the batch's row): dropped in the rewrite of the
+    buckets the upsert hits, deletion-vector entries elsewhere (no
+    data file touched). A replayed batch skips both.
     """
     if mode not in ("existing_wins", "latest_wins"):
         raise ValueError(f"unknown merge mode {mode!r}")
@@ -1068,69 +1075,8 @@ def foreach_batch_upsert(table_path: str, origin_cols: Sequence[str],
         raise ValueError("latest_wins requires txn_app_id: without the "
                          "replay watermark a re-run batch would "
                          "overwrite newer data")
-    def _apply(spark: SparkSession, raw: DataFrame, batch_id: int,
-               man: dict | None, commit: int, claim: CommitClaim) -> None:
-        txn = dict((man or {}).get("txn", {}))
-        if txn_app_id is not None:
-            applied = txn.get(txn_app_id)
-            if applied is not None and batch_id <= applied:
-                return  # checkpoint replay of an already-applied batch
-            txn[txn_app_id] = batch_id
-        nb = man["n_buckets"] if man else (n_buckets or DEFAULT_N_BUCKETS)
-        bk = _bucket_on(man) if man else list(bucket_cols or origin_cols)
-        batch = raw.withColumn(BUCKET_COL, origin_bucket(bk, nb))
-        # Buckets present in this batch — bounded by n_buckets, so the
-        # collect is O(n_buckets) regardless of table size.
-        hit = sorted(r[0] for r in
-                     batch.select(BUCKET_COL).distinct().collect())
-        if man is None:
-            vdir = _write_version(batch, table_path, commit, len(hit),
-                                  claim)
-            claim.verify()
-            _commit(spark, table_path, commit, nb, origin_cols,
-                    {b: commit for b in hit}, txn=txn, bucket_on=bk,
-                    vdirs={commit: vdir})
-            return
-        cur = _bucket_paths(table_path, man["buckets"], only=hit,
-                            bases=_bases(man), vdirs=_vdirs(man))
-        if cur:
-            # dv-resolved: rows merge-on-read deleted from these
-            # buckets must stay deleted through the merge (the rewrite
-            # then materializes the deletes, so the new manifest drops
-            # the dv entries of every rewritten bucket)
-            existing = (_read_resolved(spark, table_path, man, only=hit)
-                        .withColumn(BUCKET_COL,
-                                    origin_bucket(bk, nb)))
-        else:  # batch only hits never-seen buckets
-            existing = spark.createDataFrame([], batch.schema)
-        if set(existing.columns) != set(batch.columns):
-            # Schema evolution (Delta mergeSchema analog): align both
-            # sides to the union of columns — historical rows read a
-            # newly-added column as NULL, new rows NULL-fill columns
-            # the batch dropped. Union-with-empty adds the missing
-            # columns without touching any row.
-            existing = existing.unionByName(
-                spark.createDataFrame([], batch.schema),
-                allowMissingColumns=True)
-            batch = batch.unionByName(
-                spark.createDataFrame([], existing.schema),
-                allowMissingColumns=True)
-        if mode == "latest_wins":
-            from ..operators.dedup import upsert_latest
-
-            merged = upsert_latest(existing, batch, origin_cols)
-        else:
-            merged = idempotent_upsert(existing, batch, origin_cols)
-        vdir = _write_version(merged, table_path, commit, len(hit), claim)
-        claim.verify()  # abort, not clobber, if our lease was usurped
-        dv = {b: d for b, d in _dv(man).items() if b not in set(hit)}
-        _commit(spark, table_path, commit, nb, origin_cols,
-                {**man["buckets"], **{b: commit for b in hit}},
-                bases=_bases(man), txn=txn, bucket_on=bk,
-                vdirs={**_vdirs(man), commit: vdir},
-                dv=dv, dv_bases=_dv_bases(man), dv_rows=_dv_rows(man))
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
+    def _merge(batch: DataFrame, batch_id: int,
+               deletes: DataFrame | None = None) -> None:
         if transform is not None:
             batch = transform(batch)
         spark = batch.sparkSession
@@ -1144,27 +1090,140 @@ def foreach_batch_upsert(table_path: str, origin_cols: Sequence[str],
         if try_local_upsert(spark, table_path, batch, batch_id,
                             list(origin_cols), n_buckets=n_buckets,
                             bucket_cols=bucket_cols,
-                            txn_app_id=txn_app_id, mode=mode):
+                            txn_app_id=txn_app_id, mode=mode,
+                            deletes=deletes):
             return
-        # Optimistic concurrency: claim the next commit number, merge
-        # against the manifest that number succeeds, publish. A lost
-        # race (another stream, or a maintenance job like compact)
-        # surfaces as ConcurrentCommitError -> rebase on the NEW
-        # manifest and retry at the next number; nothing is lost on
-        # either side.
-        for _ in range(MAX_COMMIT_RETRIES):
-            man, commit, claim = _acquire_commit(spark, table_path)
-            try:
-                _apply(spark, batch, batch_id, man, commit, claim)
-                return
-            except ConcurrentCommitError:
-                continue
-            finally:
-                claim.release()
-        raise RuntimeError(
-            f"merge into {table_path} was usurped {MAX_COMMIT_RETRIES} "
-            "times; raise CLAIM_STALE_S above the batch write time")
+
+        def attempt(man: dict | None, commit: int,
+                    claim: CommitClaim) -> None:
+            txn = dict((man or {}).get("txn", {}))
+            if txn_app_id is not None:
+                applied = txn.get(txn_app_id)
+                if applied is not None and batch_id <= applied:
+                    return  # checkpoint replay of an applied batch
+                txn[txn_app_id] = batch_id
+            _merge_attempt(
+                spark, table_path, man, commit, claim, origin_cols,
+                batch, deletes, txn=txn, mode=mode,
+                nb=man["n_buckets"] if man else (n_buckets
+                                                 or DEFAULT_N_BUCKETS),
+                bk=_bucket_on(man) if man else list(bucket_cols
+                                                    or origin_cols))
+
+        _retry_commit(spark, table_path, attempt, "merge into")
     return _merge
+
+
+def _retry_commit(spark: SparkSession, table_path: str,
+                  attempt: Callable, what: str):
+    """Optimistic concurrency: claim the next commit number and run
+    `attempt(man, commit, claim)` against the manifest it succeeds. A
+    lost race (another stream, or a maintenance job like compact)
+    surfaces as ConcurrentCommitError -> rebase on the NEW manifest
+    and retry at the next number; nothing is lost on either side."""
+    for _ in range(MAX_COMMIT_RETRIES):
+        man, commit, claim = _acquire_commit(spark, table_path)
+        try:
+            return attempt(man, commit, claim)
+        except ConcurrentCommitError:
+            continue
+        finally:
+            claim.release()
+    raise RuntimeError(
+        f"{what} {table_path} was usurped {MAX_COMMIT_RETRIES} times; "
+        "raise CLAIM_STALE_S above its write time")
+
+
+def _merge_attempt(spark: SparkSession, table_path: str, man: dict | None,
+                   commit: int, claim: CommitClaim,
+                   origin_cols: Sequence[str], batch: DataFrame | None,
+                   deletes: DataFrame | None, *, txn: dict, nb: int,
+                   bk: Sequence[str], mode: str = "existing_wins",
+                   rewrite: bool = False, op: str = "merge") -> None:
+    """One commit upserting `batch` (None: no upsert) and deleting the
+    `deletes` keys — the body of every merge and key delete. Deleted
+    keys outside the upsert's buckets are rewritten out with
+    `rewrite`, else they become dv entries."""
+    origin = list(origin_cols)
+    tagged = dead = None
+    if batch is not None:
+        batch = batch.withColumn(BUCKET_COL, origin_bucket(bk, nb))
+        tagged = batch.select(BUCKET_COL, F.lit(False).alias("d"))
+    if man is None:  # creation: nothing stored for deletes to hit
+        hit = sorted(r[0] for r in tagged.distinct().collect())
+        vdir = _write_version(batch, table_path, commit, len(hit), claim)
+        claim.verify()
+        _commit(spark, table_path, commit, nb, origin,
+                {b: commit for b in hit}, txn=txn, bucket_on=bk,
+                vdirs={commit: vdir})
+        return
+    if deletes is not None:
+        dead = _keyed(deletes, origin, bk, nb)
+        tag = dead.select(BUCKET_COL, F.lit(True).alias("d"))
+        tagged = tag if tagged is None else tagged.union(tag)
+    # Buckets of the batch and of the deletes, in ONE collect that is
+    # O(n_buckets) regardless of table or key-set size.
+    pairs = tagged.distinct().collect() if tagged is not None else []
+    upserted = {b for b, d in pairs if not d}
+    gone = {b for b, d in pairs if d} & set(man["buckets"])
+    hit = sorted(upserted | (gone if rewrite else set()))
+    dv_hit = sorted(gone - set(hit))
+    buckets, vdirs = dict(man["buckets"]), _vdirs(man)
+    if hit:
+        if set(hit) & set(buckets):
+            # dv-resolved: rows merge-on-read deleted from these
+            # buckets must stay deleted through the merge (the rewrite
+            # then materializes the deletes, so the new manifest drops
+            # the dv entries of every rewritten bucket), and so must
+            # the keys this commit deletes
+            merged = (_read_resolved(spark, table_path, man, only=hit)
+                      .withColumn(BUCKET_COL, origin_bucket(bk, nb)))
+            if gone & set(hit):
+                merged = merged.join(dead.select(*origin), origin,
+                                     "left_anti")
+        else:  # batch only hits never-seen buckets
+            merged = spark.createDataFrame([], batch.schema)
+        if batch is not None and set(merged.columns) != set(batch.columns):
+            # Schema evolution (Delta mergeSchema analog): align both
+            # sides to the union of columns — historical rows read a
+            # newly-added column as NULL, new rows NULL-fill columns
+            # the batch dropped. Union-with-empty adds the missing
+            # columns without touching any row.
+            merged = merged.unionByName(
+                spark.createDataFrame([], batch.schema),
+                allowMissingColumns=True)
+            batch = batch.unionByName(
+                spark.createDataFrame([], merged.schema),
+                allowMissingColumns=True)
+        if batch is not None and mode == "latest_wins":
+            from ..operators.dedup import upsert_latest
+
+            merged = upsert_latest(merged, batch, origin)
+        elif batch is not None:
+            merged = idempotent_upsert(merged, batch, origin)
+        vdirs[commit] = _write_version(merged, table_path, commit,
+                                       len(hit), claim)
+        buckets.update({b: commit for b in hit})
+        if set(hit) - upserted:
+            # a bucket its deletes emptied writes no directory: drop
+            # it from the mapping instead of dangling the path
+            written = _written_rows(f"{table_path}/{vdirs[commit]}")
+            for b in set(hit) - upserted:
+                if not written.get(b):
+                    buckets.pop(b)
+    dv = {b: d for b, d in _dv(man).items() if b not in set(hit)}
+    dv_rows = _dv_rows(man)
+    if dv_hit:
+        # deleted keys in every other bucket: dv entries of this same
+        # commit, O(deleted keys) written, no data file touched
+        dvdir, counts = _write_dv(spark, table_path, man, dead, dv_hit,
+                                  commit, claim)
+        dv.update({b: dvdir for b in dv_hit})
+        dv_rows = {**dv_rows, **counts}
+    claim.verify()  # abort, not clobber, if our lease was usurped
+    _commit(spark, table_path, commit, nb, origin, buckets, op=op,
+            bases=_bases(man), txn=txn, bucket_on=bk, vdirs=vdirs,
+            dv=dv, dv_bases=_dv_bases(man), dv_rows=dv_rows)
 
 
 def _manifest_at(spark: SparkSession, table_path: str, commit: int) -> dict:
@@ -1305,22 +1364,15 @@ def delete_origins(spark: SparkSession, table_path: str,
         raise ValueError(f"unknown delete strategy {strategy!r}")
     if read_table_manifest(spark, table_path) is None:
         raise ValueError(f"{table_path} has no commits")
-    attempt = _delete_attempt if strategy == "rewrite" else _delete_attempt_dv
-    commit_id = None
-    for _ in range(MAX_COMMIT_RETRIES):
-        man, commit, claim = _acquire_commit(spark, table_path)
-        try:
-            commit_id = attempt(spark, table_path, keys, man,
-                                commit, claim)
-            break
-        except ConcurrentCommitError:
-            continue  # rebase on the new manifest and retry
-        finally:
-            claim.release()
-    if commit_id is None:
-        raise RuntimeError(
-            f"delete on {table_path} was usurped {MAX_COMMIT_RETRIES} "
-            "times; raise CLAIM_STALE_S above the delete write time")
+
+    def attempt(man: dict, commit: int, claim: CommitClaim) -> int:
+        _merge_attempt(spark, table_path, man, commit, claim,
+                       man["origin"], None, keys, txn=man.get("txn"),
+                       nb=man["n_buckets"], bk=_bucket_on(man),
+                       rewrite=strategy == "rewrite", op="delete")
+        return commit
+
+    commit_id = _retry_commit(spark, table_path, attempt, "delete on")
     if vacuum:
         vacuum_table(spark, table_path, keep_manifests=1)
     return commit_id
@@ -1345,105 +1397,79 @@ def delete_where(spark: SparkSession, table_path: str, condition,
     if man is None:
         raise ValueError(f"{table_path} has no commits")
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    origin = list(man["origin"])
-    kc = origin + [c for c in _bucket_on(man) if c not in origin]
-    keys = (read_merged_table(spark, table_path)
-            .where(cond).select(*kc))
-    return delete_origins(spark, table_path, keys, vacuum=vacuum,
-                          strategy=strategy)
+    return delete_origins(spark, table_path,
+                          read_merged_table(spark, table_path).where(cond),
+                          vacuum=vacuum, strategy=strategy)
 
 
-def _delete_attempt(spark: SparkSession, table_path: str, keys: DataFrame,
-                    man: dict, commit: int, claim: CommitClaim) -> int:
-    nb, origin = man["n_buckets"], list(man["origin"])
-    bk = _bucket_on(man)
-    # A partial-key-bucketed table (bucket_on outside the origin)
-    # hashes buckets on columns the origin alone does not carry: the
-    # caller's keys frame must include them (the secondary index's
-    # removals do — its origin embeds the value column).
-    kc = origin + [c for c in bk if c not in origin]
-    keys = (keys.select(*kc).dropDuplicates(origin)
+def _key_cols(have: Sequence[str], origin: Sequence[str],
+              bk: Sequence[str]) -> list[str]:
+    """A delete key's columns: the origin plus the bucket columns
+    outside it (a secondary index's value, a view's participant_uuid).
+    A key lacking one (`have` names its columns) raises instead of
+    deleting from the wrong bucket."""
+    kc = list(origin) + [c for c in bk if c not in origin]
+    missing = [c for c in kc if c not in have]
+    if missing:
+        raise ValueError(
+            f"delete keys lack column(s) {missing}: a key must carry "
+            f"the origin and bucket columns {kc}")
+    return kc
+
+
+def _keyed(keys: DataFrame, origin: Sequence[str], bk: Sequence[str],
+           nb: int) -> DataFrame:
+    """`keys` projected to its key columns, with each key's bucket id
+    (duplicates kept: only the dv write needs them gone)."""
+    return (keys.select(*_key_cols(keys.columns, origin, bk))
             .withColumn(BUCKET_COL, origin_bucket(bk, nb)))
-    # O(n_buckets) regardless of key-set size, like the merge path.
-    hit = sorted(r[0] for r in keys.select(BUCKET_COL).distinct().collect()
-                 if r[0] in man["buckets"])
-    if not hit:  # nothing stored under any of these keys: empty commit
-        claim.verify()
-        _commit(spark, table_path, commit, nb, origin, man["buckets"],
-                op="delete", bases=_bases(man), txn=man.get("txn"),
-                bucket_on=bk, vdirs=_vdirs(man), dv=_dv(man),
-                dv_bases=_dv_bases(man), dv_rows=_dv_rows(man))
-        return commit
-    existing = (_read_resolved(spark, table_path, man, only=hit)
-                .withColumn(BUCKET_COL, origin_bucket(bk, nb)))
-    remaining = existing.join(keys.select(*origin), origin, "left_anti")
-    vdir = _write_version(remaining, table_path, commit, len(hit), claim)
-    # A fully-emptied bucket writes no directory — drop it from the
-    # mapping instead of pointing readers at a missing path.
-    survived = {r[0] for r in
-                remaining.select(BUCKET_COL).distinct().collect()}
-    buckets = {**man["buckets"],
-               **{b: commit for b in hit if b in survived}}
-    for b in hit:
-        if b not in survived:
-            buckets.pop(b, None)
-    claim.verify()
-    dv = {b: d for b, d in _dv(man).items() if b not in set(hit)}
-    _commit(spark, table_path, commit, nb, origin, buckets, op="delete",
-            bases=_bases(man), txn=man.get("txn"), bucket_on=bk,
-            vdirs={**_vdirs(man), commit: vdir},
-            dv=dv, dv_bases=_dv_bases(man), dv_rows=_dv_rows(man))
-    return commit
 
 
-def _delete_attempt_dv(spark: SparkSession, table_path: str,
-                       keys: DataFrame, man: dict, commit: int,
-                       claim: CommitClaim) -> int:
-    """Merge-on-read delete: write the keys (unioned with each hit
+def _written_rows(path: str) -> dict[int, int]:
+    """Rows per bucket of a directory this process just wrote, read
+    from the parquet footers of its `bucket=<b>` leaves (the reader
+    `cdf_source` uses) — the answer is in hand, so no Spark job
+    re-reads it. A bucket the write left empty has no leaf."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    from .cdf_source import _fs_path
+
+    fs, root = _fs_path(path)
+    out: dict[int, int] = {}
+    for i in fs.get_file_info(pafs.FileSelector(root, recursive=True,
+                                                allow_not_found=True)):
+        leaf = i.path.rsplit("/", 2)[-2]
+        if i.path.endswith(".parquet") and leaf.startswith(f"{BUCKET_COL}="):
+            with fs.open_input_file(i.path) as f:
+                b = int(leaf.split("=", 1)[1])
+                out[b] = out.get(b, 0) + pq.read_metadata(f).num_rows
+    return out
+
+
+def _write_dv(spark: SparkSession, table_path: str, man: dict,
+              keyed: DataFrame, hit: Sequence[int], commit: int,
+              claim: CommitClaim) -> tuple[str, dict[int, int]]:
+    """Write `keyed`'s keys in the `hit` buckets (unioned with each
     bucket's existing dv, so one dv dir per bucket always suffices)
-    into a fresh writer-unique dv directory and republish the
-    manifest with the SAME data versions. No data file is read or
-    written — cost is O(existing dv + new keys), never O(bucket)."""
-    nb, origin = man["n_buckets"], list(man["origin"])
-    bk = _bucket_on(man)
-    kc = origin + [c for c in bk if c not in origin]
-    keyed = (keys.select(*kc).dropDuplicates(origin)
-             .withColumn(BUCKET_COL, origin_bucket(bk, nb)))
-    hit = sorted(r[0] for r in
-                 keyed.select(BUCKET_COL).distinct().collect()
-                 if r[0] in man["buckets"])
-    if not hit:  # nothing stored under any of these keys: empty commit
-        claim.verify()
-        _commit(spark, table_path, commit, nb, origin, man["buckets"],
-                op="delete", bases=_bases(man), txn=man.get("txn"),
-                bucket_on=bk, vdirs=_vdirs(man), dv=_dv(man),
-                dv_bases=_dv_bases(man), dv_rows=_dv_rows(man))
-        return commit
+    into a fresh writer-unique dv directory. Returns the directory
+    name and its absolute per-bucket key counts — the manifest's
+    `dv_rows`, which let `maybe_compact` bound dv growth without
+    reading any dv later."""
+    origin, bk = list(man["origin"]), _bucket_on(man)
+    kc = [c for c in keyed.columns if c != BUCKET_COL]
     new_keys = keyed.where(F.col(BUCKET_COL).isin([int(b) for b in hit]))
     prior_paths = _dv_paths(table_path, man, only=hit)
     if prior_paths:
-        prior = (spark.read.parquet(*prior_paths).select(*kc)
-                 .withColumn(BUCKET_COL, origin_bucket(bk, nb)))
-        new_keys = (new_keys.unionByName(prior)
-                    .dropDuplicates(origin))
+        new_keys = new_keys.unionByName(
+            read_parquet_fast(spark, *prior_paths).select(*kc)
+            .withColumn(BUCKET_COL, origin_bucket(bk, man["n_buckets"])))
+    new_keys = new_keys.dropDuplicates(origin)
     dvdir = f"dv{commit:08d}-{claim.writer_id[:8]}"
     (new_keys.repartition(max(len(hit), 1), F.col(BUCKET_COL))
      .write.mode("overwrite").partitionBy(BUCKET_COL)
      .parquet(f"{table_path}/{dvdir}"))
-    # absolute per-bucket key counts (the dir was just written, so the
-    # count is a metadata-cheap scan of O(dv) rows) — lets
-    # `maybe_compact` bound dv growth without reading any dv later
-    counts = {int(r[0]): int(r[1]) for r in
-              (spark.read.parquet(f"{table_path}/{dvdir}")
-               .groupBy(BUCKET_COL).count().collect())}
-    claim.verify()
-    dv = {**_dv(man), **{b: dvdir for b in hit}}
-    _commit(spark, table_path, commit, nb, origin, man["buckets"],
-            op="delete", bases=_bases(man), txn=man.get("txn"),
-            bucket_on=bk, vdirs=_vdirs(man), dv=dv,
-            dv_bases=_dv_bases(man),
-            dv_rows={**_dv_rows(man), **counts})
-    return commit
+    return dvdir, _written_rows(f"{table_path}/{dvdir}")
 
 
 def compact_table(spark: SparkSession, table_path: str,
@@ -1466,38 +1492,30 @@ def compact_table(spark: SparkSession, table_path: str,
     Clustering holds until a later merge rewrites a bucket."""
     if read_table_manifest(spark, table_path) is None:
         return  # nonexistent table: no-op, and no _log debris
-    for _ in range(MAX_COMMIT_RETRIES):
-        man, commit, claim = _acquire_commit(spark, table_path)
-        try:
-            if man is None:
-                return
-            # dv-resolved: compaction materializes pending merge-on-
-            # read deletes, so the new manifest carries no dv at all
-            df = (_read_resolved(spark, table_path, man)
-                  .withColumn(BUCKET_COL,
-                              origin_bucket(_bucket_on(man),
-                                            man["n_buckets"])))
-            vdir = _write_version(df, table_path, commit,
-                                  len(man["buckets"]), claim,
-                                  sort_cols=cluster_by)
-            live = set(man["buckets"])
-            if _dv(man):
-                # a fully dv-deleted bucket writes no directory: drop
-                # it from the mapping instead of dangling the path
-                live = {r[0] for r in df.select(BUCKET_COL)
-                        .distinct().collect()}
-            claim.verify()
-            _commit(spark, table_path, commit, man["n_buckets"],
-                    man["origin"],
-                    {b: commit for b in man["buckets"] if b in live},
-                    op="compact", txn=man.get("txn"),
-                    bucket_on=man.get("bucket_on"),
-                    vdirs={commit: vdir})
-            break
-        except ConcurrentCommitError:
-            continue
-        finally:
-            claim.release()
+
+    def attempt(man: dict, commit: int, claim: CommitClaim) -> None:
+        # dv-resolved: compaction materializes pending merge-on-read
+        # deletes, so the new manifest carries no dv at all
+        df = (_read_resolved(spark, table_path, man)
+              .withColumn(BUCKET_COL, origin_bucket(_bucket_on(man),
+                                                    man["n_buckets"])))
+        vdir = _write_version(df, table_path, commit,
+                              len(man["buckets"]), claim,
+                              sort_cols=cluster_by)
+        live = set(man["buckets"])
+        if _dv(man):
+            # a fully dv-deleted bucket writes no directory: drop it
+            # from the mapping instead of dangling the path
+            live = {b for b, n in
+                    _written_rows(f"{table_path}/{vdir}").items() if n}
+        claim.verify()
+        _commit(spark, table_path, commit, man["n_buckets"],
+                man["origin"],
+                {b: commit for b in man["buckets"] if b in live},
+                op="compact", txn=man.get("txn"),
+                bucket_on=man.get("bucket_on"), vdirs={commit: vdir})
+
+    _retry_commit(spark, table_path, attempt, "compaction of")
     if vacuum:
         vacuum_table(spark, table_path)
 
@@ -1512,29 +1530,21 @@ def rebucket_table(spark: SparkSession, table_path: str,
     commit-claim protocol)."""
     if read_table_manifest(spark, table_path) is None:
         return  # nonexistent table: no-op, and no _log debris
-    for _ in range(MAX_COMMIT_RETRIES):
-        man, commit, claim = _acquire_commit(spark, table_path)
-        try:
-            if man is None:
-                return
-            df = (_read_resolved(spark, table_path, man)
-                  .withColumn(BUCKET_COL,
-                              origin_bucket(_bucket_on(man),
-                                            new_n_buckets)))
-            hit = sorted(r[0] for r in
-                         df.select(BUCKET_COL).distinct().collect())
-            vdir = _write_version(df, table_path, commit, len(hit), claim)
-            claim.verify()
-            _commit(spark, table_path, commit, new_n_buckets,
-                    man["origin"], {b: commit for b in hit},
-                    op="rebucket", txn=man.get("txn"),
-                    bucket_on=man.get("bucket_on"),
-                    vdirs={commit: vdir})
-            break
-        except ConcurrentCommitError:
-            continue
-        finally:
-            claim.release()
+
+    def attempt(man: dict, commit: int, claim: CommitClaim) -> None:
+        df = (_read_resolved(spark, table_path, man)
+              .withColumn(BUCKET_COL, origin_bucket(_bucket_on(man),
+                                                    new_n_buckets)))
+        vdir = _write_version(df, table_path, commit, new_n_buckets,
+                              claim)
+        live = _written_rows(f"{table_path}/{vdir}")
+        claim.verify()
+        _commit(spark, table_path, commit, new_n_buckets,
+                man["origin"], {b: commit for b, n in live.items() if n},
+                op="rebucket", txn=man.get("txn"),
+                bucket_on=man.get("bucket_on"), vdirs={commit: vdir})
+
+    _retry_commit(spark, table_path, attempt, "rebucket of")
     if vacuum:
         vacuum_table(spark, table_path)
 

@@ -164,7 +164,7 @@ def upsert_rows_local(spark: SparkSession, table_path: str,
                       txn_app_id: str | None = None,
                       batch_id: int | None = None,
                       mode: str = "latest_wins",
-                      delete_keys: Sequence[tuple] | None = None) -> None:
+                      delete_keys: Sequence[Mapping] | None = None) -> None:
     """Merge a small list of row dicts into a versioned merge table
     WITHOUT launching Spark jobs — same claims, same manifest, same
     layout as `foreach_batch_upsert`, executed with pyarrow on the
@@ -179,10 +179,12 @@ def upsert_rows_local(spark: SparkSession, table_path: str,
     policy, deletion vectors of rewritten buckets applied and
     materialized, dv/vdir/bases/txn manifest fields carried forward.
 
-    `delete_keys` (origin tuples) are dropped during the rewrite —
-    the upsert+delete in ONE atomic commit that the engine path needs
-    two commits (dv tombstone + merge) for; used by the MV fold's
-    bounded-delta fast path for groups whose count reaches zero.
+    `delete_keys` (dicts over the origin columns plus any bucket
+    column outside them) leave the table in the SAME atomic commit as
+    the upsert, exactly as `foreach_batch_upsert`'s ``deletes=`` does
+    on the engine path: keys in buckets the upsert rewrites drop
+    during the rewrite, keys in other stored buckets become
+    deletion-vector entries of the commit.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -223,6 +225,15 @@ def upsert_rows_local(spark: SparkSession, table_path: str,
 #: foreach_batch_upsert — smaller than MAX_LOCAL_ROWS because the
 #: probe pays a limit-collect either way
 SMALL_BATCH_ROWS = 512
+#: probe column telling a delete key from a batch row
+_DEAD = "__local_merge_dead"
+
+
+def probe_rows(df, n: int) -> list:
+    """At most `n` rows of `df` in ONE job (a plain limit-collect runs
+    a job per 4x scale-up round over the partitions); the single
+    partition still stops reading at the limit."""
+    return df.coalesce(1).limit(n).collect()
 
 
 def _has_temporal(dt) -> bool:
@@ -245,35 +256,50 @@ def _has_temporal(dt) -> bool:
 def try_local_upsert(spark: SparkSession, table_path: str, batch,
                      batch_id: int, origin_cols: Sequence[str], *,
                      n_buckets: int | None, bucket_cols,
-                     txn_app_id: str | None, mode: str) -> bool:
+                     txn_app_id: str | None, mode: str,
+                     deletes=None) -> bool:
     """Automatic bounded-batch fast path for `foreach_batch_upsert`:
-    probe the batch with a limit-collect (CollectLimit early-stops, so
-    a big batch pays one cheap partial job and falls back); a small
+    probe the batch and its `deletes` key frame with ONE limit-collect
+    (a big batch pays one cheap partial job and falls back); a small
     batch commits DRIVER-SIDE through `upsert_rows_local` — the
     day-run refresh merges (views, exports, imputed) collapse from
     3-4 distributed jobs each to the one probe job. Falls back
-    (returns False) on: >SMALL_BATCH_ROWS rows, intra-batch duplicate
-    keys (engine dedupe order would apply), temporal column types, a
-    bucket-key type outside the local hash's domain, or an existing
-    table whose data-file schema differs from the batch's (schema
-    evolution stays on the engine's union-align path)."""
+    (returns False) on: >SMALL_BATCH_ROWS rows and deletes,
+    intra-batch duplicate keys (engine dedupe order would apply),
+    temporal column types, a bucket-key type outside the local hash's
+    domain, or an existing table whose data-file schema differs from
+    the batch's (schema evolution stays on the engine's union-align
+    path)."""
     if _has_temporal(batch.schema):
         return False
-    rows = batch.limit(SMALL_BATCH_ROWS + 1).collect()
+    man = _ing.read_table_manifest(spark, table_path)
+    if man is not None and set(man["origin"]) != set(origin_cols):
+        return False
+    probe = batch
+    if deletes is not None and man is not None:
+        from pyspark.sql import functions as F
+
+        dead = deletes.select(*_ing._key_cols(
+            deletes.columns, origin_cols, _ing._bucket_on(man)))
+        if _has_temporal(dead.schema):
+            return False
+        probe = batch.withColumn(_DEAD, F.lit(False)).unionByName(
+            dead.withColumn(_DEAD, F.lit(True)), allowMissingColumns=True)
+    rows = probe_rows(probe, SMALL_BATCH_ROWS + 1)
     if len(rows) > SMALL_BATCH_ROWS:
         return False
-    dicts = [r.asDict(recursive=True) for r in rows]
+    dicts, dead_keys = [], []
+    for r in rows:
+        d = r.asDict(recursive=True)
+        (dead_keys if d.pop(_DEAD, False) else dicts).append(d)
     keys = [tuple(d.get(c) for c in origin_cols) for d in dicts]
     if len(set(keys)) != len(keys):
         return False
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(batch.schema)
-    man = _ing.read_table_manifest(spark, table_path)
     names = set(batch.schema.names)
     if man is not None:
-        if set(man["origin"]) != set(origin_cols):
-            return False
         import pyarrow.parquet as pq
         from pyarrow import fs as pafs
 
@@ -303,7 +329,7 @@ def try_local_upsert(spark: SparkSession, table_path: str, batch,
         upsert_rows_local(spark, table_path, dicts, schema, origin_cols,
                           n_buckets=n_buckets, bucket_cols=bucket_cols,
                           txn_app_id=txn_app_id, batch_id=batch_id,
-                          mode=mode)
+                          mode=mode, delete_keys=dead_keys)
     except TypeError:
         return False  # bucket-key type outside the local hash domain
     except LocalSchemaMismatch:
@@ -353,22 +379,17 @@ def read_live_rows_local(table_path: str, man: dict,
 
     origin = list(man["origin"])
     have = [b for b in buckets if b in man["buckets"]]
-    dv_map = _ing._dv(man)
     out: list[dict] = []
     for p in _ing._bucket_paths(table_path, man["buckets"], only=have,
                                 bases=_ing._bases(man),
                                 vdirs=_ing._vdirs(man)):
         b = int(p.rsplit("=", 1)[-1])
         rows = _read_bucket_rows(pa, pq, _fs_path, p, names)
-        d = dv_map.get(b)
-        if d is not None:
-            dv_root = _ing._dv_bases(man).get(d, table_path)
-            dead = {tuple(r.get(c) for c in origin)
-                    for r in _read_bucket_rows(
-                        pa, pq, _fs_path,
-                        f"{dv_root}/{d}/{_ing.BUCKET_COL}={b}", names)}
-            rows = [r for r in rows
-                    if tuple(r.get(c) for c in origin) not in dead]
+        dead = {tuple(r.get(c) for c in origin)
+                for r in _dv_rows_local(pa, pq, _fs_path, table_path,
+                                        man, b)}
+        rows = [r for r in rows
+                if tuple(r.get(c) for c in origin) not in dead]
         for r in rows:
             for c in names:
                 r.setdefault(c, None)
@@ -397,7 +418,7 @@ def _read_bucket_rows(pa, pq, fs_path, path: str, names) -> list[dict]:
 def _apply_local(spark, table_path, rows, schema, origin_cols, man,
                  commit, claim, n_buckets, bucket_cols, txn_app_id,
                  batch_id, mode, pa, pq, fs_path,
-                 delete_keys: Sequence[tuple] = ()) -> None:
+                 delete_keys: Sequence[Mapping] = ()) -> None:
     txn = dict((man or {}).get("txn", {}))
     if txn_app_id is not None and batch_id is not None:
         applied = txn.get(txn_app_id)
@@ -422,41 +443,23 @@ def _apply_local(spark, table_path, rows, schema, origin_cols, man,
         slot = by_bucket.setdefault(b, {})
         if mode == "latest_wins" or key not in slot:
             slot[key] = dict(r)
-    dead_keys = set(delete_keys)
-    oi = {c: i for i, c in enumerate(origin_cols)}
-    for key in dead_keys:
-        # a deleted group's bucket must be rewritten even when no kept
-        # row lands there, or the delete would silently not happen
-        b = local_bucket([key[oi[c]] for c in bk], nb)
-        by_bucket.setdefault(b, {})
     hit = sorted(by_bucket)
+    # deleted keys by bucket (nothing is stored before the first commit)
+    kc = list(origin_cols) + [c for c in bk if c not in origin_cols]
+    dead: dict[int, dict[tuple, dict]] = {}
+    for d in (delete_keys if man is not None else ()):
+        _ing._key_cols(d, origin_cols, bk)
+        b = local_bucket([d[c] for c in bk], nb)
+        dead.setdefault(b, {})[tuple(d[c] for c in origin_cols)] = d
+    dv_hit = sorted(b for b in dead
+                    if b not in by_bucket and b in man["buckets"])
 
     names = [f.name for f in schema]
     if man is not None:
         # merge against the existing hit buckets, dv-resolved
-        dv_map = _ing._dv(man)
-        dv_dead: dict[int, set] = {}
         for b in hit:
-            d = dv_map.get(b)
-            if d is None:
-                continue
-            dv_root = _ing._dv_bases(man).get(d, table_path)
-            dead_rows = _read_bucket_rows(
-                pa, pq, fs_path, f"{dv_root}/{d}/{_ing.BUCKET_COL}={b}",
-                names)
-            dv_dead[b] = {tuple(r.get(c) for c in origin_cols)
-                          for r in dead_rows}
-        paths = _ing._bucket_paths(table_path, man["buckets"],
-                                   only=hit, bases=_ing._bases(man),
-                                   vdirs=_ing._vdirs(man))
-        existing_by_path = {p: _read_bucket_rows(pa, pq, fs_path, p,
-                                                 names)
-                            for p in paths}
-        for p, existing in existing_by_path.items():
-            b = int(p.rsplit("=", 1)[-1])
             slot = by_bucket[b]
-            dead = dv_dead.get(b, set())
-            for er in existing:
+            for er in read_live_rows_local(table_path, man, [b], names):
                 wider = set(er) - set(names)
                 if wider:
                     # the bucket holds columns the batch lacks (schema
@@ -466,11 +469,9 @@ def _apply_local(spark, table_path, rows, schema, origin_cols, man,
                     raise LocalSchemaMismatch(
                         f"bucket {b} of {table_path} carries column(s) "
                         f"{sorted(wider)} outside the batch schema")
-                for c in names:
-                    er.setdefault(c, None)
                 key = tuple(er.get(c) for c in origin_cols)
-                if key in dead or key in dead_keys:
-                    continue  # deleted: materialized by this rewrite
+                if key in dead.get(b, ()):
+                    continue  # deleted: dropped by this rewrite
                 if key in slot:
                     if mode == "existing_wins":
                         slot[key] = er
@@ -480,15 +481,30 @@ def _apply_local(spark, table_path, rows, schema, origin_cols, man,
     writer = claim.writer_id[:8]
     vdir = f"v{commit:08d}-{writer}"
     fs, root = fs_path(table_path)
-    for b in hit:
-        d = posixpath.join(root, vdir, f"{_ing.BUCKET_COL}={b}")
+
+    def _write(d, pylist, sch):
         fs.create_dir(d, recursive=True)
-        t = pa.Table.from_pylist(
-            [{c: r.get(c) for c in names}
-             for r in by_bucket[b].values()], schema=schema)
         fname = f"part-00000-{uuid.uuid4().hex}.parquet"
         with fs.open_output_stream(posixpath.join(d, fname)) as f:
-            pq.write_table(t, f)
+            pq.write_table(pa.Table.from_pylist(pylist, schema=sch), f)
+
+    for b in hit:
+        _write(posixpath.join(root, vdir, f"{_ing.BUCKET_COL}={b}"),
+               [{c: r.get(c) for c in names}
+                for r in by_bucket[b].values()], schema)
+    # deleted keys in the other stored buckets: dv entries of this
+    # commit, each unioned with the bucket's existing dv
+    dvdir = f"dv{commit:08d}-{writer}"
+    dv_counts = {}
+    for b in dv_hit:
+        keys = {tuple(r.get(c) for c in origin_cols): r
+                for r in _dv_rows_local(pa, pq, fs_path, table_path,
+                                        man, b)}
+        keys.update(dead[b])
+        _write(posixpath.join(root, dvdir, f"{_ing.BUCKET_COL}={b}"),
+               [{c: r.get(c) for c in kc} for r in keys.values()],
+               pa.schema([schema.field(c) for c in kc]))
+        dv_counts[b] = len(keys)
 
     claim.verify()  # abort, not clobber, if our lease was usurped
     if man is None:
@@ -498,9 +514,21 @@ def _apply_local(spark, table_path, rows, schema, origin_cols, man,
         return
     dv = {b: d for b, d in _ing._dv(man).items()
           if b not in set(hit)}
+    dv.update({b: dvdir for b in dv_hit})
     _ing._commit(spark, table_path, commit, nb, origin_cols,
                  {**man["buckets"], **{b: commit for b in hit}},
                  bases=_ing._bases(man), txn=txn, bucket_on=bk,
                  vdirs={**_ing._vdirs(man), commit: vdir},
                  dv=dv, dv_bases=_ing._dv_bases(man),
-                 dv_rows=_ing._dv_rows(man))
+                 dv_rows={**_ing._dv_rows(man), **dv_counts})
+
+
+def _dv_rows_local(pa, pq, fs_path, table_path: str, man: dict,
+                   b: int) -> list[dict]:
+    """The keys bucket `b`'s deletion vector holds ([] without one)."""
+    d = _ing._dv(man).get(b)
+    if d is None:
+        return []
+    dv_root = _ing._dv_bases(man).get(d, table_path)
+    return _read_bucket_rows(pa, pq, fs_path,
+                             f"{dv_root}/{d}/{_ing.BUCKET_COL}={b}", ())

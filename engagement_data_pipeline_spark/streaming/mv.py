@@ -58,9 +58,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ingest import (delete_origins, foreach_batch_upsert,
-                     read_merged_table, read_table_manifest,
-                     table_changes)
+from .ingest import (foreach_batch_upsert, read_merged_table,
+                     read_table_manifest, table_changes)
 
 #: txn app id under which the MV records the last APPLIED source
 #: commit — the refresh replay-skip watermark.
@@ -297,12 +296,12 @@ def _apply_delta_local(spark: SparkSession, mv_path: str, man: dict,
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from .ingest import _bucket_on
-    from .local_merge import (local_bucket, read_live_rows_local,
-                              upsert_rows_local)
+    from .local_merge import (local_bucket, probe_rows,
+                              read_live_rows_local, upsert_rows_local)
 
     if man is None:
         return False
-    drows = delta.limit(_LOCAL_FOLD_MAX + 1).collect()
+    drows = probe_rows(delta, _LOCAL_FOLD_MAX + 1)
     if len(drows) > _LOCAL_FOLD_MAX:
         return False
     if not drows:
@@ -325,7 +324,7 @@ def _apply_delta_local(spark: SparkSession, mv_path: str, man: dict,
         for c in internal:
             folded[c] = (st.get(c) or 0) + (r[c] or 0)
         if folded[_N_COL] == 0:
-            gone.append(key)
+            gone.append(dict(zip(gcols, key)))
         else:
             keep.append(folded)
     upsert_rows_local(spark, mv_path, keep,
@@ -338,10 +337,11 @@ def _apply_delta_local(spark: SparkSession, mv_path: str, man: dict,
 def _apply_delta(spark: SparkSession, mv_path: str, gcols: list[str],
                  metrics: dict[str, tuple[str, str]], delta: DataFrame,
                  txn_version: int, txn_app: str = _MV_TXN) -> None:
-    """Fold a signed group-delta into the MV state table. Delete-first,
-    merge-second: both steps are idempotent per `txn_version`, and only
-    the final merge advances the txn watermark — a crash in between
-    replays the whole fold and converges.
+    """Fold a signed group-delta into the MV state table: ONE commit
+    upserts the folded groups and deletes the groups whose live-row
+    count reached zero (the merge's ``deletes=``), under the
+    `txn_version` watermark — a crash before it replays the whole
+    fold and converges.
 
     Touched groups only: a group absent from the delta cannot change,
     so the state joins in LEFT_OUTER from the delta side — the fold,
@@ -381,14 +381,10 @@ def _apply_delta(spark: SparkSession, mv_path: str, gcols: list[str],
                       *[(F.coalesce(state[c], F.lit(0))
                          + F.coalesce(delta[c], F.lit(0))).alias(c)
                         for c in internal]))
-    gone = folded.where(F.col(_N_COL) == 0).select(*gcols)
-    if not gone.isEmpty():
-        # dv: O(dead groups) tombstones, no bucket rewrite — the merge
-        # below rewrites the same hit buckets and materializes them
-        delete_origins(spark, mv_path, gone, strategy="dv")
     merge = foreach_batch_upsert(mv_path, gcols, txn_app_id=txn_app,
                                  mode="latest_wins")
-    merge(folded.where(F.col(_N_COL) > 0), txn_version)
+    merge(folded.where(F.col(_N_COL) > 0), txn_version,
+          deletes=folded.where(F.col(_N_COL) == 0).select(*gcols))
 
 
 def mv_stream_sink(mv_path: str, group_cols: Sequence[str],
@@ -461,11 +457,8 @@ def mv_stream_sink(mv_path: str, group_cols: Sequence[str],
         if man is not None and batch_id <= int(
                 man.get("txn", {}).get(_MV_STREAM_TXN, -1)):
             # foreachBatch crash-replay of a batch whose fold already
-            # landed: the merge step's txn watermark would skip the
-            # merge, but the delete step has no watermark of its own —
-            # re-applying the delta against the POST-fold state would
-            # drive live groups to __mv_n == 0 and wrongly delete
-            # them. Guard the whole fold, not just the merge.
+            # landed: the fold's one commit would skip under the same
+            # watermark, so return before re-deriving the delta
             return
         plus, minus = _signed_sides(
             prepare, batch, _needed(prepare, source_cols, metrics, gcols))
@@ -498,8 +491,9 @@ def _refresh_recompute(spark: SparkSession, table_path: str,
     bucketed on the group columns, so the affected groups (new AND old
     payload groups of every changed row) map to known buckets — read
     only those, semi-join down to the affected groups, and recompute
-    their aggregates exactly. Groups with no surviving rows leave the
-    view."""
+    their aggregates exactly. Every affected group is deleted in the
+    commit that upserts the recomputed ones, so groups with no
+    surviving rows leave the view."""
     from .ingest import _read_resolved, origin_bucket
 
     affected = (plus.select(*gcols).unionByName(minus.select(*gcols))
@@ -508,25 +502,13 @@ def _refresh_recompute(spark: SparkSession, table_path: str,
     hit = sorted({int(r[0]) for r in
                   affected.select(origin_bucket(gcols, nb).alias("b"))
                   .distinct().collect()} & set(src_man["buckets"]))
-    if hit:
-        live = (_read_resolved(spark, table_path, src_man, only=hit)
-                .join(affected, gcols, "left_semi")
-                .withColumn("sign", F.lit(1)))
-        recomputed = _signed_state(live, gcols, metrics)
-    else:
-        recomputed = None
-    gone = (affected if recomputed is None else
-            affected.join(recomputed.select(*gcols), gcols, "left_anti"))
-    if not gone.isEmpty():
-        delete_origins(spark, mv_path, gone)
+    live = (_read_resolved(spark, table_path, src_man, only=hit)
+            .join(affected, gcols, "left_semi")
+            if hit else plus.limit(0))  # empty: advances the watermark
     merge = foreach_batch_upsert(mv_path, gcols, txn_app_id=_MV_TXN,
                                  mode="latest_wins")
-    if recomputed is not None:
-        merge(recomputed, current)
-    else:  # advance the watermark with an empty batch
-        merge(_signed_state(
-            plus.limit(0).withColumn("sign", F.lit(1)), gcols, metrics),
-            current)
+    merge(_signed_state(live.withColumn("sign", F.lit(1)), gcols,
+                        metrics), current, deletes=affected)
     return current
 
 

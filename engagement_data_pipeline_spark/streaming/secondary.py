@@ -18,10 +18,9 @@ exactly-once idiom the streaming merge uses) and the current one.
 Updates/deletes need the OLD value to remove its posting — that comes
 from the same feed read's `<col>__old` pre-image, which is O(changed
 buckets) because only changed buckets are consulted. Cost per refresh
-is therefore O(changes), never O(table), and a crash between the
-remove and add phases replays idempotently (deletes of absent keys
-are empty commits; the add phase's txn watermark skips an
-already-applied refresh).
+is therefore O(changes), never O(table), and the removals and
+additions land in ONE commit whose txn watermark skips an
+already-applied refresh.
 
 Retention contract: the refresh reads the SOURCE's manifests and
 version data back to the last-applied commit, so the source's
@@ -36,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ingest import (delete_origins, foreach_batch_upsert, lookup_origin,
+from .ingest import (foreach_batch_upsert, lookup_origin,
                      read_table_manifest, read_merged_table,
                      table_changes)
 
@@ -105,16 +104,14 @@ def refresh_value_index(spark: SparkSession, table_path: str,
                 .where(F.col(col).isNotNull()))
     additions = (ch.where(F.col("op").isin("insert", "update"))
                  .select(col, *origin).where(F.col(col).isNotNull()))
-    # remove first, then add: an update whose value did not change
-    # is not in the projected feed at all, and a replayed window is
-    # still idempotent. A pure-insert feed (the common case) skips the delete commit
-    # entirely; the emptiness probe runs on the already-tiny feed.
-    if not removals.isEmpty():
-        # dv: the removal is O(removed postings) — no bucket rewrite
-        delete_origins(spark, index_path, removals, strategy="dv")
+    # remove and add in ONE commit (removals apply first): an update
+    # whose value did not change is not in the projected feed at all,
+    # and a replayed window skips whole under the txn watermark. A
+    # removal outside the added postings' buckets is a dv entry —
+    # O(removed postings), no bucket rewrite.
     merge = foreach_batch_upsert(index_path, _index_key(col, origin),
                                  txn_app_id=_SRC_TXN)
-    merge(additions, current)
+    merge(additions, current, deletes=removals)
     # a moved value's OLD posting lives in a bucket the add phase
     # usually does NOT touch (additions hash by the NEW value), so dv
     # tombstones accumulate there until compaction — run the
@@ -151,16 +148,14 @@ def index_stream_sink(index_path: str, col: str, origin: list[str],
     Bounded catch-up: `drain.drain_changes`; several artifacts from
     one feed scan: `drain.fan_out` (exactly-once per sink).
 
-    Replay safety: the whole batch (remove phase + add phase) is
-    guarded by the index's txn watermark — a foreachBatch crash-replay
-    of an already-applied batch is a complete no-op, so the remove
-    phase can never strip postings the replayed add phase would then
-    skip re-inserting (the same delete-step TOCTOU the MV sink
-    guards). An update whose indexed value did not change
-    (changed_cols excludes `col`) is filtered out entirely — no
-    pointless posting round-trip.
+    Replay safety: removals and additions are one commit under the
+    index's txn watermark — a foreachBatch crash-replay of an
+    already-applied batch is a complete no-op. An update whose
+    indexed value did not change (changed_cols excludes `col`) is
+    filtered out entirely — no pointless posting round-trip.
 
-    `auto_compact` (default on): removals are dv tombstones, and a
+    `auto_compact` (default on): a removal outside the added
+    postings' buckets is a dv tombstone, and a
     posting whose bucket is never re-merged (the value moved away for
     good) would otherwise accumulate dv rows forever — after each
     fold the sink runs `maybe_compact`'s metadata-only check and
@@ -201,24 +196,21 @@ def index_stream_sink(index_path: str, col: str, origin: list[str],
             (F.col("op") == "insert")
             | ((F.col("op") == "update") & touched))
             .select(col, *origin).where(F.col(col).isNotNull()))
-        if not removals.isEmpty():
-            if man is None:
-                # a startingCommit=0 replay is a snapshot diff — pure
-                # inserts — so removals on a nonexistent index prove
-                # the stream started mid-history (startingCommit>0, or
-                # a wiped index dir); bootstrapping from this window
-                # would silently miss every earlier posting
-                raise RuntimeError(
-                    f"{index_path} has no index but the batch carries "
-                    "removals — replay the stream from "
-                    "startingCommit=0 so the bootstrap sees the full "
-                    "history")
-            delete_origins(spark, index_path, removals, strategy="dv")
+        if man is None and not removals.isEmpty():
+            # a startingCommit=0 replay is a snapshot diff — pure
+            # inserts — so removals on a nonexistent index prove the
+            # stream started mid-history (startingCommit>0, or a
+            # wiped index dir); bootstrapping from this window would
+            # silently miss every earlier posting
+            raise RuntimeError(
+                f"{index_path} has no index but the batch carries "
+                "removals — replay the stream from startingCommit=0 "
+                "so the bootstrap sees the full history")
         merge = foreach_batch_upsert(index_path, key,
                                      n_buckets=n_buckets,
                                      txn_app_id=_STREAM_TXN,
                                      bucket_cols=[col])
-        merge(additions, batch_id)
+        merge(additions, batch_id, deletes=removals)
         if auto_compact:
             from .ingest import maybe_compact
             maybe_compact(spark, index_path)

@@ -18,10 +18,13 @@ incremental maintenance EXACT with no history and no group state:
   updates/deletes  →  transform the OLD payloads (the change feed's
                       `<col>__old` pre-images — no snapshot read) to
                       find the output keys that existed before, and
-                      dv-delete any that the fresh output no longer
-                      produces — covering hard deletes, rows the
-                      transform now filters out, and key-changing
-                      rewrites alike.
+                      delete them in the upsert's own commit
+                      (`foreach_batch_upsert`'s ``deletes=`` apply
+                      first, so the keys the fresh output still
+                      produces come back with their new rows) —
+                      covering hard deletes, rows the transform now
+                      filters out, key-changing rewrites and rows
+                      whose bucket column changed alike.
 
 Cost per refresh is O(changed buckets + changed rows) in read,
 shuffle and write — the source is never rescanned — so a 100 TB
@@ -38,11 +41,11 @@ table state (e.g. carry the source key, plus discriminators for
 refresh must re-derive the identical delta).
 
 The derived table is itself a versioned merge table: every refresh is
-an atomic commit carrying the transactional watermark
+ONE atomic commit carrying the transactional watermark
 (`__transform_src` = the last source commit folded in), so crashed or
-replayed refreshes converge — the delete of an already-deleted key is
-a no-op and the merge skips at-or-below-watermark versions. The push
-path (`transform_stream_sink`) maintains the same state directly from
+replayed refreshes converge — the commit, deletes included, skips
+at-or-below-watermark versions. The push path
+(`transform_stream_sink`) maintains the same state directly from
 a `merge_table_changes` retract stream (its `<col>__old` pre-images
 replace the snapshot read) under a STREAM-BATCH-id watermark
 (`__transform_stream`); as with the MV layer, the two watermark
@@ -57,7 +60,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ingest import (delete_origins, foreach_batch_upsert, maybe_compact,
+from .ingest import (foreach_batch_upsert, maybe_compact,
                      read_merged_table, read_table_manifest,
                      table_changes)
 
@@ -66,17 +69,6 @@ from .ingest import (delete_origins, foreach_batch_upsert, maybe_compact,
 _TT_TXN = "__transform_src"
 #: txn app id of the PUSH-maintained twin: a stream BATCH id.
 _TT_STREAM_TXN = "__transform_stream"
-
-
-def _gone_keys(old_out: DataFrame, fresh: DataFrame,
-               dst_man: dict) -> DataFrame:
-    """Output keys that existed before the window but are absent from
-    the fresh output — carrying the derived table's bucket columns so
-    a partial-key-bucketed dv delete lands in the right buckets."""
-    origin = list(dst_man["origin"])
-    carry = sorted(set(origin) | set(dst_man.get("bucket_on") or []))
-    return (old_out.select(*carry).distinct()
-            .join(fresh.select(*origin).distinct(), origin, "left_anti"))
 
 
 def build_transform_table(spark: SparkSession, src_path: str,
@@ -144,20 +136,17 @@ def refresh_transform_table(spark: SparkSession, src_path: str,
     tail = ch.columns[ch.columns.index("changed_cols") + 1:]
     payload = tail[:len(tail) // 2]
     # fresh output of the window's new payloads, materialized once:
-    # the gone anti-join and the merge would otherwise each re-run
-    # the feed-scan + transform DAG
+    # the merge's probe and its write would otherwise each re-run the
+    # feed-scan + transform DAG
     fresh = transform(
         ch.where(F.col("op").isin("insert", "update"))
         .select(*origin, *payload)).localCheckpoint()
     old_rows = (ch.where(F.col("op").isin("update", "delete"))
                 .select(*origin, *[F.col(f"{c}__old").alias(c)
                                    for c in payload]))
-    gone = _gone_keys(transform(old_rows), fresh, dst_man)
-    if not gone.isEmpty():
-        delete_origins(spark, dst_path, gone, strategy="dv")
     merge = foreach_batch_upsert(dst_path, list(dst_man["origin"]),
                                  txn_app_id=_TT_TXN, mode="latest_wins")
-    merge(fresh, current)
+    merge(fresh, current, deletes=transform(old_rows))
     if auto_compact:
         maybe_compact(spark, dst_path)
     return current
@@ -233,13 +222,10 @@ def transform_stream_sink(dst_path: str,
                   for c in cols}
         old_rows = (batch.where(F.col("op").isin("update", "delete"))
                     .select(*[F.col(old_of[c]).alias(c) for c in cols]))
-        gone = _gone_keys(transform(old_rows), fresh, man)
-        if not gone.isEmpty():
-            delete_origins(spark, dst_path, gone, strategy="dv")
         merge = foreach_batch_upsert(dst_path, list(man["origin"]),
                                      txn_app_id=_TT_STREAM_TXN,
                                      mode="latest_wins")
-        merge(fresh, batch_id)
+        merge(fresh, batch_id, deletes=transform(old_rows))
         if auto_compact:
             maybe_compact(spark, dst_path)
 

@@ -269,7 +269,8 @@ def ann_index_stream_sink(index_path: str,
     quantizer differs (retrain ⇒ rebuild, the standard IVF contract).
     Replay safety: the whole fold is guarded by the cells table's txn
     watermark, so a crash-replayed batch is a complete no-op. Removals
-    are dv tombstones; `auto_compact` materializes them once the
+    ride the additions' commit — a removal outside the added postings'
+    buckets is a dv tombstone; `auto_compact` materializes them once the
     metadata thresholds trip, keeping a long-running sink
     self-maintaining."""
     cents = [(int(c), [float(x) for x in v], float(n)) for c, v, n in cents]
@@ -315,21 +316,18 @@ def ann_index_stream_sink(index_path: str,
                     F.col(id_col).cast("string").alias("vec_id"),
                     F.col(emb_col).alias("embedding"))
             .where(F.col("embedding").isNotNull()))
-        if not removals.isEmpty():
-            if man is None:
-                raise RuntimeError(
-                    f"{index_path} has no index but the batch carries "
-                    "removals — replay the stream from "
-                    "startingCommit=0 so the bootstrap sees the full "
-                    "history")
-            from ..streaming.ingest import delete_origins
-            delete_origins(spark, table, removals, strategy="dv")
+        if man is None and not removals.isEmpty():
+            raise RuntimeError(
+                f"{index_path} has no index but the batch carries "
+                "removals — replay the stream from "
+                "startingCommit=0 so the bootstrap sees the full "
+                "history")
         merge = _ing.foreach_batch_upsert(
             table, ["cell", "vec_id"],
             n_buckets=(n_buckets if n_buckets is not None
                        else default_n_buckets(cents)),
             txn_app_id=_STREAM_TXN, bucket_cols=["cell"])
-        merge(additions, batch_id)
+        merge(additions, batch_id, deletes=removals)
         if auto_compact:
             from ..streaming.ingest import maybe_compact
             maybe_compact(spark, table)
@@ -429,12 +427,10 @@ def refresh_ann_index(spark: SparkSession, table_path: str,
                          F.col(id_col).cast("string").alias("vec_id"),
                          F.col(emb_col).alias("embedding"))
                  .where(F.col("embedding").isNotNull()))
-    if not removals.isEmpty():
-        _ing.delete_origins(spark, table, removals, strategy="dv")
     merge = _ing.foreach_batch_upsert(table, ["cell", "vec_id"],
                                       txn_app_id=_SRC_TXN,
                                       bucket_cols=["cell"])
-    merge(additions, current)
+    merge(additions, current, deletes=removals)
     _ing.maybe_compact(spark, table)
     return current
 

@@ -546,9 +546,9 @@ def _spy_merge(monkeypatch, captured):
     def _spy_fbu(*a, **k):
         inner = orig_fbu(*a, **k)
 
-        def _m(df, ver):
+        def _m(df, ver, **kw):
             captured.append(df)
-            return inner(df, ver)
+            return inner(df, ver, **kw)
         return _m
 
     monkeypatch.setattr(MV, "foreach_batch_upsert", _spy_fbu)

@@ -71,6 +71,29 @@ def test_k3_matrix_cells(spark):
     assert out["p2"]["theme:t1"] == 0
 
 
+def test_k3_matrix_quotes_codes_and_column_names(spark):
+    """K3 is one SQL projection: a code holding `'` or a backtick (and
+    so a header holding one) compiles as a literal and an identifier,
+    and the cells and the int type of every 0/1 column are the same
+    as for plain codes."""
+    schemes = {**SCHEMES, "theme_scheme": ["it's", "a`b", "t2"]}
+    pv = spark.createDataFrame(
+        [("p1", "false", "20", "age_20", "NR", "hi", "it's;a`b"),
+         ("p2", "false", "", "NR", "NR", "yo", None)],
+        "participant_uuid string, consent_withdrawn string, age_raw string, "
+        "age_codes string, age_category_codes string, s01e01_raw string, "
+        "theme_codes string")
+    got = analysis_matrix(pv, CONFIG, schemes)
+    assert got.columns == analysis_matrix_headers(CONFIG, schemes)
+    assert dict(got.dtypes)["theme:a`b"] == "int"
+    out = {r.participant_uuid: r.asDict() for r in got.collect()}
+    assert [out["p1"][f"theme:{c}"] for c in schemes["theme_scheme"]] \
+        == [1, 1, 0]
+    assert [out["p2"][f"theme:{c}"] for c in schemes["theme_scheme"]] \
+        == [0, 0, 0]
+    assert out["p1"]["age_category:NR"] == 1
+
+
 def test_s8_csv_multiformat_parse_route_and_drop(spark):
     csv = spark.createDataFrame(
         [("avf-participant-uuid-1", "hello", "5/1/2024 10:30:00"),    # d/M/yyyy
