@@ -218,6 +218,10 @@ class ConcurrentCommitError(RuntimeError):
     caller must rebase on the new table state and retry."""
 
 
+class CommitUsurpedError(RuntimeError):
+    """An operation lost MAX_COMMIT_RETRIES commit races in a row."""
+
+
 def put_if_absent(spark: SparkSession, path_str: str, text: str) -> bool:
     """Atomically create `path_str` with `text` iff it does not exist.
     Local paths use O_CREAT|O_EXCL (a true atomic arbiter); other
@@ -719,16 +723,30 @@ def _read_resolved(spark: SparkSession, table_path: str, man: dict,
     side is a broadcast-sized key list per touched bucket — bounded,
     because `maybe_compact` materializes pending deletes once the
     manifest's `dv_rows` totals pass its threshold — so the resolve
-    adds one broadcast anti-join, never a shuffle of the data."""
+    adds one broadcast anti-join, never a shuffle of the data.
+
+    A dv hides rows of its own bucket only. A table bucketed outside
+    its origin can hold a key's new row in one bucket while the old
+    row's dv entry sits in another, so there the anti-join also
+    matches the bucket id, which both sides derive from their bucket
+    columns (every dv key carries them)."""
     paths = _bucket_paths(table_path, man["buckets"], only=only,
                           bases=_bases(man), vdirs=_vdirs(man))
     df = _read_buckets(spark, paths)
     dv_paths = _dv_paths(table_path, man, only=only)
     if not dv_paths:
         return df
-    origin = list(man["origin"])
-    dead = (read_parquet_fast(spark, *dv_paths).select(*origin))
-    return df.join(F.broadcast(dead), origin, "left_anti")
+    origin, bk = list(man["origin"]), _bucket_on(man)
+    dead = read_parquet_fast(spark, *dv_paths)
+    if set(bk) <= set(origin):
+        return df.join(F.broadcast(dead.select(*origin)), origin,
+                       "left_anti")
+    b = origin_bucket(bk, man["n_buckets"])
+    return (df.withColumn(BUCKET_COL, b)
+            .join(F.broadcast(dead.withColumn(BUCKET_COL, b)
+                              .select(*origin, BUCKET_COL)),
+                  [*origin, BUCKET_COL], "left_anti")
+            .drop(BUCKET_COL))
 
 
 def _bucket_paths(table_path: str, buckets: dict[int, int],
@@ -1129,7 +1147,7 @@ def _retry_commit(spark: SparkSession, table_path: str,
             continue
         finally:
             claim.release()
-    raise RuntimeError(
+    raise CommitUsurpedError(
         f"{what} {table_path} was usurped {MAX_COMMIT_RETRIES} times; "
         "raise CLAIM_STALE_S above its write time")
 
@@ -1179,8 +1197,8 @@ def _merge_attempt(spark: SparkSession, table_path: str, man: dict | None,
             merged = (_read_resolved(spark, table_path, man, only=hit)
                       .withColumn(BUCKET_COL, origin_bucket(bk, nb)))
             if gone & set(hit):
-                merged = merged.join(dead.select(*origin), origin,
-                                     "left_anti")
+                merged = merged.join(dead.select(*origin, BUCKET_COL),
+                                     [*origin, BUCKET_COL], "left_anti")
         else:  # batch only hits never-seen buckets
             merged = spark.createDataFrame([], batch.schema)
         if batch is not None and set(merged.columns) != set(batch.columns):
@@ -1464,7 +1482,7 @@ def _write_dv(spark: SparkSession, table_path: str, man: dict,
         new_keys = new_keys.unionByName(
             read_parquet_fast(spark, *prior_paths).select(*kc)
             .withColumn(BUCKET_COL, origin_bucket(bk, man["n_buckets"])))
-    new_keys = new_keys.dropDuplicates(origin)
+    new_keys = new_keys.dropDuplicates([*origin, BUCKET_COL])
     dvdir = f"dv{commit:08d}-{claim.writer_id[:8]}"
     (new_keys.repartition(max(len(hit), 1), F.col(BUCKET_COL))
      .write.mode("overwrite").partitionBy(BUCKET_COL)
@@ -1489,7 +1507,12 @@ def compact_table(spark: SparkSession, table_path: str,
     (hash bucketing spreads every value range across buckets, so this
     in-file clustering is where range-skipping lives for this table;
     pass `sinks.layout.zorder_key(...)` for multi-dimensional keys).
-    Clustering holds until a later merge rewrites a bucket."""
+    Clustering holds until a later merge rewrites a bucket.
+
+    A compaction that loses MAX_COMMIT_RETRIES races in a row raises
+    CommitUsurpedError (nothing is committed or vacuumed);
+    `maybe_compact` swallows it, so a contested trigger never fails
+    the refresh that called it."""
     if read_table_manifest(spark, table_path) is None:
         return  # nonexistent table: no-op, and no _log debris
 
@@ -1527,7 +1550,8 @@ def rebucket_table(spark: SparkSession, table_path: str,
     for a table whose buckets passed ~2× `TARGET_BUCKET_BYTES`.
     Subsequent merges follow the new manifest automatically (a merge
     racing the rebucket rebases onto the new bucket count via the
-    commit-claim protocol)."""
+    commit-claim protocol). Like `compact_table`, it raises
+    CommitUsurpedError after MAX_COMMIT_RETRIES lost races."""
     if read_table_manifest(spark, table_path) is None:
         return  # nonexistent table: no-op, and no _log debris
 
@@ -1791,11 +1815,13 @@ def maybe_compact(spark: SparkSession, table_path: str,
     maintenance must materialize deletes before the dv outgrows
     broadcast size. Reads only the O(commits) manifest log — no data
     scan — making it cheap enough to call after every ingest batch.
-    Returns True if it compacted."""
+    Returns True if it compacted. Best effort: a compaction that keeps
+    losing commit races to live writers is skipped (False) instead of
+    failing the caller, whose own commit has already landed; the next
+    trigger retries it."""
     latest = read_table_manifest(spark, table_path)
     if latest is not None and sum(_dv_rows(latest).values()) > max_dv_rows:
-        compact_table(spark, table_path, vacuum=vacuum)
-        return True
+        return _try_compact(spark, table_path, vacuum)
     commits_since = 0
     for commit in reversed(_list_commit_ids(spark, table_path)):
         try:
@@ -1807,7 +1833,15 @@ def maybe_compact(spark: SparkSession, table_path: str,
         commits_since += 1
     if commits_since <= max_merges_since_compact:
         return False
-    compact_table(spark, table_path, vacuum=vacuum)
+    return _try_compact(spark, table_path, vacuum)
+
+
+def _try_compact(spark: SparkSession, table_path: str,
+                 vacuum: bool) -> bool:
+    try:
+        compact_table(spark, table_path, vacuum=vacuum)
+    except CommitUsurpedError:
+        return False
     return True
 
 

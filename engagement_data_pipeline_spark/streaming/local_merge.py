@@ -216,7 +216,7 @@ def upsert_rows_local(spark: SparkSession, table_path: str,
             continue
         finally:
             claim.release()
-    raise RuntimeError(
+    raise _ing.CommitUsurpedError(
         f"local merge into {table_path} was usurped "
         f"{_ing.MAX_COMMIT_RETRIES} times")
 
@@ -229,11 +229,29 @@ SMALL_BATCH_ROWS = 512
 _DEAD = "__local_merge_dead"
 
 
+#: session conf sizing a limit-collect's first round of partitions
+_LIMIT_FIRST_ROUND = "spark.sql.limit.initialNumPartitions"
+
+
 def probe_rows(df, n: int) -> list:
-    """At most `n` rows of `df` in ONE job (a plain limit-collect runs
-    a job per 4x scale-up round over the partitions); the single
-    partition still stops reading at the limit."""
-    return df.coalesce(1).limit(n).collect()
+    """At most `n` rows of `df` in ONE job that takes up to `n` rows
+    from every partition in parallel. A plain limit-collect first
+    scans one partition and then runs a job per 4x scale-up round;
+    squeezing the frame into one partition instead would scan a large
+    upstream serially. The first round is widened to every partition
+    for this collect only; a concurrent limit on the same session
+    may see the wider round too, which changes its job count, not its
+    rows."""
+    conf = df.sparkSession.conf
+    prior = conf.get(_LIMIT_FIRST_ROUND, None)
+    conf.set(_LIMIT_FIRST_ROUND, str(1 << 30))
+    try:
+        return df.limit(n).collect()
+    finally:
+        if prior is None:
+            conf.unset(_LIMIT_FIRST_ROUND)
+        else:
+            conf.set(_LIMIT_FIRST_ROUND, prior)
 
 
 def _has_temporal(dt) -> bool:

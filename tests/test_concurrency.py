@@ -725,3 +725,27 @@ def test_dv_delete_races_merge(spark, tmp_path):
                     | {f"new{i}" for i in range(8)})
     hist = [r.op for r in ing.table_history(spark, path).collect()]
     assert sorted(hist) == ["delete", "merge", "merge"]
+
+
+def test_contested_compaction_raises_and_maybe_compact_skips(
+        spark, tmp_path, monkeypatch):
+    """A compaction that loses every commit race raises
+    CommitUsurpedError and commits nothing; `maybe_compact`, which runs
+    after refreshes whose own commit has landed, skips it instead."""
+    path = str(tmp_path / "t")
+    _seed(spark, path)
+    head = ing.read_table_manifest(spark, path)["commit"]
+
+    def lose(*a, **kw):
+        raise ing.ConcurrentCommitError("another writer took the commit")
+
+    monkeypatch.setattr(ing, "MAX_COMMIT_RETRIES", 2)
+    monkeypatch.setattr(ing, "_commit", lose)
+    with pytest.raises(ing.CommitUsurpedError, match="compaction"):
+        ing.compact_table(spark, path, vacuum=False)
+    assert ing.maybe_compact(spark, path, max_merges_since_compact=0,
+                             vacuum=False) is False
+    monkeypatch.undo()
+    assert ing.read_table_manifest(spark, path)["commit"] == head
+    assert ing.maybe_compact(spark, path, max_merges_since_compact=0,
+                             vacuum=False) is True

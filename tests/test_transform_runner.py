@@ -15,7 +15,10 @@ from engagement_data_pipeline_spark.analysis.runner import (
     run_incremental_pipeline,
 )
 from engagement_data_pipeline_spark.streaming.drain import drain_changes
+from engagement_data_pipeline_spark.streaming import local_merge as LM
 from engagement_data_pipeline_spark.streaming.ingest import (
+    _dv,
+    compact_table,
     delete_origins,
     foreach_batch_upsert,
     read_merged_table,
@@ -148,6 +151,45 @@ def test_transform_ownership_refused(spark, tmp_path):
     # the sink's refusal surfaces through the stream wrapper
     with pytest.raises(Exception, match="refresh_transform_table"):
         drain_changes(spark, src, sink, timeout_s=60)
+
+
+@pytest.mark.parametrize("engine", [False, True], ids=["local", "engine"])
+def test_transform_refresh_moves_a_row_across_buckets(spark, tmp_path,
+                                                      monkeypatch, engine):
+    """A derived table bucketed on `grp`, outside its `id` key, over a
+    source bucketed on `id`: an update moving a row from g0 to g2
+    deletes the old (id, g0) as a deletion-vector entry of g0's
+    bucket and writes the new row to g2's bucket. The entry must hide
+    only its own bucket's row, so both readers and a compaction keep
+    the moved row, on both merge paths and through the stream sink."""
+    if engine:
+        monkeypatch.setattr(LM, "try_local_upsert", lambda *a, **kw: False)
+    src = os.path.join(str(tmp_path), "src")
+    dst = os.path.join(str(tmp_path), "dst")
+    push = os.path.join(str(tmp_path), "push")
+    old_b, new_b = (LM.local_bucket([g], 4) for g in ("g0", "g2"))
+    assert old_b != new_b
+    merge = foreach_batch_upsert(src, ["id"], n_buckets=4,
+                                 txn_app_id="src", mode="latest_wins")
+    merge(_rows(spark, [(i, f"g{i % 3}", 2 * i) for i in range(12)]), 1)
+    build_transform_table(spark, src, dst, _evens, ["id"],
+                          n_buckets=4, bucket_cols=["grp"])
+    merge(_rows(spark, [(3, "g2", 6)]), 2)
+    assert refresh_transform_table(spark, src, dst, _evens) == 2
+    man = read_table_manifest(spark, dst)
+    assert old_b in _dv(man) and man["buckets"][new_b] == man["commit"]
+    want = _expected(spark, src, _evens)
+    assert (3, "g2", 60) in {(r[1], r[0], r[2]) for r in want}
+    assert _state(read_merged_table(spark, dst)) == want
+    live = LM.read_live_rows_local(dst, man, sorted(man["buckets"]),
+                                   ["grp", "id", "out"])
+    assert {(r["grp"], r["id"], r["out"]) for r in live} == want
+    compact_table(spark, dst, vacuum=False)
+    assert _state(read_merged_table(spark, dst)) == want
+    drain_changes(spark, src, transform_stream_sink(
+        push, _evens, ["id"], ["id", "grp", "val"],
+        n_buckets=4, bucket_cols=["grp"]), timeout_s=60)
+    assert _state(read_merged_table(spark, push)) == want
 
 
 # --- runner ----------------------------------------------------------------
