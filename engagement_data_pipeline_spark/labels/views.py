@@ -407,15 +407,14 @@ def refresh_messages_view(spark, table_path: str, view_path: str,
                           shared_slice=None) -> int | None:
     """Fold the source's change feed into the MATERIALIZED G2 view:
     message-grain state, PARTICIPANT-grain refresh (a demog or
-    consent change rewrites every message row of its sender) — every
-    stored row of a touched participant is deleted and the fresh rows
-    come back by message_id in the same commit (deletes apply first),
-    so stale rows (deleted messages, or messages whose participant no
-    longer clears F7) stay gone. The old rows are read from the
-    touched participants' VIEW buckets only (the view is clustered on
-    participant_uuid, so the keys carry it). `shared_slice` (from
-    `refresh_views`) reuses one feed diff across sibling views at the
-    same watermark."""
+    consent change rewrites every message row of its sender) — fresh
+    rows upserted by message_id, stale rows (deleted messages, or
+    messages whose participant no longer clears F7) deleted in the
+    same commit. The stale sweep reads only the touched participants'
+    VIEW buckets (the view is clustered on participant_uuid, so the
+    stale keys carry it). `shared_slice` (from `refresh_views`)
+    reuses one feed diff across sibling views at the same
+    watermark."""
     from ..operators.topk import group_rows_slice
     from ..streaming.ingest import (foreach_batch_upsert, maybe_compact,
                                     read_table_manifest)
@@ -434,16 +433,17 @@ def refresh_messages_view(spark, table_path: str, view_path: str,
         return None
     live, touched, current = _resolve_slice(spark, table_path, applied,
                                             current, shared_slice)
-    # materialize the fold once: the merge's probe and its write
-    # would otherwise each re-run the feed-diff + re-fold DAG
+    # materialize the fold once: the stale sweep and the merge would
+    # otherwise each re-run the feed-diff + re-fold DAG
     fresh = messages_by_column(live, config).localCheckpoint()
     old_rows = group_rows_slice(spark, view_path, touched,
                                 ["participant_uuid"])
+    gone = (old_rows.select("message_id", "participant_uuid")
+            .join(fresh.select("message_id"), "message_id", "left_anti"))
     merge = foreach_batch_upsert(view_path, ["message_id"],
                                  txn_app_id=_MVIEW_TXN,
                                  mode="latest_wins")
-    merge(fresh, current,
-          deletes=old_rows.select("message_id", "participant_uuid"))
+    merge(fresh, current, deletes=gone)
     maybe_compact(spark, view_path)
     return current
 
