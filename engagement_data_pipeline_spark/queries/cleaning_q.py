@@ -282,8 +282,8 @@ def doc_bm25_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAM (`training/ranking.py:text_index_stream_sink`): the
     documents corpus lands in a versioned merge table over four
     commits (base insert, late insert, every-10th text update, dv
-    delete of every-20th-plus-one), the change feed streams one
-    micro-batch per commit (maxCommitsPerTrigger=1), and the sink
+    delete of every-20th-plus-one), `drain_changes` delivers the
+    change feed one batch per commit, and the sink
     bootstraps then maintains the LSM index with zero source reads —
     batch-id exactly-once via the stats-row watermark. The final
     logical corpus is the SAME as `doc_bm25_incr`'s, so this shares
@@ -317,8 +317,7 @@ def doc_bm25_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                        docs.where(k % 20 == 1).select("doc_id"),
                        strategy="dv")
         drain_changes(spark, table,
-                      R.text_index_stream_sink(idx, "text", "doc_id"),
-                      timeout_s=180)
+                      R.text_index_stream_sink(idx, "text", "doc_id"))
 
     base = fixture_dir("bm25_stream_index", sf_dir, _build)
     return R.bm25_topk_indexed(spark, os.path.join(base, "text"),

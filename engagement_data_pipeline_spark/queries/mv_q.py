@@ -64,13 +64,11 @@ A1_METRICS = {"n_messages": ("origin_id", "count")}
 
 
 def _stream_into(spark: SparkSession, table: str, sink) -> None:
-    """Drain the table's full retract stream into a foreachBatch sink,
-    one source commit per micro-batch (so updates and deletes arrive
-    as true retractions, not collapsed into the snapshot diff).
-    `drain_changes` is the engine's AvailableNow-semantics primitive:
-    offset-bounded at the head commit recorded on entry, loud on
-    timeout."""
-    drain_changes(spark, table, sink, timeout_s=120)
+    """Drain the table's full retract feed into a foreachBatch sink,
+    one source commit per batch (so updates and deletes arrive as
+    true retractions, not collapsed into the snapshot diff), up to
+    the head commit recorded on entry."""
+    drain_changes(spark, table, sink)
 
 
 def _a1_rows(spark: SparkSession, sf_dir: str, moved: bool) -> DataFrame:
@@ -1336,7 +1334,7 @@ A1_MV_CASCADE_LABELS_SQL = A1_MV_CASCADE_SQL
 # scan's input). This fixture is a move-heavy history: e%8==5 rows
 # hop twice (d1 -> d2 -> d3), e%8==1 rows hop out and CYCLE BACK
 # (d1 -> d2 -> d1); the flat per-dataset MV is maintained from the
-# stream one source commit per micro-batch, so each hop really is a
+# feed one source commit per batch, so each hop really is a
 # retraction pair, never a collapsed snapshot diff.
 
 def _ws_name(d) -> F.Column:

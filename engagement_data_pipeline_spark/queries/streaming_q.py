@@ -339,8 +339,10 @@ def table_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch `table_changes` reports over the same window, so this shares
     `TABLE_CHANGES_FEED_SQL` as its oracle. Offsets are commit ids;
     each batch diffs only changed buckets, executor-side via pyarrow,
-    deletion vectors resolved."""
-    from ..streaming.drain import drain_changes
+    deletion vectors resolved. `availableNow` on a Python source runs
+    Spark's single-batch fallback: one batch from `startingCommit` to
+    the head, then the query stops."""
+    from ..streaming.cdf_source import MergeTableChangesDataSource
 
     apply_runtime_conf(spark)
     table = _cdf_fixture(spark, sf_dir)
@@ -351,9 +353,11 @@ def table_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                      r.participant_uuid, r.text, r.received_on)
                     for r in df.collect())
 
-    drain_changes(spark, table, _sink, include_old=False,
-                  max_commits_per_trigger=None,
-                  options={"startingCommit": "1"}, timeout_s=120)
+    spark.dataSource.register(MergeTableChangesDataSource)
+    (spark.readStream.format("merge_table_changes")
+     .option("path", table).option("startingCommit", "1").load()
+     .writeStream.foreachBatch(_sink)
+     .trigger(availableNow=True).start().awaitTermination())
     return spark.createDataFrame(
         rows, "origin_id string, op string, changed_cols string, "
               "participant_uuid string, text string, received_on string")
@@ -806,9 +810,9 @@ def _index_src_fixture(spark: SparkSession, sf_dir: str) -> str:
 
 def table_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Secondary value index maintained PUSH-BASED from the retract
-    stream (`index_stream_sink`): the stream runs with
-    maxCommitsPerTrigger=1, so the insert, the value-move update, and
-    the dv delete each arrive as their own micro-batch — the sink
+    feed (`index_stream_sink`): `drain_changes` delivers one source
+    commit per batch, so the insert, the value-move update, and the
+    dv delete each arrive as their own batch — the sink
     removes the OLD value's posting from `<col>__old` (a dv delete,
     O(removed postings)) and adds the new one, zero reads of the
     source table. The oracle recomputes the postings from the final
@@ -830,8 +834,7 @@ def table_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = os.path.join(path, "idx")
         drain_changes(spark, table,
                       index_stream_sink(idx, "participant_uuid",
-                                        ["origin_id"], n_buckets=8),
-                      timeout_s=120)
+                                        ["origin_id"], n_buckets=8))
 
     idx = os.path.join(fixture_dir("index_stream_idx", sf_dir, _build),
                        "idx")

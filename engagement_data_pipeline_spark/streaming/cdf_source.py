@@ -534,17 +534,12 @@ class _ChangesReader(DataSourceStreamReader):
     def __init__(self, table_path: str, starting_commit: int,
                  columns: list[str], pa_schema,
                  max_commits_per_trigger: int | None = None,
-                 retention_name: str | None = None,
-                 ending_commit: int | None = None):
+                 retention_name: str | None = None):
         self.table_path = table_path
         self.start = starting_commit
         self.columns = columns  # origin + payload (no op/changed)
         self.pa_schema = pa_schema
         self.max_per_trigger = max_commits_per_trigger
-        # upper bound (inclusive): latestOffset never advances past it,
-        # so commits landing after a bounded drain started are excluded
-        # — the SupportsTriggerAvailableNow cap, source-side
-        self.end = ending_commit
         # retention contract: when named, the reader registers its
         # position as a vacuum floor — windows it has not yet read
         # cannot be reclaimed (the PREVENTIVE half of the loud
@@ -596,8 +591,6 @@ class _ChangesReader(DataSourceStreamReader):
                                 floor=self._seen if self._seen > 0 else None)
         if latest is None:
             return {"commit": self._seen}
-        if self.end is not None:
-            latest = min(latest, self.end)
         # rate limiting (the Delta maxFilesPerTrigger analog): a
         # backlogged stream advances at most N commits per micro-batch
         # — each batch's diff window, and therefore its bucket-read
@@ -675,7 +668,7 @@ _FEED_PARTITION_BYTES = 1 << 20
 #: LOCAL input bytes of a window (both versions of every changed
 #: bucket, `_window_bytes`) up to which `ingest.table_changes` diffs
 #: it on the DRIVER (`read_window_in_process`) — for every pull
-#: consumer alike (MV, secondary and ANN refresh, the direct drain,
+#: consumer alike (MV, secondary and ANN refresh, the drain,
 #: transform refresh, the touched-group slice). Past it the Python
 #: DataSource read takes over; its planner and worker processes cost
 #: ~5 s in a fresh session, which only a window this large repays.
@@ -979,8 +972,8 @@ class _ChangesBatchReader(DataSourceReader):
     two explicit commits as a plain `spark.read` — the same Arrow
     diff kernel, zero stream/checkpoint machinery. This is the reader
     behind `ingest.table_changes`, the one batch entry point every
-    pull consumer uses (MV, secondary and ANN refresh, the direct
-    drain, transform refresh, the touched-group slice): on Python
+    pull consumer uses (MV, secondary and ANN refresh, the drain,
+    transform refresh, the touched-group slice): on Python
     workers past `_DRIVER_WINDOW_BYTES`, in the driver process below
     it (`read_window_in_process`). Partitions cover ONLY the changed buckets,
     packed to `_FEED_PARTITION_BYTES` of local input each, so a read
@@ -1106,10 +1099,6 @@ class MergeTableChangesDataSource(DataSource):
     `maxCommitsPerTrigger` (default unlimited) bounds how many source
     commits one micro-batch may span — the Delta `maxFilesPerTrigger`
     analog for catching up on a backlog with bounded per-batch work;
-    `endingCommit` (default unbounded) caps `latestOffset` at that
-    commit (inclusive) — the SupportsTriggerAvailableNow bound done
-    source-side, used by `drain.drain_changes` so commits racing in
-    after a bounded drain started are excluded, never half-included;
     `select` (comma-separated payload columns, default all) PROJECTS
     the feed — the parquet scan prunes to origin + selected columns,
     so a consumer maintaining a 2-column rollup never pays a wide
@@ -1121,7 +1110,11 @@ class MergeTableChangesDataSource(DataSource):
     engine commit — `vacuum_table` then cannot reclaim the stream's
     unread change windows (the PREVENTIVE retention contract; without
     it a vacuum past a lagging stream's offset makes the window
-    unrecoverable and the source fails loudly)."""
+    unrecoverable and the source fails loudly).
+
+    The stream is for long-running consumers. A bounded catch-up to
+    the head is `drain.drain_changes`, which reads this source's
+    batch form (`spark.read`, below) once per pending commit."""
 
     @classmethod
     def name(cls) -> str:
@@ -1236,14 +1229,12 @@ class MergeTableChangesDataSource(DataSource):
         cols = [n for n, _t in self._columns_and_types()
                 if n not in (_OP, _CHANGED)]
         mpt = self.options.get("maxCommitsPerTrigger")
-        end = self.options.get("endingCommit")
         return _ChangesReader(
             self._table_path(),
             int(self.options.get("startingCommit", 0)),
             cols, to_arrow_schema(schema),
             int(mpt) if mpt is not None else None,
-            self.options.get("retentionName"),
-            int(end) if end is not None else None)
+            self.options.get("retentionName"))
 
     def reader(self, schema) -> _ChangesBatchReader:
         """BATCH read of one change window: `spark.read.format(

@@ -422,9 +422,10 @@ def mv_stream_sink(mv_path: str, group_cols: Sequence[str],
         src.writeStream.foreachBatch(
             mv_stream_sink(mv_path, ["grp"], metrics)).start()
 
-    For bounded catch-up use `drain.drain_changes(spark, table, sink)`
-    (AvailableNow semantics); to maintain several artifacts from ONE
-    feed scan compose sinks with `drain.fan_out` — each sink's
+    To catch up to the head and stop, run it under
+    `drain.drain_changes(spark, table, sink)` (one source commit per
+    batch, batch id = commit id); to maintain several artifacts from
+    ONE feed scan compose sinks with `drain.fan_out` — each sink's
     watermark keeps the composition exactly-once across crashes.
     """
     gcols = list(group_cols)

@@ -145,8 +145,9 @@ def index_stream_sink(index_path: str, col: str, origin: list[str],
             index_stream_sink(idx_path, "participant_uuid",
                               ["origin_id"])).start()
 
-    Bounded catch-up: `drain.drain_changes`; several artifacts from
-    one feed scan: `drain.fan_out` (exactly-once per sink).
+    Catch up to the head and stop: `drain.drain_changes`; several
+    artifacts from one feed scan: `drain.fan_out` (exactly-once per
+    sink).
 
     Replay safety: removals and additions are one commit under the
     index's txn watermark — a foreachBatch crash-replay of an

@@ -170,7 +170,7 @@ def transform_stream_sink(dst_path: str,
     The sink bootstraps its table from its first batch (subscribe from
     startingCommit=0) and owns it from then on; compose several sinks
     over ONE feed scan with `drain.fan_out`. Run with one source
-    commit per micro-batch (`drain_changes`' default): a batch
+    commit per batch (as `drain.drain_changes` delivers it): a batch
     collapsing several commits can carry BOTH an insert and an update
     of one key, putting duplicate keys in the transformed upsert —
     per-commit batches make that impossible by construction."""
@@ -199,7 +199,7 @@ def transform_stream_sink(dst_path: str,
             .select(*cols)).localCheckpoint()
         if man is None:
             # bootstrap = the source's FIRST commit (pure inserts,
-            # one commit per micro-batch — drain_changes' default).
+            # one commit per batch, as drain_changes delivers it).
             # A first batch carrying retractions means the stream was
             # pointed mid-history (startingCommit > 0) or collapsed
             # several commits: the derived state would be silently

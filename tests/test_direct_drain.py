@@ -1,11 +1,8 @@
-"""`streaming/drain.py:drain_changes_direct` — the bounded-delta
-micro-batch drain that skips Structured-Streaming checkpointing: the
-change feed's BATCH reader per pending commit, batch id = source
-commit id, state in a tiny atomic file. Fixed cost per day-run drain
-is a few manifest reads instead of a checkpointed streaming query —
-the r13 verdict's "incrementality loses to batch recompute below
-~x100" fix. Equivalence with the stream path is asserted directly:
-same per-commit delivery, same retract shape, same final MV state."""
+"""`streaming/drain.py:drain_changes` with a kept state — the bounded
+catch-up drain: the change feed's BATCH reader per pending commit,
+batch id = source commit id, position in a tiny atomic state file.
+Fixed cost per day-run drain is a few manifest reads. The MV states it
+maintains are checked against a group-by recomputed from the table."""
 
 from __future__ import annotations
 
@@ -16,7 +13,7 @@ import pytest
 from engagement_data_pipeline_spark.streaming import ingest as ing
 from engagement_data_pipeline_spark.streaming import mv as MV
 from engagement_data_pipeline_spark.streaming.drain import (
-    drain_changes, drain_changes_direct, fan_out)
+    drain_changes, fan_out)
 
 
 def _merge(spark, path, n_buckets=2):
@@ -36,15 +33,14 @@ def _num(spark, origin, grp, x):
 
 def test_direct_drain_per_commit_delivery(spark, tmp_path):
     """5 commits -> 5 sink calls, batch id = SOURCE COMMIT id, one
-    row each (per-commit retract pairs, like the stream's
-    maxCommitsPerTrigger=1)."""
+    row each (per-commit retract pairs)."""
     path = str(tmp_path / "t")
     merge = _merge(spark, path)
     for i in range(1, 6):
         merge(_row(spark, f"o{i}", f"v{i}"), i)
 
     batches: list[tuple[int, int]] = []
-    head = drain_changes_direct(
+    head = drain_changes(
         spark, path, lambda df, cid: batches.append((cid, df.count())),
         state_path=str(tmp_path / "state"))
     assert head == 5
@@ -65,32 +61,32 @@ def test_direct_drain_resumes_from_state(spark, tmp_path):
     def sink(df, _cid):
         seen.append(sorted(r.origin for r in df.collect()))
 
-    assert drain_changes_direct(spark, path, sink, state_path=state) == 2
+    assert drain_changes(spark, path, sink, state_path=state) == 2
     assert seen == [["a"], ["b"]]
 
     seen.clear()
     merge(_row(spark, "c", "1"), 3)
-    assert drain_changes_direct(spark, path, sink, state_path=state) == 3
+    assert drain_changes(spark, path, sink, state_path=state) == 3
     assert seen == [["c"]]
 
     seen.clear()
-    assert drain_changes_direct(spark, path, sink, state_path=state) == 3
+    assert drain_changes(spark, path, sink, state_path=state) == 3
     assert seen == []
 
 
 def test_direct_drain_ships_old_preimages(spark, tmp_path):
     """An update's batch carries `<col>__old` so retract sinks can
-    subtract without reading the source — same shape as the stream
-    with includeOld=true."""
+    subtract without reading the source — the same shape as the
+    stream with includeOld=true."""
     path = str(tmp_path / "t")
     merge = _merge(spark, path)
     merge(_row(spark, "a", "v1"), 1)
     merge(_row(spark, "a", "v2"), 2)
 
     got: dict[int, list] = {}
-    drain_changes_direct(spark, path,
-                         lambda df, cid: got.update({cid: df.collect()}),
-                         state_path=str(tmp_path / "state"))
+    drain_changes(spark, path,
+                  lambda df, cid: got.update({cid: df.collect()}),
+                  state_path=str(tmp_path / "state"))
     [r2] = got[2]
     assert r2.op == "update"
     assert r2.payload == "v2" and r2.payload__old == "v1"
@@ -101,11 +97,65 @@ def test_direct_drain_empty_table_and_empty_commits(spark, tmp_path):
     manifest diff changes no buckets is skipped driver-side but the
     state still advances past it."""
     calls = []
-    assert drain_changes_direct(
+    state = tmp_path / "state"
+    assert drain_changes(
         spark, str(tmp_path / "missing"),
-        lambda df, cid: calls.append(cid),
-        state_path=str(tmp_path / "state")) == 0
+        lambda df, cid: calls.append(cid), state_path=str(state)) == 0
     assert calls == []
+
+    path = str(tmp_path / "t")
+    merge = _merge(spark, path)
+    merge(_row(spark, "a", "1"), 1)
+    merge(spark.createDataFrame([], "origin string, payload string"), 2)
+    assert drain_changes(spark, path, lambda df, cid: calls.append(cid),
+                         state_path=str(state)) == 2
+    assert calls == [1]
+    assert (state / "_DIRECT_DRAIN").read_text() == "2"
+    merge(_row(spark, "b", "1"), 3)
+    assert drain_changes(spark, path, lambda df, cid: calls.append(cid),
+                         state_path=str(state)) == 3
+    assert calls == [1, 3]
+
+
+def test_direct_drain_refuses_state_pruned_from_the_log(spark, tmp_path):
+    """A vacuum that pruned the manifest the state points at leaves
+    no base to diff the next commit against: the drain raises instead
+    of replaying the snapshot as inserts."""
+    path = str(tmp_path / "t")
+    state = str(tmp_path / "state")
+    merge = _merge(spark, path)
+    merge(_row(spark, "a", "1"), 1)
+    assert drain_changes(spark, path, lambda df, cid: None,
+                         state_path=state) == 1
+    merge(_row(spark, "b", "1"), 2)
+    merge(_row(spark, "c", "1"), 3)
+    ing.vacuum_table(spark, path, keep_manifests=1)
+    with pytest.raises(ValueError, match="log pruned past this drain"):
+        drain_changes(spark, path, lambda df, cid: None, state_path=state)
+
+
+def test_direct_drain_stops_at_head_recorded_on_entry(spark, tmp_path):
+    """A commit landing during a drain (here: made from inside the
+    sink) is left for the next drain — the drain stops at the head it
+    recorded on entry, and the next one delivers the late commit."""
+    path = str(tmp_path / "t")
+    state = str(tmp_path / "state")
+    merge = _merge(spark, path)
+    merge(_row(spark, "a", "1"), 1)
+    merge(_row(spark, "b", "1"), 2)
+
+    seen: list[tuple[int, list[str]]] = []
+
+    def sink(df, cid):
+        seen.append((cid, sorted(r.origin for r in df.collect())))
+        if cid == 1:
+            merge(_row(spark, "late", "1"), 3)
+
+    assert drain_changes(spark, path, sink, state_path=state) == 2
+    assert seen == [(1, ["a"]), (2, ["b"])]
+    seen.clear()
+    assert drain_changes(spark, path, sink, state_path=state) == 3
+    assert seen == [(3, ["late"])]
 
 
 def test_direct_drain_refuses_stream_checkpoint(spark, tmp_path):
@@ -114,16 +164,16 @@ def test_direct_drain_refuses_stream_checkpoint(spark, tmp_path):
     ckpt = tmp_path / "ckpt"
     (ckpt / "offsets").mkdir(parents=True)
     with pytest.raises(ValueError, match="checkpoint"):
-        drain_changes_direct(spark, path, lambda df, cid: None,
-                             state_path=str(ckpt))
+        drain_changes(spark, path, lambda df, cid: None,
+                      state_path=str(ckpt))
 
 
-def test_direct_drain_mv_state_equals_stream_drain_mv_state(spark,
-                                                            tmp_path):
+def test_direct_drain_mv_state_equals_recomputed_mv(spark, tmp_path):
     """The SAME history (inserts, update, delete) maintained through
-    the direct drain and through the checkpointed stream drain yields
-    byte-equal MV states — the equivalence that lets the composed
-    pipeline switch paths."""
+    the drain into one MV sink, and into two MVs composed by fan_out,
+    yields the states a group-by over the final table recomputes."""
+    from pyspark.sql import functions as F
+
     path = str(tmp_path / "t")
     merge = _merge(spark, path)
     merge(_num(spark, "a", "g1", 10), 1)
@@ -134,21 +184,30 @@ def test_direct_drain_mv_state_equals_stream_drain_mv_state(spark,
                        spark.createDataFrame([("b",)], "origin string"))
 
     metrics = {"n": ("origin", "count"), "sx": ("x", "sum")}
-    mv_direct = str(tmp_path / "mv_direct")
-    mv_stream = str(tmp_path / "mv_stream")
-    drain_changes_direct(
-        spark, path, MV.mv_stream_sink(mv_direct, ["grp"], metrics),
-        state_path=str(tmp_path / "state"))
-    drain_changes(spark, path,
-                  MV.mv_stream_sink(mv_stream, ["grp"], metrics),
-                  checkpoint=str(tmp_path / "ckpt"))
+    single = str(tmp_path / "mv_single")
+    by_grp = str(tmp_path / "mv_grp")
+    by_origin = str(tmp_path / "mv_origin")
+    drain_changes(spark, path, MV.mv_stream_sink(single, ["grp"], metrics),
+                  state_path=str(tmp_path / "s1"))
+    drain_changes(spark, path, fan_out(
+        MV.mv_stream_sink(by_grp, ["grp"], metrics),
+        MV.mv_stream_sink(by_origin, ["origin"], metrics)),
+        state_path=str(tmp_path / "s2"))
 
-    def state(p):
-        return sorted((r.grp, r.n, r.sx)
+    def state(p, g):
+        return sorted((r[g], r.n, r.sx)
                       for r in MV.read_mv(spark, p, metrics).collect())
 
-    assert state(mv_direct) == state(mv_stream)
-    assert state(mv_direct) == [("g1", 1, 20), ("g2", 1, 7)]
+    def recomputed(g):
+        return sorted(
+            (r[g], r.n, r.sx) for r in ing.read_merged_table(spark, path)
+            .groupBy(g).agg(F.count("origin").alias("n"),
+                            F.sum("x").alias("sx")).collect())
+
+    assert recomputed("grp") == [("g1", 1, 20), ("g2", 1, 7)]
+    assert state(single, "grp") == recomputed("grp")
+    assert state(by_grp, "grp") == recomputed("grp")
+    assert state(by_origin, "origin") == recomputed("origin")
 
 
 def test_direct_drain_crash_between_fanout_sinks_converges(spark,
@@ -179,15 +238,15 @@ def test_direct_drain_crash_between_fanout_sinks_converges(spark,
         s2(df, cid)
 
     with pytest.raises(Boom):
-        drain_changes_direct(spark, path, fan_out(s1, s2_flaky),
-                             state_path=state)
+        drain_changes(spark, path, fan_out(s1, s2_flaky),
+                      state_path=state)
     # resume with the healthy sink composition
-    assert drain_changes_direct(spark, path, fan_out(s1, s2),
-                                state_path=state) == 3
+    assert drain_changes(spark, path, fan_out(s1, s2),
+                         state_path=state) == 3
 
     twin1 = str(tmp_path / "twin1")
     twin2 = str(tmp_path / "twin2")
-    drain_changes_direct(spark, path, fan_out(
+    drain_changes(spark, path, fan_out(
         MV.mv_stream_sink(twin1, ["grp"], metrics),
         MV.mv_stream_sink(twin2, ["grp"], metrics)),
         state_path=str(tmp_path / "state_twin"))

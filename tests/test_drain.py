@@ -1,15 +1,12 @@
-"""`streaming/drain.py:drain_changes` — the engine's bounded
-AvailableNow-semantics catch-up over the change feed.
-
-Spark's `trigger(availableNow=True)` cannot give these guarantees for
-a Python data source (PythonMicroBatchStream lacks
-SupportsTriggerAvailableNow; the engine falls back to ONE batch and
-stops — verified against Spark 4.1), so the drain is driver-bounded:
-head commit recorded on entry, stop decided by offset arithmetic on
-the last completed batch, per-commit batching preserved.
+"""`streaming/drain.py:drain_changes` without a kept state: the drain
+runs on a temp state removed on exit, so every call delivers the
+table's history from the beginning, once, one commit per batch.
+`test_direct_drain.py` covers the kept-state drain.
 """
 
 from __future__ import annotations
+
+import tempfile
 
 import pytest
 
@@ -27,120 +24,48 @@ def _row(spark, origin, payload):
                                  "origin string, payload string")
 
 
-def test_drain_processes_every_commit_per_batch(spark, tmp_path):
-    """5 commits on entry -> 5 micro-batches (per-commit retractions
-    preserved, unlike the availableNow fallback's single collapsed
-    batch), and the returned head is the table's head."""
+def test_drain_processes_every_commit_per_batch(spark, tmp_path,
+                                                monkeypatch):
+    """5 commits on entry -> 5 batches keyed by commit id (per-commit
+    retractions preserved), and the returned head is the table's
+    head. A second call starts from the beginning again, and neither
+    leaves its temp state behind."""
+    tmp_root = tmp_path / "tmp"
+    tmp_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_root))
     path = str(tmp_path / "t")
     merge = _merge(spark, path)
     for i in range(1, 6):
         merge(_row(spark, f"o{i}", f"v{i}"), i)
 
-    batches: list[tuple[int, int]] = []
-    head = drain_changes(
-        spark, path, lambda df, eid: batches.append((eid, df.count())))
-    assert head == 5
-    assert len(batches) == 5
-    assert all(n == 1 for _, n in batches)
-
-
-def test_drain_resumes_from_checkpoint(spark, tmp_path):
-    """A stable checkpoint makes consecutive drains incremental: the
-    second call delivers ONLY the commits that landed after the
-    first, the third (nothing new) delivers no batches at all and
-    still returns the head."""
-    path = str(tmp_path / "t")
-    ckpt = str(tmp_path / "ckpt")
-    merge = _merge(spark, path)
-    merge(_row(spark, "a", "1"), 1)
-    merge(_row(spark, "b", "1"), 2)
-
-    seen: list[list[str]] = []
-
-    def sink(df, _eid):
-        seen.append(sorted(r.origin for r in df.collect()))
-
-    assert drain_changes(spark, path, sink, checkpoint=ckpt) == 2
-    assert seen == [["a"], ["b"]]
-
-    seen.clear()
-    merge(_row(spark, "c", "1"), 3)
-    assert drain_changes(spark, path, sink, checkpoint=ckpt) == 3
-    assert seen == [["c"]]
-
-    seen.clear()
-    assert drain_changes(spark, path, sink, checkpoint=ckpt) == 3
-    assert seen == []
+    for _ in range(2):
+        batches: list[tuple[int, int]] = []
+        head = drain_changes(
+            spark, path,
+            lambda df, cid: batches.append((cid, df.count())))
+        assert head == 5
+        assert batches == [(1, 1), (2, 1), (3, 1), (4, 1), (5, 1)]
+        assert list(tmp_root.iterdir()) == []
 
 
 def test_drain_empty_table_returns_zero(spark, tmp_path):
-    """No commits -> nothing to drain; no stream is even started."""
+    """No commits -> nothing to drain; the sink is never called."""
     calls = []
     assert drain_changes(spark, str(tmp_path / "missing"),
                          lambda df, eid: calls.append(eid)) == 0
     assert calls == []
 
 
-def test_drain_unbatched_mode_collapses_inserts(spark, tmp_path):
-    """max_commits_per_trigger=None lets the source batch freely —
-    a pure-insert backlog may arrive in fewer batches, but the drain
-    still reaches the head and delivers every row exactly once."""
-    path = str(tmp_path / "t")
-    merge = _merge(spark, path)
-    for i in range(1, 5):
-        merge(_row(spark, f"o{i}", "v"), i)
-
-    rows: list[str] = []
-    head = drain_changes(
-        spark, path,
-        lambda df, eid: rows.extend(r.origin for r in df.collect()),
-        max_commits_per_trigger=None)
-    assert head == 4
-    assert sorted(rows) == ["o1", "o2", "o3", "o4"]
-
-
-def test_drain_options_passthrough_starting_commit(spark, tmp_path):
-    """`options={"startingCommit": N}` skips the prefix — the drain
-    subscribes mid-history exactly like a raw reader would."""
-    path = str(tmp_path / "t")
-    merge = _merge(spark, path)
-    for i in range(1, 4):
-        merge(_row(spark, f"o{i}", "v"), i)
-
-    rows: list[str] = []
-    drain_changes(spark, path,
-                  lambda df, eid: rows.extend(r.origin
-                                              for r in df.collect()),
-                  options={"startingCommit": "2"})
-    assert sorted(rows) == ["o3"]
-
-
-def test_drain_timeout_is_loud(spark, tmp_path, monkeypatch):
-    """If the head cannot be reached in time the drain raises —
-    never a silent partial catch-up. Forced by recording a head the
-    feed can never reach."""
-    path = str(tmp_path / "t")
-    _merge(spark, path)(_row(spark, "a", "1"), 1)
-    monkeypatch.setattr(
-        "engagement_data_pipeline_spark.streaming.drain._latest_commit",
-        lambda p, floor=None: 99)
-    with pytest.raises(TimeoutError, match="commit 1 but not head 99"):
-        drain_changes(spark, path, lambda df, eid: df.count(),
-                      timeout_s=3)
-
-
 def test_fan_out_crash_between_sinks_replays_convergently(spark, tmp_path):
-    """fan_out's exactly-once contract: the stream dies AFTER sink 1
-    applied batch 1 but BEFORE sink 2 did. The drain surfaces the
-    sink's error (not a timeout), and the restarted drain replays the
-    uncommitted batch: sink 1 no-ops on its own watermark, sink 2
-    applies — both MVs converge to the true counts, nothing
-    double-applied."""
+    """fan_out's exactly-once contract with no drain state kept: the
+    drain dies AFTER sink 1 applied commit 1 but BEFORE sink 2 did,
+    and the sink's error surfaces. The rerun replays the history from
+    commit 1: sink 1 no-ops on its own watermark, sink 2 applies —
+    both MVs converge to the true counts, nothing double-applied."""
     from engagement_data_pipeline_spark.streaming import mv as MV
     from engagement_data_pipeline_spark.streaming.drain import fan_out
 
     path = str(tmp_path / "t")
-    ckpt = str(tmp_path / "ckpt")
     mv1 = str(tmp_path / "mv1")
     mv2 = str(tmp_path / "mv2")
     merge = ing.foreach_batch_upsert(path, ["origin"], n_buckets=2,
@@ -161,13 +86,11 @@ def test_fan_out_crash_between_sinks_replays_convergently(spark, tmp_path):
             raise RuntimeError("boom between sinks")
         sink2(batch, batch_id)
 
-    with pytest.raises(Exception, match="boom between sinks"):
-        drain_changes(spark, path, fan_out(sink1, exploding),
-                      checkpoint=ckpt, timeout_s=60)
+    with pytest.raises(RuntimeError, match="boom between sinks"):
+        drain_changes(spark, path, fan_out(sink1, exploding))
 
     armed["on"] = False
-    assert drain_changes(spark, path, fan_out(sink1, exploding),
-                         checkpoint=ckpt, timeout_s=60) == 2
+    assert drain_changes(spark, path, fan_out(sink1, exploding)) == 2
 
     want = {("g1", 2), ("g2", 2)}
     got1 = {(r.grp, r.n) for r in
@@ -176,30 +99,3 @@ def test_fan_out_crash_between_sinks_replays_convergently(spark, tmp_path):
             MV.read_mv(spark, mv2, metrics).collect()}
     assert got1 == want
     assert got2 == want
-
-
-def test_drain_ending_commit_bounds_the_stream(spark, tmp_path):
-    """The AvailableNow bound is enforced SOURCE-side: with
-    endingCommit the stream's latestOffset never advances past it, so
-    a drain delivers exactly the bounded window and a later drain on
-    the same checkpoint picks up the rest — commits past the bound
-    are excluded, never half-included."""
-    path = str(tmp_path / "t")
-    ckpt = str(tmp_path / "ckpt")
-    merge = _merge(spark, path)
-    for i in range(1, 5):
-        merge(_row(spark, f"o{i}", "v"), i)
-
-    rows: list[str] = []
-
-    def sink(df, _eid):
-        rows.extend(r.origin for r in df.collect())
-
-    head = drain_changes(spark, path, sink, checkpoint=ckpt,
-                         options={"endingCommit": "2"})
-    assert head == 2
-    assert sorted(rows) == ["o1", "o2"]
-
-    rows.clear()
-    assert drain_changes(spark, path, sink, checkpoint=ckpt) == 4
-    assert sorted(rows) == ["o3", "o4"]

@@ -122,7 +122,7 @@ def test_local_merge_state_equals_engine_merge(spark, tmp_path):
 
 def test_local_merge_change_feed_matches_engine(spark, tmp_path):
     from engagement_data_pipeline_spark.streaming.drain import (
-        drain_changes_direct)
+        drain_changes)
 
     lp, ep = str(tmp_path / "local"), str(tmp_path / "engine")
     for rows, ver in _HISTORY:
@@ -131,7 +131,7 @@ def test_local_merge_change_feed_matches_engine(spark, tmp_path):
 
     def feed(path, state):
         got = []
-        drain_changes_direct(
+        drain_changes(
             spark, path,
             lambda df, cid: got.append(
                 (cid, sorted((r.k, r.op, r.v, r.v__old)
@@ -210,7 +210,7 @@ def test_mv_local_fold_equals_distributed_fold(spark, tmp_path,
     update, group death)."""
     from engagement_data_pipeline_spark.streaming import mv as MV
     from engagement_data_pipeline_spark.streaming.drain import (
-        drain_changes_direct)
+        drain_changes)
 
     src = str(tmp_path / "src")
     merge = ing.foreach_batch_upsert(src, ["k"], n_buckets=2,
@@ -232,7 +232,7 @@ def test_mv_local_fold_equals_distributed_fold(spark, tmp_path,
 
     def build(mv_path, state, fold_max):
         monkeypatch.setattr(MV, "_LOCAL_FOLD_MAX", fold_max)
-        drain_changes_direct(
+        drain_changes(
             spark, src, MV.mv_stream_sink(mv_path, ["grp"], metrics),
             state_path=state)
         return sorted(tuple(r) for r in

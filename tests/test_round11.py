@@ -731,31 +731,3 @@ def test_describe_table_on_shallow_clone(spark, tmp_path):
     assert sum(r.physical_rows for r in
                ing.describe_table(spark, src).collect()) == 20
 
-
-def test_drain_with_retention_floor(spark, tmp_path):
-    """options={'retentionName': ...} threads through the drain: the
-    stream registers its position as a vacuum floor. The floor LAGS
-    the drained head by one commit — the engine only confirms a batch
-    (commit()) when planning past it, and the checkpoint may REPLAY
-    the final batch on restart, so the lagging floor is the
-    conservative-correct position: it still protects the last batch's
-    window. The next drain advances it."""
-    path = str(tmp_path / "t")
-    ckpt = str(tmp_path / "ckpt")
-    merge = ing.foreach_batch_upsert(path, ["k"], n_buckets=2,
-                                     txn_app_id="src",
-                                     mode="latest_wins")
-    for i in range(1, 4):
-        merge(spark.createDataFrame([(f"k{i}", i)], "k string, v long"),
-              i)
-    from engagement_data_pipeline_spark.streaming.drain import (
-        drain_changes)
-
-    opts = {"retentionName": "consumer"}
-    assert drain_changes(spark, path, lambda df, eid: df.count(),
-                         checkpoint=ckpt, options=opts) == 3
-    assert ing.read_retention_floors(spark, path) == {"consumer": 2}
-    merge(spark.createDataFrame([("k4", 4)], "k string, v long"), 4)
-    assert drain_changes(spark, path, lambda df, eid: df.count(),
-                         checkpoint=ckpt, options=opts) == 4
-    assert ing.read_retention_floors(spark, path) == {"consumer": 3}

@@ -5,7 +5,7 @@ and prove every maintained artifact equals an uninterrupted run's.
 The crash point is the nastiest one the architecture allows: inside
 the mview drain's fan_out, after 2 of the 4 message-grain MV sinks
 applied the batch — so at death the MV states DISAGREE (a1/a3 at the
-new batch, a7/a9 one behind), the streaming checkpoint has no commit
+new batch, a7/a9 one behind), the drain state has no record
 for the batch, the pview drain never ran, and the run manifest shows
 `analysis` as `started`. The resume path must compose three
 exactly-once mechanisms: the run claim (released by the in-process
@@ -61,7 +61,7 @@ def main() -> None:
         member_checksum)
     from engagement_data_pipeline_spark.streaming import mv as MV
     from engagement_data_pipeline_spark.streaming.drain import (
-        drain_changes_direct, fan_out)
+        drain_changes, fan_out)
     from engagement_data_pipeline_spark.streaming.ingest import (
         foreach_batch_upsert)
 
@@ -111,11 +111,10 @@ def main() -> None:
                                        prepare=p, source_cols=c)
                      for sub, g, m, p, c in _MV_SINKS]
             sinks[1] = bomb(sinks[1])  # a1 applied, a3 applied-then-die
-            drain_changes_direct(spark, os.path.join(base, "mview"),
-                                 fan_out(*sinks),
-                                 state_path=os.path.join(base,
-                                                         "drain_mview"))
-            return drain_changes_direct(
+            drain_changes(spark, os.path.join(base, "mview"),
+                          fan_out(*sinks),
+                          state_path=os.path.join(base, "drain_mview"))
+            return drain_changes(
                 spark, os.path.join(base, "pview"), fan_out(*[
                     MV.mv_stream_sink(os.path.join(base, sub), g, m,
                                       prepare=p, source_cols=c)
@@ -184,11 +183,10 @@ def main() -> None:
                      for sub, g, m, p, c in _MV_SINKS]
             sinks.append(bomb(lambda b, i: text(_index_feed(b), i)))
             sinks.append(lambda b, i: ann(_index_feed(b), i))
-            drain_changes_direct(spark, os.path.join(base, "mview"),
-                                 fan_out(*sinks),
-                                 state_path=os.path.join(
-                                     base, "drain_mview"))
-            return drain_changes_direct(
+            drain_changes(spark, os.path.join(base, "mview"),
+                          fan_out(*sinks),
+                          state_path=os.path.join(base, "drain_mview"))
+            return drain_changes(
                 spark, os.path.join(base, "pview"), fan_out(*[
                     MV.mv_stream_sink(os.path.join(base, sub), g, m,
                                       prepare=p, source_cols=c)

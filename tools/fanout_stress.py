@@ -3,10 +3,10 @@ feeding K=3 sinks (`streaming/drain.py:fan_out`) vs K SEPARATE
 drains — the read-amplification argument, appended to
 SCALE_EVIDENCE.md.
 
-Each consumer of a table's feed normally opens its own stream: every
+Each consumer of a table's feed normally runs its own drain: every
 commit's bucket scan + Arrow diff then runs once PER CONSUMER, and so
-does the per-stream fixed cost (checkpoint WAL, offset planning,
-micro-batch scheduling). `fan_out` runs the diff once, persists the
+does the per-drain fixed cost (manifest reads, batch planning).
+`fan_out` runs the diff once, persists the
 batch, and applies every sink to the materialized result — cost
 should approach 1/K of the separate-drain total as the diff grows,
 with the converged states byte-identical either way (asserted).
@@ -93,12 +93,12 @@ def main() -> None:
         sep = sinks_for(root, "sep")
         t0 = time.perf_counter()
         for sink in sep:
-            drain_changes(spark, src, sink, timeout_s=600)
+            drain_changes(spark, src, sink)
         t_sep = time.perf_counter() - t0
 
         fo = sinks_for(root, "fo")
         t0 = time.perf_counter()
-        drain_changes(spark, src, fan_out(*fo), timeout_s=600)
+        drain_changes(spark, src, fan_out(*fo))
         t_fan = time.perf_counter() - t0
 
         # converged states identical either way
@@ -129,7 +129,7 @@ def main() -> None:
         for factor, n, ts, tf, ratio in rows:
             f.write(f"| x{factor} | {n} | {ts} | {tf} | {ratio}x |\n")
         f.write("\nReading: the separate-drain total carries the "
-                "feed's bucket scan + Arrow diff (and the per-stream "
+                "feed's bucket scan + Arrow diff (and the per-drain "
                 "fixed cost) once PER CONSUMER; fan_out pays them "
                 "once and fans the persisted batch into every sink, "
                 "so the gap widens as the diff grows. Converged MV "
