@@ -170,8 +170,9 @@ def run_incremental_pipeline(
     stage ran stay pending for the NEXT run, exactly as if the
     original invocation had finished uninterrupted.
 
-    Exclusivity: an OCC run claim (`_run_claims/<run_id>.claim`, the
-    same put-if-absent arbiter as commit claims) is taken before the
+    Exclusivity: a run lease (`_run_claims/<run_id>.claim`, a
+    put-if-absent `try_claim` — the one lease left in the engine, since
+    table commits are lease-free) is taken before the
     first manifest transition, so two overlapping runners on the SAME
     run_id — the daily-cron double-start — cannot interleave stage
     transitions or execute a stage twice concurrently: the second

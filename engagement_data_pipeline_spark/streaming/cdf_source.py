@@ -149,8 +149,8 @@ def _latest_hint(table_path: str) -> int | None:
 def _latest_commit(table_path: str, floor: int | None = None) -> int | None:
     """Highest PARSEABLE commit. Runs on every latestOffset() poll, so
     it must stay O(1) manifest reads however long the table's log is:
-    published commit ids are DENSE (each commit is claimed as
-    latest+1 under the OCC claim), so starting from a known floor —
+    published commit ids are DENSE (a writer publishes N only after
+    it read N-1 as the head), so starting from a known floor —
     the caller's last-seen offset and/or the writer's `_log/LATEST`
     pointer — and probing FORWARD reaches the head in O(new commits)
     reads. Only when no floor resolves (pre-pointer table, or the

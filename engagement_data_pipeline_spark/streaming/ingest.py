@@ -24,35 +24,32 @@ src/engagement_db_coda_sync/coda_to_engagement_db.py:13-83):
   full bucket→version mapping (O(n_buckets), so readers never replay a
   log). The manifest is written to a temp name and renamed; readers
   take the highest *parseable* manifest, so a crash mid-data-write
-  (unreferenced version dir) or mid-publish (partial/absent manifest)
-  leaves the previous commit fully readable. ``_log`` is
-  underscore-prefixed, so plain parquet scans ignore it.
+  (unreferenced version dir) or mid-publish (a partial temp, never a
+  partial ``<commit>.json``) leaves the previous commit fully
+  readable. ``_log`` is underscore-prefixed, so plain parquet scans
+  ignore it.
 * All manifest I/O goes through the Hadoop FileSystem API, so the same
   code runs on file://, hdfs:// (atomic rename) and s3a:// (PUT of a
   new key is atomic; rename is copy+delete but the reader's
   parse-check keeps partial objects invisible).
 * CONCURRENT writers are arbitrated by optimistic concurrency on the
-  commit number (the Delta-style put-if-absent log idiom): before
-  writing any data, a writer atomically claims
-  ``_log/<commit>.claim`` (O_CREAT|O_EXCL on local paths,
-  create(overwrite=false) on HDFS — atomic in both; S3 without
-  conditional-write support needs an external lock, same caveat as
-  Delta's LogStore). Every writer writes its data into a
-  WRITER-UNIQUE version directory (``v<commit>-<writer>/``, recorded
-  in the manifest's ``vdirs`` map), so no two writers ever touch the
-  same directory — even through a lease-expiry race, the published
-  manifest references exactly the bytes its verified claim holder
-  wrote, and a loser's directory is unreferenced debris for vacuum.
-  The manifest publish itself stays the crash-atomic tmp+rename,
-  single-writer by construction. A loser re-reads the log, REBASES
-  (recomputes its merge against the new current state) and retries at
-  the next number — no commit is ever silently clobbered. A claim
-  whose holder crashed is lease-expired after ``CLAIM_STALE_S``;
-  expiry is single-winner (stale claims are renamed to a tombstone —
-  one rename succeeds — and only the renamer re-creates, with a
-  content re-check to restore a claim that changed hands mid-expiry);
-  holders verify ownership just before publishing, so a
-  paused-then-resumed writer aborts instead of double-publishing.
+  commit number (the Delta log rule, Armbrust et al., VLDB 2020):
+  commit N exists if and only if its no-replace create succeeded. A
+  writer reads the head, writes its data into a WRITER-UNIQUE version
+  directory (``v<N>-<writer>/``, recorded in the manifest's ``vdirs``
+  map), writes the manifest to ``_log/<N>.json.tmp-<writer>`` and
+  renames it to ``_log/<N>.json`` without replacing anything
+  (link+unlink locally, ``FileContext.rename(NONE)`` on HDFS). Exactly
+  one writer's rename of N succeeds. Just before its rename a writer
+  re-reads the head and gives up N if the head moved: the rename
+  alone refuses only an N that exists, and vacuum may have pruned an
+  N that rivals have since passed. A loser re-reads the log,
+  REBASES (recomputes its merge against the new head) and retries at
+  the next number — no commit is ever silently clobbered, and a
+  loser's directory is unreferenced debris for vacuum. No lease is
+  held: a writer that dies anywhere before its rename blocks nobody.
+  Plain S3 has no no-replace rename and needs an external arbiter
+  (the same caveat as Delta's LogStore).
 
 I/O per batch is O(touched buckets), not O(table). `n_buckets` is
 table metadata fixed at creation (recorded in the manifest — later
@@ -67,6 +64,7 @@ accretion from long availableNow histories with `compact_table` +
 
 from __future__ import annotations
 
+import errno
 import json
 import math
 import os
@@ -165,57 +163,55 @@ def _read_text(spark: SparkSession, path_str: str) -> str:
         stream.close()
 
 
-def _write_text_atomic(spark: SparkSession, path_str: str, text: str) -> None:
+def _write_text(spark: SparkSession, path_str: str, text: str) -> None:
     lp = _local_path(path_str)
     if lp is not None:
         os.makedirs(os.path.dirname(lp), exist_ok=True)
-        tmp = lp + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
+        with open(lp, "w", encoding="utf-8") as f:
             f.write(text)
-        # os.replace is atomic on POSIX — strictly stronger than the
-        # Hadoop delete+rename below (no window with neither file)
-        os.replace(tmp, lp)
         return
     fs, jvm = _fs(spark, path_str)
-    tmp = jvm.org.apache.hadoop.fs.Path(path_str + ".tmp")
-    out = fs.create(tmp, True)
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), True)
     try:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
+
+
+def _write_text_atomic(spark: SparkSession, path_str: str, text: str) -> None:
+    _write_text(spark, path_str + ".tmp", text)
+    lp = _local_path(path_str)
+    if lp is not None:
+        # os.replace is atomic on POSIX — strictly stronger than the
+        # Hadoop delete+rename below (no window with neither file)
+        os.replace(lp + ".tmp", lp)
+        return
+    fs, jvm = _fs(spark, path_str)
     final = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs.delete(final, False)  # stale same-name manifest from a crashed retry
-    if not fs.rename(tmp, final):
-        raise IOError(f"manifest rename failed: {path_str}")
+    fs.delete(final, False)
+    if not fs.rename(jvm.org.apache.hadoop.fs.Path(path_str + ".tmp"),
+                     final):
+        raise IOError(f"rename failed: {path_str}")
 
 
-# --- optimistic concurrency: put-if-absent commit claims ------------------
+# --- optimistic concurrency -----------------------------------------------
 
-#: Lease horizon for a claim whose holder died mid-commit: after this
-#: long with no manifest published, other writers expire the claim and
-#: take over the commit number. Must exceed the longest plausible
-#: version-directory write; a usurped-but-alive writer aborts at its
-#: ownership check instead of double-publishing.
+#: Lease horizon of `try_claim` (the run lease of analysis/runner.py):
+#: a claim this old belongs to a dead holder and may be expired. A
+#: usurped-but-alive holder aborts at its ownership check. The text
+#: index's compaction uses the same horizon for staged deltas.
 CLAIM_STALE_S = 900.0
-#: How long an acquiring writer waits (spin + sleep) for contended
-#: claims before giving up.
-CLAIM_ACQUIRE_TIMEOUT_S = 600.0
-#: Contended-claim polling starts here and doubles to the cap — an
-#: object store pays a LIST + GET per poll, so a loser waiting out a
-#: long compaction must back off rather than hammer the log.
-_CLAIM_POLL_S = 0.05
-_CLAIM_POLL_MAX_S = 2.0
 
-
-#: Rebase-retry ceiling per logical operation: a writer usurped this
-#: many times in a row is misconfigured (CLAIM_STALE_S shorter than
-#: its own write time) — fail loudly instead of looping forever.
+#: Rebase-retry ceiling per logical operation: a writer that loses
+#: this many commit races in a row (a long compaction against a
+#: stream of short merges) fails loudly instead of looping forever.
 MAX_COMMIT_RETRIES = 20
 
 
 class ConcurrentCommitError(RuntimeError):
-    """Another writer took this commit (or usurped our claim); the
-    caller must rebase on the new table state and retry."""
+    """Another writer published this commit number first (or, for a
+    `try_claim` lease, took the claim over); the caller must rebase
+    on the new state and retry."""
 
 
 class CommitUsurpedError(RuntimeError):
@@ -246,8 +242,7 @@ def put_if_absent(spark: SparkSession, path_str: str, text: str) -> bool:
     except Exception as e:
         # Only "already exists" means contention. Anything else (IO,
         # network, permissions) must surface — treating it as a held
-        # claim would make the writer silently poll out the full
-        # acquire timeout on every transient fault.
+        # claim would read every transient fault as contention.
         if _is_already_exists(e):
             return False
         raise
@@ -317,30 +312,41 @@ def _is_not_found(e: Exception) -> bool:
 
 
 def _rename_path(spark: SparkSession, src: str, dst: str) -> bool:
-    """Atomic rename; returns False if the source vanished or the
-    destination already exists (never replaces an existing dst)."""
-    scheme = urlparse(src).scheme
-    if scheme in ("", "file"):
-        s = src[7:] if src.startswith("file://") else src
-        d = dst[7:] if dst.startswith("file://") else dst
+    """Atomic rename that never replaces `dst`. Returns False when it
+    lost: `dst` exists, or `src` is gone (another actor moved or swept
+    it first). Every other failure raises, so an IO or permission
+    fault is never read as a lost race."""
+    s, d = _local_path(src), _local_path(dst)
+    if s is not None:
         try:
-            # link+unlink instead of os.rename: POSIX rename REPLACES
-            # an existing destination, which would let a restore
-            # clobber a third writer's fresh claim.
+            if os.path.isdir(s):
+                # POSIX rename refuses a non-empty target directory
+                os.rename(s, d)
+                return True
+            # a file target would be REPLACED by rename: link instead
             os.link(s, d)
-        except OSError:
-            return False
+        except OSError as e:
+            if e.errno in (errno.EEXIST, errno.ENOTEMPTY, errno.ENOENT):
+                return False
+            raise
         try:
             os.unlink(s)
         except OSError:
-            pass
+            pass  # the rename landed; a leftover src is debris
         return True
     fs, jvm = _fs(spark, src)
+    hfs = jvm.org.apache.hadoop.fs
     try:
-        return bool(fs.rename(jvm.org.apache.hadoop.fs.Path(src),
-                              jvm.org.apache.hadoop.fs.Path(dst)))
-    except Exception:
-        return False
+        # FileSystem.rename would move src INTO an existing directory
+        hfs.FileContext.getFileContext(
+            hfs.Path(src).toUri(), spark._jsc.hadoopConfiguration()
+        ).rename(hfs.Path(src), hfs.Path(dst), hfs.Options.Rename.NONE)
+    except Exception as e:
+        if (_is_already_exists(e) or _is_not_found(e)
+                or fs.exists(hfs.Path(dst))):
+            return False
+        raise
+    return True
 
 
 def _path_mtime_s(spark: SparkSession, path_str: str) -> float | None:
@@ -380,11 +386,11 @@ def _delete_path(spark: SparkSession, path_str: str,
 
 
 class CommitClaim:
-    """Exclusive ownership of one commit number, held from acquire to
-    publish. The claim file records the writer id; `verify()` re-reads
-    it immediately before the manifest publish so a lease-expired
-    writer aborts (ConcurrentCommitError) instead of clobbering the
-    usurper's commit."""
+    """A held `try_claim` lease (the run claim of analysis/runner.py).
+    The claim file records the holder id; `verify()` re-reads it
+    before each guarded step so a lease-expired holder aborts
+    (ConcurrentCommitError) instead of interleaving with the
+    usurper."""
 
     def __init__(self, spark: SparkSession, path_str: str, writer_id: str):
         self._spark = spark
@@ -396,10 +402,10 @@ class CommitClaim:
             owner = _read_text(self._spark, self.path).strip()
         except Exception as e:
             raise ConcurrentCommitError(
-                f"commit claim {self.path} disappeared") from e
+                f"claim {self.path} disappeared") from e
         if owner != self.writer_id:
             raise ConcurrentCommitError(
-                f"commit claim {self.path} usurped by {owner}")
+                f"claim {self.path} usurped by {owner}")
 
     def release(self) -> None:
         # delete only OUR claim — after a lease expiry the file may
@@ -462,46 +468,6 @@ def try_claim(spark: SparkSession, claim_path: str,
     return None
 
 
-def _acquire_commit(spark: SparkSession, table_path: str,
-                    stale_after_s: float | None = None,
-                    timeout_s: float | None = None,
-                    ) -> tuple[dict | None, int, CommitClaim]:
-    """Claim the NEXT commit number of `table_path`. Returns
-    (manifest-to-build-on, commit, held claim). Loops (bounded by
-    `timeout_s`) while another writer holds the next number; after
-    winning a claim, re-checks that no manifest was published at that
-    number in the meantime (the winner of N deletes its claim only
-    AFTER publishing, so a freshly-claimed number may already be
-    committed — then the claim is released and the next number is
-    contended instead). Defaults resolve the module constants at call
-    time so tests (and deployments) can tune them."""
-    if stale_after_s is None:
-        stale_after_s = CLAIM_STALE_S
-    if timeout_s is None:
-        timeout_s = CLAIM_ACQUIRE_TIMEOUT_S
-    deadline = time.monotonic() + timeout_s
-    poll = _CLAIM_POLL_S
-    while True:
-        man = read_table_manifest(spark, table_path)
-        commit = (man["commit"] if man else 0) + 1
-        claim = try_claim(
-            spark, f"{table_path}/{_LOG_DIR}/{commit:08d}.claim",
-            stale_after_s)
-        if claim is not None:
-            latest = read_table_manifest(spark, table_path)
-            if (latest["commit"] if latest else 0) < commit:
-                return man, commit, claim
-            claim.release()  # that number was published already
-            poll = _CLAIM_POLL_S  # progress happened: reset backoff
-            continue
-        if time.monotonic() > deadline:
-            raise TimeoutError(
-                f"could not acquire a commit claim on {table_path} "
-                f"within {timeout_s}s")
-        time.sleep(poll)
-        poll = min(poll * 2, _CLAIM_POLL_MAX_S)
-
-
 def _list_commit_ids(spark: SparkSession, table_path: str) -> list[int]:
     lp = _local_path(table_path)
     if lp is not None:
@@ -545,16 +511,17 @@ def _try_manifest(spark: SparkSession, table_path: str,
 
 def read_table_manifest(spark: SparkSession, table_path: str) -> dict | None:
     """Latest parseable manifest, or None if the table has no commits.
-    Skips a trailing partial manifest (writer died mid-publish on a
-    store without atomic rename) — readers then see the prior commit.
+    Skips a trailing unparseable manifest (one a store without atomic
+    rename tore) — readers then see the prior commit.
 
     Resolution is O(1) manifest reads on the happy path: commit ids
-    are DENSE (claimed as latest+1 under the OCC claim), so the
-    advisory `_log/LATEST` pointer (a lower bound) plus a forward
-    probe reaches the head without listing the O(commits) log — the
-    same protocol as the change-feed source's `_latest_commit`. Only
-    when the pointer is absent/stale-unparseable does it fall back to
-    the full listing, scanned newest-first."""
+    are DENSE (a writer publishes N only after it read N-1 as the
+    head), so the advisory `_log/LATEST` pointer (a lower bound) plus
+    a forward probe reaches the head without listing the O(commits)
+    log — the same protocol as the change-feed source's
+    `_latest_commit`. Only when the pointer is absent/stale-
+    unparseable does it fall back to the full listing, scanned
+    newest-first."""
     try:
         hint = int(_read_text(
             spark, f"{table_path}/{_LOG_DIR}/LATEST").strip())
@@ -576,7 +543,7 @@ def read_table_manifest(spark: SparkSession, table_path: str) -> dict | None:
 
 
 def _commit(spark: SparkSession, table_path: str, commit: int,
-            n_buckets: int, origin_cols: Sequence[str],
+            writer: str, n_buckets: int, origin_cols: Sequence[str],
             buckets: dict[int, int], op: str = "merge",
             bases: dict[int, str] | None = None,
             txn: dict | None = None,
@@ -585,8 +552,11 @@ def _commit(spark: SparkSession, table_path: str, commit: int,
             dv: dict[int, str] | None = None,
             dv_bases: dict[str, str] | None = None,
             dv_rows: dict[int, int] | None = None) -> None:
-    import time
-
+    """Publish `commit`: write the manifest to a writer-unique temp and
+    rename it to ``_log/<commit>.json`` without replacing anything.
+    Raises ConcurrentCommitError when the head is no longer
+    ``commit - 1`` (no table at all, for a clone) or another writer
+    published that number first."""
     man = {"commit": commit, "n_buckets": n_buckets,
            "origin": list(origin_cols), "op": op,
            "ts_ms": int(time.time() * 1000),
@@ -625,9 +595,31 @@ def _commit(spark: SparkSession, table_path: str, commit: int,
         if dv_rows:
             man["dv_rows"] = {str(b): int(n)
                               for b, n in sorted(dv_rows.items())}
-    _write_text_atomic(
-        spark, f"{table_path}/{_LOG_DIR}/{commit:08d}.json",
-        json.dumps(man, indent=0))
+    final = f"{table_path}/{_LOG_DIR}/{commit:08d}.json"
+    tmp = f"{final}.tmp-{writer}"
+    _write_text(spark, tmp, json.dumps(man, indent=0))
+    # Re-read the head just before the rename. The rename only refuses
+    # a manifest that EXISTS: a writer that read head N-1 before a long
+    # data write could otherwise land on an N that rivals passed and
+    # vacuum then pruned, below the head where no reader looks.
+    head = read_table_manifest(spark, table_path)
+    parent = 0 if op == "clone" else commit - 1
+    if (head["commit"] if head else 0) != parent:
+        _delete_path(spark, tmp)
+        raise ConcurrentCommitError(
+            f"the head of {table_path} moved past {parent} before "
+            f"commit {commit} could publish")
+    if not _rename_path(spark, tmp, final):
+        _delete_path(spark, tmp)
+        if (_try_manifest(spark, table_path, commit) is None
+                and _path_mtime_s(spark, final) is not None):
+            # a rival's rename publishes whole manifests only
+            raise RuntimeError(
+                f"{final} exists but cannot be parsed (a torn write); "
+                "readers skip it, and no commit lands until it is removed")
+        raise ConcurrentCommitError(
+            f"commit {commit} of {table_path} was published by another "
+            "writer")
     # Advisory latest-commit pointer: lets pollers (the change-feed
     # source's latestOffset) resolve the head in O(1) reads instead of
     # listing the whole O(commits) log. Best-effort and NOT guaranteed
@@ -1005,19 +997,16 @@ def dedup_within_watermark(stream: DataFrame, key_cols: Sequence[str],
 
 
 def _write_version(df: DataFrame, table_path: str, commit: int,
-                   n_files_hint: int, claim: CommitClaim,
+                   n_files_hint: int, writer: str,
                    sort_cols: Sequence | None = None) -> str:
     # One output file per bucket (instead of shuffle-partitions ×
-    # buckets small files). The directory name embeds the claim's
-    # writer id, so no two writers — even two holding the same commit
-    # number through a lease-expiry race, or a lease-expired original
-    # holder still mid-write — can ever touch the same directory: the
-    # manifest publish then references exactly the data its verified
-    # claim holder wrote, and a loser's directory is unreferenced
-    # debris for vacuum. (Same idiom as Delta's uniquely-named data
-    # files + log references.) mode=overwrite clears debris from a
-    # crashed attempt by this same writer only.
-    vdir = f"v{commit:08d}-{claim.writer_id[:8]}"
+    # buckets small files). The directory name embeds the writer id,
+    # so two writers racing for the same commit number never touch
+    # the same directory: the manifest that wins the publish
+    # references exactly the data its writer wrote, and a loser's
+    # directory is unreferenced debris for vacuum. (Same idiom as
+    # Delta's uniquely-named data files + log references.)
+    vdir = f"v{commit:08d}-{writer}"
     out = df.repartition(max(n_files_hint, 1), F.col(BUCKET_COL))
     if sort_cols:
         # cluster rows inside each bucket file: parquet row-group
@@ -1112,8 +1101,7 @@ def foreach_batch_upsert(table_path: str, origin_cols: Sequence[str],
                             deletes=deletes):
             return
 
-        def attempt(man: dict | None, commit: int,
-                    claim: CommitClaim) -> None:
+        def attempt(man: dict | None, commit: int, writer: str) -> None:
             txn = dict((man or {}).get("txn", {}))
             if txn_app_id is not None:
                 applied = txn.get(txn_app_id)
@@ -1121,7 +1109,7 @@ def foreach_batch_upsert(table_path: str, origin_cols: Sequence[str],
                     return  # checkpoint replay of an applied batch
                 txn[txn_app_id] = batch_id
             _merge_attempt(
-                spark, table_path, man, commit, claim, origin_cols,
+                spark, table_path, man, commit, writer, origin_cols,
                 batch, deletes, txn=txn, mode=mode,
                 nb=man["n_buckets"] if man else (n_buckets
                                                  or DEFAULT_N_BUCKETS),
@@ -1134,26 +1122,27 @@ def foreach_batch_upsert(table_path: str, origin_cols: Sequence[str],
 
 def _retry_commit(spark: SparkSession, table_path: str,
                   attempt: Callable, what: str):
-    """Optimistic concurrency: claim the next commit number and run
-    `attempt(man, commit, claim)` against the manifest it succeeds. A
-    lost race (another stream, or a maintenance job like compact)
-    surfaces as ConcurrentCommitError -> rebase on the NEW manifest
-    and retry at the next number; nothing is lost on either side."""
+    """Optimistic concurrency, the one retry loop of every commit: read
+    the head and run `attempt(man, head + 1, writer)` under a fresh
+    writer id. A lost publish (another stream, or a maintenance job
+    like compact) surfaces as ConcurrentCommitError -> rebase on the
+    NEW head and retry at the next number; nothing is lost on either
+    side. A torn manifest at the next number is no race: `_commit`
+    raises at once instead of losing to it every round."""
     for _ in range(MAX_COMMIT_RETRIES):
-        man, commit, claim = _acquire_commit(spark, table_path)
+        man = read_table_manifest(spark, table_path)
+        commit = (man["commit"] if man else 0) + 1
         try:
-            return attempt(man, commit, claim)
+            return attempt(man, commit, uuid.uuid4().hex[:8])
         except ConcurrentCommitError:
             continue
-        finally:
-            claim.release()
     raise CommitUsurpedError(
-        f"{what} {table_path} was usurped {MAX_COMMIT_RETRIES} times; "
-        "raise CLAIM_STALE_S above its write time")
+        f"{what} {table_path} lost {MAX_COMMIT_RETRIES} commit races "
+        "in a row")
 
 
 def _merge_attempt(spark: SparkSession, table_path: str, man: dict | None,
-                   commit: int, claim: CommitClaim,
+                   commit: int, writer: str,
                    origin_cols: Sequence[str], batch: DataFrame | None,
                    deletes: DataFrame | None, *, txn: dict, nb: int,
                    bk: Sequence[str], mode: str = "existing_wins",
@@ -1169,9 +1158,8 @@ def _merge_attempt(spark: SparkSession, table_path: str, man: dict | None,
         tagged = batch.select(BUCKET_COL, F.lit(False).alias("d"))
     if man is None:  # creation: nothing stored for deletes to hit
         hit = sorted(r[0] for r in tagged.distinct().collect())
-        vdir = _write_version(batch, table_path, commit, len(hit), claim)
-        claim.verify()
-        _commit(spark, table_path, commit, nb, origin,
+        vdir = _write_version(batch, table_path, commit, len(hit), writer)
+        _commit(spark, table_path, commit, writer, nb, origin,
                 {b: commit for b in hit}, txn=txn, bucket_on=bk,
                 vdirs={commit: vdir})
         return
@@ -1220,7 +1208,7 @@ def _merge_attempt(spark: SparkSession, table_path: str, man: dict | None,
         elif batch is not None:
             merged = idempotent_upsert(merged, batch, origin)
         vdirs[commit] = _write_version(merged, table_path, commit,
-                                       len(hit), claim)
+                                       len(hit), writer)
         buckets.update({b: commit for b in hit})
         if set(hit) - upserted:
             # a bucket its deletes emptied writes no directory: drop
@@ -1235,11 +1223,10 @@ def _merge_attempt(spark: SparkSession, table_path: str, man: dict | None,
         # deleted keys in every other bucket: dv entries of this same
         # commit, O(deleted keys) written, no data file touched
         dvdir, counts = _write_dv(spark, table_path, man, dead, dv_hit,
-                                  commit, claim)
+                                  commit, writer)
         dv.update({b: dvdir for b in dv_hit})
         dv_rows = {**dv_rows, **counts}
-    claim.verify()  # abort, not clobber, if our lease was usurped
-    _commit(spark, table_path, commit, nb, origin, buckets, op=op,
+    _commit(spark, table_path, commit, writer, nb, origin, buckets, op=op,
             bases=_bases(man), txn=txn, bucket_on=bk, vdirs=vdirs,
             dv=dv, dv_bases=_dv_bases(man), dv_rows=dv_rows)
 
@@ -1383,8 +1370,8 @@ def delete_origins(spark: SparkSession, table_path: str,
     if read_table_manifest(spark, table_path) is None:
         raise ValueError(f"{table_path} has no commits")
 
-    def attempt(man: dict, commit: int, claim: CommitClaim) -> int:
-        _merge_attempt(spark, table_path, man, commit, claim,
+    def attempt(man: dict, commit: int, writer: str) -> int:
+        _merge_attempt(spark, table_path, man, commit, writer,
                        man["origin"], None, keys, txn=man.get("txn"),
                        nb=man["n_buckets"], bk=_bucket_on(man),
                        rewrite=strategy == "rewrite", op="delete")
@@ -1409,7 +1396,7 @@ def delete_where(spark: SparkSession, table_path: str, condition,
     Snapshot-isolation semantics: the predicate is evaluated against
     the snapshot current at call time — rows a CONCURRENT writer
     inserts while this runs are not deleted even if they match (the
-    key-delete rebases through the claim protocol, but the key set is
+    key-delete rebases on a lost commit race, but the key set is
     fixed). Re-run to cover later arrivals."""
     man = read_table_manifest(spark, table_path)
     if man is None:
@@ -1467,7 +1454,7 @@ def _written_rows(path: str) -> dict[int, int]:
 
 def _write_dv(spark: SparkSession, table_path: str, man: dict,
               keyed: DataFrame, hit: Sequence[int], commit: int,
-              claim: CommitClaim) -> tuple[str, dict[int, int]]:
+              writer: str) -> tuple[str, dict[int, int]]:
     """Write `keyed`'s keys in the `hit` buckets (unioned with each
     bucket's existing dv, so one dv dir per bucket always suffices)
     into a fresh writer-unique dv directory. Returns the directory
@@ -1483,7 +1470,7 @@ def _write_dv(spark: SparkSession, table_path: str, man: dict,
             read_parquet_fast(spark, *prior_paths).select(*kc)
             .withColumn(BUCKET_COL, origin_bucket(bk, man["n_buckets"])))
     new_keys = new_keys.dropDuplicates([*origin, BUCKET_COL])
-    dvdir = f"dv{commit:08d}-{claim.writer_id[:8]}"
+    dvdir = f"dv{commit:08d}-{writer}"
     (new_keys.repartition(max(len(hit), 1), F.col(BUCKET_COL))
      .write.mode("overwrite").partitionBy(BUCKET_COL)
      .parquet(f"{table_path}/{dvdir}"))
@@ -1497,8 +1484,8 @@ def compact_table(spark: SparkSession, table_path: str,
     file per bucket) and commit — the OPTIMIZE step that bounds file
     count after long availableNow histories. With `vacuum`, superseded
     version data is deleted afterwards; post-state is ≤ n_buckets data
-    files. Runs under the commit-claim protocol, so it can race a
-    live ingest stream safely — whoever loses the claim rebases.
+    files. Commits like any merge, so it can race a live ingest
+    stream safely — whoever loses the publish rebases.
 
     `cluster_by` (columns or expressions) sorts rows WITHIN each
     bucket file — the Delta ``OPTIMIZE ... ZORDER BY`` analog: parquet
@@ -1516,14 +1503,14 @@ def compact_table(spark: SparkSession, table_path: str,
     if read_table_manifest(spark, table_path) is None:
         return  # nonexistent table: no-op, and no _log debris
 
-    def attempt(man: dict, commit: int, claim: CommitClaim) -> None:
+    def attempt(man: dict, commit: int, writer: str) -> None:
         # dv-resolved: compaction materializes pending merge-on-read
         # deletes, so the new manifest carries no dv at all
         df = (_read_resolved(spark, table_path, man)
               .withColumn(BUCKET_COL, origin_bucket(_bucket_on(man),
                                                     man["n_buckets"])))
         vdir = _write_version(df, table_path, commit,
-                              len(man["buckets"]), claim,
+                              len(man["buckets"]), writer,
                               sort_cols=cluster_by)
         live = set(man["buckets"])
         if _dv(man):
@@ -1531,8 +1518,7 @@ def compact_table(spark: SparkSession, table_path: str,
             # from the mapping instead of dangling the path
             live = {b for b, n in
                     _written_rows(f"{table_path}/{vdir}").items() if n}
-        claim.verify()
-        _commit(spark, table_path, commit, man["n_buckets"],
+        _commit(spark, table_path, commit, writer, man["n_buckets"],
                 man["origin"],
                 {b: commit for b in man["buckets"] if b in live},
                 op="compact", txn=man.get("txn"),
@@ -1549,21 +1535,20 @@ def rebucket_table(spark: SparkSession, table_path: str,
     full rewrite under the new hash — the explicit maintenance path
     for a table whose buckets passed ~2× `TARGET_BUCKET_BYTES`.
     Subsequent merges follow the new manifest automatically (a merge
-    racing the rebucket rebases onto the new bucket count via the
-    commit-claim protocol). Like `compact_table`, it raises
+    racing the rebucket rebases onto the new bucket count when it
+    loses the publish). Like `compact_table`, it raises
     CommitUsurpedError after MAX_COMMIT_RETRIES lost races."""
     if read_table_manifest(spark, table_path) is None:
         return  # nonexistent table: no-op, and no _log debris
 
-    def attempt(man: dict, commit: int, claim: CommitClaim) -> None:
+    def attempt(man: dict, commit: int, writer: str) -> None:
         df = (_read_resolved(spark, table_path, man)
               .withColumn(BUCKET_COL, origin_bucket(_bucket_on(man),
                                                     new_n_buckets)))
         vdir = _write_version(df, table_path, commit, new_n_buckets,
-                              claim)
+                              writer)
         live = _written_rows(f"{table_path}/{vdir}")
-        claim.verify()
-        _commit(spark, table_path, commit, new_n_buckets,
+        _commit(spark, table_path, commit, writer, new_n_buckets,
                 man["origin"], {b: commit for b, n in live.items() if n},
                 op="rebucket", txn=man.get("txn"),
                 bucket_on=man.get("bucket_on"), vdirs={commit: vdir})
@@ -1786,20 +1771,16 @@ def vacuum_table(spark: SparkSession, table_path: str,
     for commit in _list_commit_ids(spark, table_path)[:-keep_manifests]:
         if commit != man["commit"] and commit not in retained_commits:
             fs.delete(hp(f"{table_path}/{_LOG_DIR}/{commit:08d}.json"), False)
-    # claim files for already-published commit numbers are dead (their
-    # holder either published or lost); only a claim ABOVE the latest
-    # commit may belong to an in-flight writer
-    try:
-        for st in fs.listStatus(hp(f"{table_path}/{_LOG_DIR}")):
-            name = st.getPath().getName()
-            if name.endswith(".claim") or ".claim.tomb-" in name:
-                try:
-                    if int(name.split(".", 1)[0]) <= man["commit"]:
-                        fs.delete(st.getPath(), False)
-                except ValueError:
-                    pass
-    except Exception:
-        pass
+    # A manifest temp at or below the head belongs to a writer that
+    # lost its race or died; one above it may be in flight. Commit
+    # claims are left over from tables written before commits went
+    # lease-free: nothing reads them.
+    for st in fs.listStatus(hp(f"{table_path}/{_LOG_DIR}")):
+        name = st.getPath().getName()
+        num, tmp, _ = name.partition(".json.tmp-")
+        if (name.endswith(".claim") or ".claim.tomb-" in name
+                or (tmp and num.isdigit() and int(num) <= man["commit"])):
+            fs.delete(st.getPath(), False)
 
 
 def maybe_compact(spark: SparkSession, table_path: str,
@@ -1962,30 +1943,23 @@ def clone_table(spark: SparkSession, src_path: str, dst_path: str) -> None:
     if read_table_manifest(spark, dst_path) is not None:
         raise ValueError(f"{dst_path} already exists; clone only "
                          "creates new tables")
-    # claim the destination's first commit number so two concurrent
-    # clones (or a clone racing a first merge) cannot both create it
-    claim = try_claim(
-        spark, f"{dst_path}/{_LOG_DIR}/{man['commit']:08d}.claim")
-    if claim is None:
-        raise ValueError(f"{dst_path} is being created concurrently")
+    src_bases = _bases(man)
+    bases = {ver: src_bases.get(ver, src_path)
+             for ver in set(man["buckets"].values())}
+    # inherited deletion vectors stay where they are too: root every
+    # dv dirname at the source (or ITS source, if chained)
+    src_dv_bases = _dv_bases(man)
+    dv = _dv(man)
+    dv_bases = {d: src_dv_bases.get(d, src_path) for d in set(dv.values())}
+    # the no-replace publish admits one of two concurrent clones, and
+    # `_commit`'s head re-check refuses a clone once a first merge
+    # created the table (its publish at 1 would not collide with N)
     try:
-        if read_table_manifest(spark, dst_path) is not None:
-            raise ValueError(f"{dst_path} already exists; clone only "
-                             "creates new tables")
-        src_bases = _bases(man)
-        bases = {ver: src_bases.get(ver, src_path)
-                 for ver in set(man["buckets"].values())}
-        # inherited deletion vectors stay where they are too: root
-        # every dv dirname at the source (or ITS source, if chained)
-        src_dv_bases = _dv_bases(man)
-        dv = _dv(man)
-        dv_bases = {d: src_dv_bases.get(d, src_path)
-                    for d in set(dv.values())}
-        claim.verify()
-        _commit(spark, dst_path, man["commit"], man["n_buckets"],
-                man["origin"], man["buckets"], op="clone", bases=bases,
-                txn=man.get("txn"), bucket_on=man.get("bucket_on"),
-                vdirs=_vdirs(man), dv=dv, dv_bases=dv_bases,
-                dv_rows=_dv_rows(man))
-    finally:
-        claim.release()
+        _commit(spark, dst_path, man["commit"], uuid.uuid4().hex[:8],
+                man["n_buckets"], man["origin"], man["buckets"],
+                op="clone", bases=bases, txn=man.get("txn"),
+                bucket_on=man.get("bucket_on"), vdirs=_vdirs(man), dv=dv,
+                dv_bases=dv_bases, dv_rows=_dv_rows(man))
+    except ConcurrentCommitError:
+        raise ValueError(f"{dst_path} already exists; clone only "
+                         "creates new tables") from None

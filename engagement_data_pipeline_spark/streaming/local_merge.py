@@ -12,7 +12,7 @@ at small corpus sizes (VERDICT r13 task 1 / "What's missing" #1).
 A metadata commit should never launch a cluster job: Delta commits
 its transaction log driver-side for the same reason.
 
-`upsert_rows_local` takes the SAME OCC commit claim, applies the SAME
+`upsert_rows_local` runs in the SAME commit retry loop, applies the SAME
 merge semantics, and publishes the SAME manifest JSON as the engine
 path — bucket assignment included, via a pure-Python implementation
 of Spark's xxhash64 (property-tested against `F.xxhash64`, see
@@ -166,15 +166,15 @@ def upsert_rows_local(spark: SparkSession, table_path: str,
                       mode: str = "latest_wins",
                       delete_keys: Sequence[Mapping] | None = None) -> None:
     """Merge a small list of row dicts into a versioned merge table
-    WITHOUT launching Spark jobs — same claims, same manifest, same
+    WITHOUT launching Spark jobs — same commit loop, same manifest, same
     layout as `foreach_batch_upsert`, executed with pyarrow on the
     driver. `schema` is the pyarrow schema of the table's data
     columns (used to build/validate row batches; creation writes it,
     an existing table must match it by column NAMES — control tables
     do not schema-evolve through this path).
 
-    Semantics mirror the engine path exactly: OCC commit claim with
-    rebase-and-retry on a lost race, txn replay skip under
+    Semantics mirror the engine path exactly: the no-replace manifest
+    publish with rebase-and-retry on a lost race, txn replay skip under
     `txn_app_id`/`batch_id`, latest_wins / existing_wins matched-row
     policy, deletion vectors of rewritten buckets applied and
     materialized, dv/vdir/bases/txn manifest fields carried forward.
@@ -204,21 +204,13 @@ def upsert_rows_local(spark: SparkSession, table_path: str,
 
     from .cdf_source import _fs_path
 
-    for _ in range(_ing.MAX_COMMIT_RETRIES):
-        man, commit, claim = _ing._acquire_commit(spark, table_path)
-        try:
-            _apply_local(spark, table_path, rows, schema, origin_cols,
-                         man, commit, claim, n_buckets, bucket_cols,
-                         txn_app_id, batch_id, mode, pa, pq, _fs_path,
-                         delete_keys or ())
-            return
-        except _ing.ConcurrentCommitError:
-            continue
-        finally:
-            claim.release()
-    raise _ing.CommitUsurpedError(
-        f"local merge into {table_path} was usurped "
-        f"{_ing.MAX_COMMIT_RETRIES} times")
+    _ing._retry_commit(
+        spark, table_path,
+        lambda man, commit, writer: _apply_local(
+            spark, table_path, rows, schema, origin_cols, man, commit,
+            writer, n_buckets, bucket_cols, txn_app_id, batch_id, mode,
+            pa, pq, _fs_path, delete_keys or ()),
+        "local merge into")
 
 
 #: grouped-batch row bound for the automatic fast path inside
@@ -434,7 +426,7 @@ def _read_bucket_rows(pa, pq, fs_path, path: str, names) -> list[dict]:
 
 
 def _apply_local(spark, table_path, rows, schema, origin_cols, man,
-                 commit, claim, n_buckets, bucket_cols, txn_app_id,
+                 commit, writer, n_buckets, bucket_cols, txn_app_id,
                  batch_id, mode, pa, pq, fs_path,
                  delete_keys: Sequence[Mapping] = ()) -> None:
     txn = dict((man or {}).get("txn", {}))
@@ -496,7 +488,6 @@ def _apply_local(spark, table_path, rows, schema, origin_cols, man,
                 else:
                     slot[key] = er
 
-    writer = claim.writer_id[:8]
     vdir = f"v{commit:08d}-{writer}"
     fs, root = fs_path(table_path)
 
@@ -524,16 +515,15 @@ def _apply_local(spark, table_path, rows, schema, origin_cols, man,
                pa.schema([schema.field(c) for c in kc]))
         dv_counts[b] = len(keys)
 
-    claim.verify()  # abort, not clobber, if our lease was usurped
     if man is None:
-        _ing._commit(spark, table_path, commit, nb, origin_cols,
+        _ing._commit(spark, table_path, commit, writer, nb, origin_cols,
                      {b: commit for b in hit}, txn=txn, bucket_on=bk,
                      vdirs={commit: vdir})
         return
     dv = {b: d for b, d in _ing._dv(man).items()
           if b not in set(hit)}
     dv.update({b: dvdir for b in dv_hit})
-    _ing._commit(spark, table_path, commit, nb, origin_cols,
+    _ing._commit(spark, table_path, commit, writer, nb, origin_cols,
                  {**man["buckets"], **{b: commit for b in hit}},
                  bases=_ing._bases(man), txn=txn, bucket_on=bk,
                  vdirs={**_ing._vdirs(man), commit: vdir},

@@ -274,7 +274,7 @@ def _delta_seqs(spark, index_path: str) -> list[int]:
     committed iff its final `d####` directory exists — writers stage
     under `deltas/.tmp-*` and rename into place as the last step, so
     a partially-written delta (crash before the stats landed) is
-    never visible here; `.claim-d####` lock files are skipped too."""
+    never visible here."""
     from py4j.protocol import Py4JJavaError
 
     from ..streaming.ingest import _local_path
@@ -306,8 +306,11 @@ def _delta_seqs(spark, index_path: str) -> list[int]:
         return []
 
 
-def _index_stats(spark, index_path: str):
-    seqs = _delta_seqs(spark, index_path)
+def _index_stats(spark, index_path: str, seqs: list[int] | None = None):
+    """The carried corpus stats of the tail of `seqs` (default: the
+    current delta listing)."""
+    if seqs is None:
+        seqs = _delta_seqs(spark, index_path)
     src = (f"{index_path}/deltas/d{seqs[-1]:04d}/stats" if seqs
            else f"{index_path}/stats")
     from ..streaming.ingest import read_parquet_fast
@@ -344,28 +347,28 @@ def update_text_index(spark, index_path: str, new_docs: DataFrame | None,
     replayed stream batch — skipped entirely).
 
     `txn_batch` is the stream-sink exactly-once hook: the stats row
-    carries the highest applied batch id, and the check happens UNDER
-    the sequence claim against the stats the new delta chains from,
-    publishing watermark + postings + tombstones in the delta's one
-    atomic rename — a crash anywhere replays to the same decision.
+    carries the highest applied batch id, and the check runs against
+    the stats the new delta chains from, publishing watermark +
+    postings + tombstones in the delta's one atomic rename — a crash
+    anywhere replays to the same decision.
 
-    Crash-atomic AND multi-writer-safe: the segment is staged under
-    ``deltas/.tmp-<nonce>`` and renamed to its final ``d####`` name as
-    the LAST step (after the stats file landed), so readers never see
-    a partial delta. The sequence number is allocated with the same
-    put-if-absent claim protocol as the versioned merge table
-    (streaming/ingest): stats chain cumulatively, so delta N may only
-    be claimed once delta N-1 is visible — a concurrent writer that
-    loses the claim waits for the winner's rename, rebases its carried
-    stats on the new tail, and takes the next number. Crashed-claim
-    leases and orphaned ``.tmp-*`` dirs are reclaimed by timeout /
-    `compact_text_index` respectively."""
-    import time as _time
+    Crash-atomic AND multi-writer-safe, with the merge table's rule
+    for directories: delta N exists iff its no-replace rename
+    succeeded. The segment is staged under ``deltas/.tmp-<nonce>``,
+    its stats are chained from the tail it listed, and the staged
+    directory is renamed to ``d####`` without replacing anything
+    (every published delta holds files, so a local rename refuses
+    it; remote stores use FileContext's no-replace rename). The writer
+    lists the deltas again just before the rename; if the listing
+    changed, or the rename lost, it recomputes its stats from the new
+    listing and tries the next number. Nothing is held, so a crashed
+    writer blocks nobody; its orphaned ``.tmp-*`` is swept by
+    `compact_text_index`."""
     import uuid as _uuid
+    from functools import reduce
 
     from ..streaming.ingest import (
-        CLAIM_ACQUIRE_TIMEOUT_S, _CLAIM_POLL_MAX_S, _CLAIM_POLL_S,
-        try_claim)
+        MAX_COMMIT_RETRIES, CommitUsurpedError, _delete_path, _rename_path)
 
     # one row per doc: a replayed/duplicated row in the change feed
     # must not double-count in the carried stats
@@ -374,22 +377,12 @@ def update_text_index(spark, index_path: str, new_docs: DataFrame | None,
     if removed_docs is not None:
         removed_docs = removed_docs.dropDuplicates([id_col])
 
-    def _dl_count(docs: DataFrame):
-        words = F.split(normalize_text(F.col(text_col)), " ")
-        return docs.select(F.size(words).cast("long").alias("dl")).agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("s")
-        ).first()
-
     # Stage the writer-independent parts first (postings, tombstones):
     # these never need rebasing, whoever else commits meanwhile.
     tmp = f"{index_path}/deltas/.tmp-{_uuid.uuid4().hex}"
-    n_new = s_new = n_rm = s_rm = 0
     if new_docs is not None:
         tf, _ = term_stats(new_docs, text_col, id_col)
         tf.write.mode("overwrite").parquet(f"{tmp}/postings")
-        r = _dl_count(new_docs)
-        n_new, s_new = r["n"], r["s"]
     else:
         spark.createDataFrame(
             [], "doc_id long, term string, tf long, dl long"
@@ -397,72 +390,57 @@ def update_text_index(spark, index_path: str, new_docs: DataFrame | None,
     if removed_docs is not None:
         (removed_docs.select(F.col(id_col).alias("doc_id")).distinct()
          .write.mode("overwrite").parquet(f"{tmp}/removed"))
-        r = _dl_count(removed_docs)
-        n_rm, s_rm = r["n"], r["s"]
     else:
         spark.createDataFrame([], "doc_id long").write.mode(
             "overwrite").parquet(f"{tmp}/removed")
+    # both sides' doc counts and length sums in ONE aggregate
+    words = F.split(normalize_text(F.col(text_col)), " ")
+    sides = [docs.select(F.lit(rm).alias("rm"),
+                         F.size(words).cast("long").alias("dl"))
+             for docs, rm in ((new_docs, False), (removed_docs, True))
+             if docs is not None]
+    d = {"n_new": 0, "s_new": 0, "n_rm": 0, "s_rm": 0}
+    if sides:
+        rm, dl = F.col("rm"), F.col("dl")
+        d = reduce(DataFrame.unionByName, sides).agg(
+            F.count(F.when(~rm, 1)).alias("n_new"),
+            F.coalesce(F.sum(F.when(~rm, dl)), F.lit(0)).alias("s_new"),
+            F.count(F.when(rm, 1)).alias("n_rm"),
+            F.coalesce(F.sum(F.when(rm, dl)), F.lit(0)).alias("s_rm"),
+        ).first().asDict()
 
-    deadline = _time.monotonic() + CLAIM_ACQUIRE_TIMEOUT_S
-    poll = _CLAIM_POLL_S
     published = False
     try:
-        while True:
-            seqs = _delta_seqs(spark, index_path)
+        seqs = _delta_seqs(spark, index_path)
+        for _ in range(MAX_COMMIT_RETRIES):
             seq = (seqs[-1] + 1) if seqs else 1
-            claim = try_claim(spark,
-                              f"{index_path}/deltas/.claim-d{seq:04d}")
-            if claim is not None:
-                post = _delta_seqs(spark, index_path)
-                if post and post[-1] >= seq:
-                    # committed between our listing and the claim (the
-                    # winner releases only after its rename): next one
-                    claim.release()
-                    poll = _CLAIM_POLL_S
-                    continue
-                break
-            if _time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"could not claim a delta sequence on {index_path}")
-            _time.sleep(poll)
-            poll = min(poll * 2, _CLAIM_POLL_MAX_S)
-        try:
-            # carried stats rebase under the claim: delta seq-1 is
-            # committed (checked above) and nobody else may commit seq
-            cur = _index_stats(spark, index_path).first()
+            cur = _index_stats(spark, index_path, seqs).first()
             applied = _txn_of(cur)
             if txn_batch is not None and txn_batch <= applied:
                 return None  # replayed batch: already in the chain
             _write_stats(spark, f"{tmp}/stats",
-                         int(cur["n_docs"]) + n_new - n_rm,
-                         int(cur["sum_dl"]) + s_new - s_rm,
+                         int(cur["n_docs"]) + d["n_new"] - d["n_rm"],
+                         int(cur["sum_dl"]) + d["s_new"] - d["s_rm"],
                          max(applied,
                              -1 if txn_batch is None else txn_batch))
-            claim.verify()  # abort if our lease was usurped mid-write
-            _rename_dir(spark, tmp, f"{index_path}/deltas/d{seq:04d}")
-            published = True
-        finally:
-            claim.release()
+            # list again just before the rename: a compaction may have
+            # folded the tail these stats chain from and freed `seq`
+            now = _delta_seqs(spark, index_path)
+            if now == seqs:
+                published = _rename_path(
+                    spark, tmp, f"{index_path}/deltas/d{seq:04d}")
+                if published:
+                    return seq
+                now = _delta_seqs(spark, index_path)
+            seqs = now
+        raise CommitUsurpedError(
+            f"delta append to {index_path} lost {MAX_COMMIT_RETRIES} "
+            "races in a row")
     finally:
         if not published:
             # failed/aborted publish: do not leave a staged orphan for
             # compaction to sweep — remove our own .tmp now
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(tmp)
-            try:
-                p.getFileSystem(
-                    spark._jsc.hadoopConfiguration()).delete(p, True)
-            except Exception:
-                pass
-    return seq
-
-
-def _rename_dir(spark, src: str, dst: str) -> None:
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path
-    fs = hp(src).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hp(dst)) or not fs.rename(hp(src), hp(dst)):
-        raise IOError(f"delta publish rename failed: {src} -> {dst}")
+            _delete_path(spark, tmp, recursive=True)
 
 
 def _resolved_postings(spark, index_path: str,
@@ -523,16 +501,17 @@ def compact_text_index(spark, index_path: str,
 
     Safe against concurrent `update_text_index` writers: the delta
     listing is snapshotted ONCE; a delta committed after the snapshot
-    (or a writer's staged ``.tmp-*`` / held ``.claim-*``) is left in
-    place — its cumulative stats chained off the folded tail, and
+    (or a writer's staged ``.tmp-*``) is left in place — its
+    cumulative stats chained off the folded tail, and
     sequence-vs-tombstone resolution is unchanged by folding earlier
     deltas into the seq-0 base, so no committed change is ever lost.
     (Concurrent QUERIES retain the pre-existing brief window between
     the base rewrite and the folded-delta deletion where an unchanged
     doc's postings appear in both; run compaction from the maintenance
     actor if that matters.) Orphaned ``.tmp-*`` staging dirs are swept
-    only once older than the claim lease (a live writer's staging is
-    always younger)."""
+    only once older than `CLAIM_STALE_S` (a live writer's staging is
+    always younger); ``.claim-*`` files that indexes written before
+    lease-free deltas may hold are swept too — nothing reads them."""
     import time as _time
 
     from ..streaming.ingest import CLAIM_STALE_S
@@ -568,7 +547,8 @@ def compact_text_index(spark, index_path: str,
         horizon_ms = (_time.time() - CLAIM_STALE_S) * 1000
         for st in fs.listStatus(deltas):
             name = st.getPath().getName()
-            if (name.startswith(".tmp-")
+            if name.startswith(".claim-") or (
+                    name.startswith(".tmp-")
                     and st.getModificationTime() < horizon_ms):
                 fs.delete(st.getPath(), True)
     except Exception:
@@ -594,34 +574,31 @@ def text_index_stream_sink(index_path: str, text_col: str = "text",
             text_index_stream_sink(idx, "text", "doc_id")).start()
 
     Exactly-once: every appended delta carries the stream batch id in
-    its stats row (`update_text_index(txn_batch=...)`), checked under
-    the sequence claim and published by the delta's single atomic
-    rename — a foreachBatch crash-replay of an applied batch is a
-    complete no-op, and the watermark survives `compact_text_index`.
+    its stats row (`update_text_index(txn_batch=...)`), checked
+    against the stats the delta chains from and published by the
+    delta's single atomic rename — a foreachBatch crash-replay of an
+    applied batch is a complete no-op, and the watermark survives
+    `compact_text_index`.
     The first batch bootstraps the index via `build_text_index` when
     none exists (subscribe from startingCommit=0 and the history
     replay IS the build)."""
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        touched = F.array_contains(
+        op = F.col("op")
+        text_update = (op == "update") & F.array_contains(
             F.split(F.col("changed_cols"), ","), text_col)
-        new_docs = (batch.where(
-            (F.col("op") == "insert")
-            | ((F.col("op") == "update") & touched))
-            .select(F.col(id_col), F.col(text_col)))
-        removed = (batch.where(
-            (F.col("op") == "delete")
-            | ((F.col("op") == "update") & touched))
-            .select(F.col(id_col),
-                    F.col(f"{text_col}__old").alias(text_col)))
-        if new_docs.isEmpty() and removed.isEmpty():
-            # a batch whose changes are all outside the text column:
-            # appending a watermark-only delta would grow the segment
-            # list per batch; skipping is replay-safe (re-running a
-            # batch that produced nothing produces nothing)
+        new_docs = (batch.where((op == "insert") | text_update)
+                    .select(F.col(id_col), F.col(text_col)))
+        removed = (batch.where((op == "delete") | text_update)
+                   .select(F.col(id_col),
+                           F.col(f"{text_col}__old").alias(text_col)))
+        if batch.where(op.isin("insert", "delete") | text_update).isEmpty():
+            # an empty batch, or one whose changes are all outside the
+            # text column: appending a watermark-only delta would grow
+            # the segment list per batch; skipping is replay-safe
+            # (re-running a batch that produced nothing produces
+            # nothing)
             return
         from ..streaming.ingest import _local_path
 

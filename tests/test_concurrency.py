@@ -1,13 +1,15 @@
 """Multi-writer contention tests for the versioned merge table's
-optimistic-concurrency commit protocol: two concurrent committers
-must both land (no silently-clobbered manifest), crashed writers'
-claims must lease-expire, and a held claim must block politely."""
+optimistic-concurrency commit protocol: commit N exists iff its
+manifest's no-replace rename won, so two concurrent committers must
+both land (no silently-clobbered manifest), and a crashed writer
+must block nobody."""
 
 from __future__ import annotations
 
 import os
 import threading
 import time
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,6 +42,7 @@ def _run_threads(fns):
         t.start()
     for t in ts:
         t.join(timeout=300)
+    assert not any(t.is_alive() for t in ts)
     assert not errs, errs
 
 
@@ -68,9 +71,9 @@ def test_two_writer_merge_contention(spark, tmp_path):
     # txn watermarks of BOTH streams survived the contention
     man = ing.read_table_manifest(spark, path)
     assert man["txn"] == {"s1": 1, "s2": 1}
-    # no leftover claims once both publishes released
+    # the lost publish removed its manifest temp
     log = tmp_path / "t" / "_log"
-    assert not [f for f in os.listdir(log) if f.endswith(".claim")]
+    assert not [f for f in os.listdir(log) if ".json.tmp-" in f]
 
 
 def test_merge_racing_compact(spark, tmp_path):
@@ -110,51 +113,69 @@ def test_concurrent_deletes_and_merge(spark, tmp_path):
         "delete", "delete", "merge", "merge"]
 
 
-def test_stale_claim_lease_expires(spark, tmp_path, monkeypatch):
-    """A claim left by a crashed writer (old mtime, no manifest) is
-    expired after CLAIM_STALE_S and the next writer takes over the
-    commit number."""
+def _merge_past_leftover_claims(spark, tmp_path, plant):
+    """Seed a table, `plant(log_dir)` claim files as a table written
+    before commits went lease-free may hold, then check the next merge
+    commits at once and vacuum removes every claim file."""
     path = str(tmp_path / "t")
     merge = _seed(spark, path)
-    claim_file = tmp_path / "t" / "_log" / "00000002.claim"
-    claim_file.write_text("dead-writer")
-    old = time.time() - 3600
-    os.utime(claim_file, (old, old))
-    monkeypatch.setattr(ing, "CLAIM_STALE_S", 5.0)
+    log = tmp_path / "t" / "_log"
+    plant(log)
+    t0 = time.monotonic()
     merge(_batch(spark, ["d"], "late"), 1)
-    man = ing.read_table_manifest(spark, path)
-    assert man["commit"] == 2
+    assert time.monotonic() - t0 < 60
+    assert ing.read_table_manifest(spark, path)["commit"] == 2
     rows = {r.origin for r in ing.read_merged_table(spark, path).collect()}
     assert "d" in rows
+    ing.vacuum_table(spark, path)
+    assert not [n for n in os.listdir(log) if ".claim" in n]
 
 
-def test_live_claim_blocks_until_timeout(spark, tmp_path, monkeypatch):
-    """A FRESH claim (live writer) is honored: an acquirer waits and
-    eventually times out rather than stealing the commit number."""
-    path = str(tmp_path / "t")
-    merge = _seed(spark, path)
-    (tmp_path / "t" / "_log" / "00000002.claim").write_text("busy-writer")
-    monkeypatch.setattr(ing, "CLAIM_ACQUIRE_TIMEOUT_S", 1.0)
-    with pytest.raises(TimeoutError):
-        merge(_batch(spark, ["d"], "late"), 1)
-    # table unchanged
-    assert ing.read_table_manifest(spark, path)["commit"] == 1
+def test_stale_leftover_claim_does_not_block_commits(spark, tmp_path):
+    """A crashed writer's claim (old mtime, no manifest) and the
+    tombstone of a half-done expiry: the next writer takes commit 2
+    without waiting out any lease."""
+    def plant(log):
+        claim = log / "00000002.claim"
+        claim.write_text("dead-writer")
+        old = time.time() - 3600
+        os.utime(claim, (old, old))
+        (log / "00000002.claim.tomb-0123").write_text("dead-writer")
+
+    _merge_past_leftover_claims(spark, tmp_path, plant)
+
+
+def test_fresh_leftover_claim_does_not_block_commits(spark, tmp_path):
+    """A FRESH claim (what a live writer used to hold) no longer makes
+    the next writer wait or time out: it commits 2 at once."""
+    _merge_past_leftover_claims(
+        spark, tmp_path,
+        lambda log: (log / "00000002.claim").write_text("busy-writer"))
 
 
 def test_usurped_writer_aborts_at_publish(spark, tmp_path):
-    """verify() before publish: a writer whose claim was rewritten by
-    a usurper must raise ConcurrentCommitError, not publish."""
+    """A writer whose commit number another writer published first
+    raises ConcurrentCommitError at its publish instead of replacing
+    the published manifest, and removes its manifest temp."""
     path = str(tmp_path / "t")
-    _seed(spark, path)
-    man, commit, claim = ing._acquire_commit(spark, path)
-    # lease expiry elsewhere: usurper rewrites the claim file
-    (tmp_path / "t" / "_log" / f"{commit:08d}.claim").write_text("usurper")
+    merge = _seed(spark, path)
+    man = ing.read_table_manifest(spark, path)
+    commit, nb = man["commit"] + 1, man["n_buckets"]
+    batch = _batch(spark, ["x"], "late").withColumn(
+        ing.BUCKET_COL, ing.origin_bucket(["origin"], nb))
+    vdir = ing._write_version(batch, path, commit, 1, "late0000")
+    merge(_batch(spark, ["w"], "winner"), 1)  # publishes `commit`
+    published = ing.read_table_manifest(spark, path)
+    assert published["commit"] == commit
     with pytest.raises(ing.ConcurrentCommitError):
-        claim.verify()
-    # release() must NOT delete the usurper's claim
-    claim.release()
-    assert (tmp_path / "t" / "_log" / f"{commit:08d}.claim").exists()
-    os.remove(tmp_path / "t" / "_log" / f"{commit:08d}.claim")
+        ing._commit(spark, path, commit, "late0000", nb, ["origin"],
+                    {**man["buckets"], **{r[0]: commit for r in
+                                          batch.select(ing.BUCKET_COL)
+                                          .distinct().collect()}},
+                    vdirs={**ing._vdirs(man), commit: vdir})
+    assert ing.read_table_manifest(spark, path) == published
+    assert not [n for n in os.listdir(tmp_path / "t" / "_log")
+                if ".json.tmp-" in n]
 
 
 def test_concurrent_clone_single_winner(spark, tmp_path):
@@ -178,17 +199,26 @@ def test_concurrent_clone_single_winner(spark, tmp_path):
 
 
 def test_vacuum_cleans_dead_claims(spark, tmp_path):
+    """Vacuum sweeps what commits leave in `_log`: every claim file
+    (nothing reads them any more, whatever their number) and every
+    manifest temp at or below the head. A temp above the head may
+    belong to a writer still in flight, so it stays."""
     path = str(tmp_path / "t")
     merge = _seed(spark, path)
     merge(_batch(spark, ["x"], "v2"), 1)
-    # dead claim at an already-published number; live claim above
     log = tmp_path / "t" / "_log"
     (log / "00000001.claim").write_text("dead")
-    (log / "00000009.claim").write_text("maybe-live")
+    (log / "00000009.claim").write_text("old-table")
+    (log / "00000001.json.tmp-dead0000").write_text('{"commit": 1')
+    (log / "00000002.json.tmp-lost0000").write_text("{}")
+    (log / "00000003.json.tmp-live0000").write_text("{}")
     ing.vacuum_table(spark, path)
     names = set(os.listdir(log))
-    assert "00000001.claim" not in names
-    assert "00000009.claim" in names
+    assert not {"00000001.claim", "00000009.claim",
+                "00000001.json.tmp-dead0000",
+                "00000002.json.tmp-lost0000"} & names
+    assert "00000003.json.tmp-live0000" in names
+    assert ing.read_table_manifest(spark, path)["commit"] == 2
 
 
 def test_put_if_absent_local_atomicity(spark, tmp_path):
@@ -245,6 +275,72 @@ def test_concurrent_index_updates_no_lost_delta(spark, tmp_path):
     deltas = tmp_path / "idx" / "deltas"
     assert not [n for n in os.listdir(deltas) if n.startswith(".claim")]
     assert not [n for n in os.listdir(deltas) if n.startswith(".tmp")]
+
+
+def test_index_update_rechains_after_losing_the_rename(spark, tmp_path,
+                                                     monkeypatch):
+    """A writer whose delta listing is stale (here both its first
+    listing and its pre-rename check) tries a number a rival already
+    published: the no-replace rename refuses the non-empty d0001, and
+    the writer lists again, re-chains its stats from the rival's delta
+    and publishes d0002 — no delta or doc is lost."""
+    from engagement_data_pipeline_spark.training import ranking as R
+
+    idx = str(tmp_path / "idx")
+    R.build_text_index(_docs(spark, [(1, "alpha beta")]), idx)
+    R.update_text_index(spark, idx,
+                        new_docs=_docs(spark, [(2, "alpha gamma")]),
+                        removed_docs=None)
+    real, stale = R._delta_seqs, [[], []]
+    monkeypatch.setattr(R, "_delta_seqs", lambda spark_, path: (
+        stale.pop() if stale else real(spark_, path)))
+    seq = R.update_text_index(
+        spark, idx, new_docs=_docs(spark, [(3, "alpha delta qq")]),
+        removed_docs=None)
+    monkeypatch.undo()
+    assert seq == 2 and R._delta_seqs(spark, idx) == [1, 2]
+    [st] = R._index_stats(spark, idx).collect()
+    assert st.n_docs == 3 and st.sum_dl == 2 + 2 + 3
+    assert not [n for n in os.listdir(tmp_path / "idx" / "deltas")
+                if n.startswith(".tmp")]
+
+
+def test_index_update_rechains_after_a_compaction_frees_its_number(
+        spark, tmp_path, monkeypatch):
+    """A writer chains its stats from d0001 and, before its rename, a
+    rival publishes d0002 and a compaction folds both and deletes
+    them, so d0002 is free again. The writer's pre-rename listing
+    differs from the one it chained from: it re-chains from the new
+    base and publishes d0001, and the stats count every doc."""
+    from engagement_data_pipeline_spark.training import ranking as R
+
+    idx = str(tmp_path / "idx")
+    R.build_text_index(_docs(spark, [(1, "alpha beta")]), idx)
+    R.update_text_index(spark, idx,
+                        new_docs=_docs(spark, [(2, "alpha gamma")]),
+                        removed_docs=None)
+    real_stats, hit = R._write_stats, []
+
+    def rival_then_compact(spark_, path, *a):
+        if not hit:
+            hit.append(path)
+            R.update_text_index(
+                spark, idx, new_docs=_docs(spark, [(3, "alpha delta")]),
+                removed_docs=None)
+            R.compact_text_index(spark, idx)
+            assert R._delta_seqs(spark, idx) == []
+        return real_stats(spark_, path, *a)
+
+    monkeypatch.setattr(R, "_write_stats", rival_then_compact)
+    seq = R.update_text_index(
+        spark, idx, new_docs=_docs(spark, [(4, "alpha epsilon qq")]),
+        removed_docs=None)
+    monkeypatch.undo()
+    assert seq == 1 and R._delta_seqs(spark, idx) == [1]
+    [st] = R._index_stats(spark, idx).collect()
+    assert st.n_docs == 4 and st.sum_dl == 2 + 2 + 2 + 3
+    top = R.bm25_topk_indexed(spark, idx, {"q": ["alpha"]}, k=10)
+    assert {r.doc_id for r in top.collect()} == {1, 2, 3, 4}
 
 
 def test_partial_delta_stage_invisible(spark, tmp_path):
@@ -332,57 +428,60 @@ def test_put_if_absent_many_threads_single_winner(spark, tmp_path):
 
 
 def test_failed_index_update_cleans_staged_tmp(spark, tmp_path, monkeypatch):
-    """A claim-timeout abort must remove the writer's staged .tmp
-    segment instead of leaving debris for compaction."""
+    """A delta publish that fails for a reason other than a lost race
+    (an IO fault) raises that fault, publishes nothing, and removes
+    the writer's staged .tmp segment instead of leaving debris for
+    compaction."""
     from engagement_data_pipeline_spark.training import ranking as R
 
     idx = str(tmp_path / "idx")
     R.build_text_index(_docs(spark, [(1, "alpha beta")]), idx)
-    # hold the next delta claim so the updater cannot win it
-    (tmp_path / "idx" / "deltas").mkdir()
-    (tmp_path / "idx" / "deltas" / ".claim-d0001").write_text("holder")
-    monkeypatch.setattr(ing, "CLAIM_ACQUIRE_TIMEOUT_S", 1.0)
-    with pytest.raises(TimeoutError):
+
+    def fault(*a, **kw):
+        raise OSError("disk quota exceeded")
+
+    monkeypatch.setattr(ing, "_rename_path", fault)
+    with pytest.raises(OSError, match="quota"):
         R.update_text_index(spark, idx,
                             new_docs=_docs(spark, [(2, "gamma")]),
                             removed_docs=None)
-    leftovers = [n for n in os.listdir(tmp_path / "idx" / "deltas")
-                 if n.startswith(".tmp")]
-    assert leftovers == []
+    assert os.listdir(tmp_path / "idx" / "deltas") == []
 
 
-def test_crash_after_data_write_before_publish(spark, tmp_path, monkeypatch):
-    """Crash matrix, the remaining window: a writer claims commit N,
-    writes v<N> data, and dies BEFORE publishing the manifest.
-    Readers must still see commit N-1 (unreferenced data invisible),
-    and after the lease expires a new writer takes over number N,
-    overwrites the orphan data, and publishes correctly."""
+def test_crash_after_data_write_before_publish(spark, tmp_path):
+    """Crash matrix, the remaining window: a writer reads head N-1,
+    writes its v<N> data and a torn manifest temp, and dies BEFORE its
+    rename. Readers still see commit N-1 (the ghost rows are
+    invisible); the next merge commits N at once — no lease to wait
+    out — and vacuum reclaims both pieces of debris."""
     path = str(tmp_path / "t")
     merge = _seed(spark, path, keys=["a", "b"])
 
-    # simulate the crashed writer: acquire + write data, never publish
-    man, commit, claim = ing._acquire_commit(spark, path)
+    # simulate the crashed writer: data + torn temp, never renamed
+    man = ing.read_table_manifest(spark, path)
+    commit = man["commit"] + 1
     dead = _batch(spark, ["ghost1", "ghost2"], "dead").withColumn(
         ing.BUCKET_COL, ing.origin_bucket(["origin"], man["n_buckets"]))
-    ing._write_version(dead, path, commit, 2, claim)
-    # (claim file left in place, writer "dies" here)
+    ghost_dir = ing._write_version(dead, path, commit, 2, "dead0000")
+    temp = tmp_path / "t" / "_log" / f"{commit:08d}.json.tmp-dead0000"
+    temp.write_text('{"commit": 2, "n_buckets": 4, "ori')
 
-    # reader: prior commit fully intact, ghosts invisible
     rows = {r.origin for r in ing.read_merged_table(spark, path).collect()}
     assert rows == {"a", "b"}
 
-    # recovery: lease expires, a live writer takes over commit N
-    claim_file = tmp_path / "t" / "_log" / f"{commit:08d}.claim"
-    old = time.time() - 3600
-    os.utime(claim_file, (old, old))
-    monkeypatch.setattr(ing, "CLAIM_STALE_S", 5.0)
+    t0 = time.monotonic()
     merge(_batch(spark, ["c"], "live"), 1)
-    man2 = ing.read_table_manifest(spark, path)
-    assert man2["commit"] == commit
+    assert time.monotonic() - t0 < 60
+    assert ing.read_table_manifest(spark, path)["commit"] == commit
     rows = {r.origin: r.payload
             for r in ing.read_merged_table(spark, path).collect()}
-    # the usurper's commit holds exactly its own merge — the crashed
-    # writer's ghost rows never surface
+    assert rows == {"a": "seed", "b": "seed", "c": "live"}
+
+    ing.vacuum_table(spark, path, keep_manifests=1)
+    assert not (tmp_path / "t" / ghost_dir).exists()
+    assert not temp.exists()
+    rows = {r.origin: r.payload
+            for r in ing.read_merged_table(spark, path).collect()}
     assert rows == {"a": "seed", "b": "seed", "c": "live"}
 
 
@@ -429,20 +528,35 @@ def test_two_real_streams_one_table(spark, tmp_path):
     assert len(hist) == 4  # two micro-batches per stream, none lost
 
 
-def test_corrupt_trailing_manifest_overwritten(spark, tmp_path):
-    """A partial manifest at N+1 (non-atomic store, writer died mid
-    rename) is invisible to readers; the next writer claims N+1 and
-    its atomic publish REPLACES the debris — the table heals."""
+def test_torn_trailing_manifest_is_never_replaced(spark, tmp_path,
+                                                  monkeypatch):
+    """A partial manifest at N+1 (a store without atomic rename tore
+    it) is invisible to readers. A publish never replaces an existing
+    manifest, debris included: the next writer loses its rename at
+    N+1 and, seeing that the head did not move, raises a clear error
+    at once (no rebase rounds), leaving the debris, the readable prior
+    commit and no manifest temp behind."""
     path = str(tmp_path / "t")
     merge = _seed(spark, path, keys=["a"])
-    (tmp_path / "t" / "_log" / "00000002.json").write_text('{"trunc')
+    torn = tmp_path / "t" / "_log" / "00000002.json"
+    torn.write_text('{"trunc')
     # readers: highest PARSEABLE manifest wins
     assert ing.read_table_manifest(spark, path)["commit"] == 1
-    merge(_batch(spark, ["b"], "v2"), 1)
-    man = ing.read_table_manifest(spark, path)
-    assert man["commit"] == 2 and man.get("op", "merge") == "merge"
+    rounds = []
+    real_commit = ing._commit
+    monkeypatch.setattr(ing, "_commit", lambda *a, **kw: (
+        rounds.append(a[2]), real_commit(*a, **kw))[1])
+    with pytest.raises(RuntimeError, match="00000002.json exists but "
+                                           "cannot be parsed"):
+        merge(_batch(spark, ["b"], "v2"), 1)
+    monkeypatch.undo()
+    assert rounds == [2]
+    assert torn.read_text() == '{"trunc'
+    assert ing.read_table_manifest(spark, path)["commit"] == 1
     rows = {r.origin for r in ing.read_merged_table(spark, path).collect()}
-    assert rows == {"a", "b"}
+    assert rows == {"a"}
+    assert not [n for n in os.listdir(tmp_path / "t" / "_log")
+                if ".json.tmp-" in n]
 
 
 # --- round-7 hardening: single-winner expiry, writer-unique vdirs ---------
@@ -528,52 +642,177 @@ def test_usurper_past_the_lease_expires_the_winner(spark, tmp_path,
     assert [n for n in os.listdir(tmp_path) if ".tomb-" in n] == []
 
 
-def test_double_holder_cannot_clobber_published_data(spark, tmp_path):
-    """The r6 review's corruption scenario, made impossible by
-    writer-unique version directories: even if a lease race left TWO
-    writers believing they hold commit N, the loser's late data write
-    lands in its OWN directory — the published manifest still reads
-    back exactly the winner's bytes, and vacuum reclaims the loser's
-    debris."""
+def test_double_holder_cannot_clobber_published_data(spark, tmp_path,
+                                                     monkeypatch):
+    """Two writers publish the same commit number N: the no-replace
+    rename admits the one that gets there first. Here the rival lands
+    after the loser's last head check, right before its rename: the
+    loser's rename fails, it raises ConcurrentCommitError inside
+    `_retry_commit`, rebases on N and lands at N+1; its round-N
+    directory is unreferenced debris that vacuum removes."""
     path = str(tmp_path / "t")
-    _seed(spark, path, keys=["a"])
-    man, commit, claim_w = ing._acquire_commit(spark, path)
-    # a phantom second holder of the SAME commit number (simulating a
-    # worst-case expiry interleaving the claim protocol itself guards
-    # against — this is defense in depth)
-    claim_l = ing.CommitClaim(spark, claim_w.path, "loser-0000")
+    merge = _seed(spark, path, keys=["a"])
+    real_rename = ing._rename_path
+    lost = []
 
-    nb = man["n_buckets"]
-    win = _batch(spark, ["w"], "winner").withColumn(
-        ing.BUCKET_COL, ing.origin_bucket(["origin"], nb))
-    vdir = ing._write_version(win, path, commit, 1, claim_w)
-    claim_w.verify()
-    ing._commit(spark, path, commit, nb, ["origin"],
-                {**man["buckets"], **{r[0]: commit for r in
-                                      win.select(ing.BUCKET_COL)
-                                      .distinct().collect()}},
-                vdirs={**ing._vdirs(man), commit: vdir})
+    def rival_first(spark_, src, dst):
+        if ".json.tmp-" in src and not lost:
+            commit, writer = src.rsplit("/", 1)[1].split(".json.tmp-")
+            lost.append((int(commit), writer))
+            # a rival that read the same head publishes N first
+            merge(_batch(spark, ["w"], "winner"), 1)
+        return real_rename(spark_, src, dst)
 
-    # loser writes AFTER the winner published — previously this
-    # overwrote v<commit>/ in place and corrupted the live table
-    lose = _batch(spark, ["x", "y", "z"], "loser").withColumn(
-        ing.BUCKET_COL, ing.origin_bucket(["origin"], nb))
-    vdir_l = ing._write_version(lose, path, commit, 3, claim_l)
-    assert vdir_l != vdir
-    with pytest.raises(ing.ConcurrentCommitError):
-        claim_l.verify()
+    monkeypatch.setattr(ing, "_rename_path", rival_first)
+    loser = ing.foreach_batch_upsert(path, ["origin"])
+    loser(_batch(spark, ["x", "y", "z"], "loser"), 1)
+    monkeypatch.undo()
 
+    [(commit, writer)] = lost
+    assert commit == 2
+    hist = ing.table_history(spark, path).collect()
+    assert [h.commit for h in hist] == [3, 2, 1]
+    won = ing._manifest_at(spark, path, 2)
+    debris = tmp_path / "t" / f"v00000002-{writer}"
+    assert debris.exists()
+    assert f"v00000002-{writer}" not in ing._vdirs(won).values()
+    expect = {"a": "seed", "w": "winner",
+              "x": "loser", "y": "loser", "z": "loser"}
     rows = {r.origin: r.payload
             for r in ing.read_merged_table(spark, path).collect()}
-    assert rows == {"a": "seed", "w": "winner"}
+    assert rows == expect
 
-    # the loser's directory is unreferenced debris: vacuum removes it
     ing.vacuum_table(spark, path, keep_manifests=1)
-    assert not (tmp_path / "t" / vdir_l).exists()
-    assert (tmp_path / "t" / vdir).exists()
+    assert not debris.exists()
     rows = {r.origin: r.payload
             for r in ing.read_merged_table(spark, path).collect()}
-    assert rows == {"a": "seed", "w": "winner"}
+    assert rows == expect
+
+
+def test_swept_manifest_temp_is_a_lost_race(spark, tmp_path, monkeypatch):
+    """A manifest temp that vanishes before its rename (a vacuum swept
+    it) while no manifest exists at N is a lost race, not a torn
+    manifest: the writer rebases and lands, at N, on the next round."""
+    path = str(tmp_path / "t")
+    merge = _seed(spark, path, keys=["a"])
+    real_rename = ing._rename_path
+    swept = []
+
+    def sweep_first(spark_, src, dst):
+        if ".json.tmp-" in src and not swept:
+            swept.append(src)
+            os.unlink(ing._local_path(src))
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(ing, "_rename_path", sweep_first)
+    merge(_batch(spark, ["b"], "v2"), 1)
+    monkeypatch.undo()
+
+    assert len(swept) == 1
+    assert ing._list_commit_ids(spark, path) == [1, 2]
+    rows = {r.origin for r in ing.read_merged_table(spark, path).collect()}
+    assert rows == {"a", "b"}
+
+
+def test_slow_writer_never_lands_on_a_vacuumed_number(spark, tmp_path,
+                                                      monkeypatch):
+    """A writer reads head H and spends its data write while rivals
+    publish H+1 and H+2 and a vacuum keeping one manifest prunes
+    _log/H+1.json. The free H+1 must not take the writer's manifest:
+    its head re-check before the rename sees H+2, so it rebases and
+    lands at H+3 with its rows visible."""
+    path = str(tmp_path / "t")
+    merge = _seed(spark, path, keys=["a"])
+    rivals = [ing.foreach_batch_upsert(path, ["origin"], txn_app_id=f"r{i}")
+              for i in range(2)]
+    real_commit = ing._commit
+    rounds = []
+
+    def rivals_then_vacuum(spark_, table, commit, *a, **kw):
+        rounds.append(commit)
+        if len(rounds) == 1:
+            monkeypatch.setattr(ing, "_commit", real_commit)
+            for i, rival in enumerate(rivals):
+                rival(_batch(spark, [f"r{i}"], "rival"), 0)
+            ing.vacuum_table(spark, path, keep_manifests=1)
+            assert ing._list_commit_ids(spark, path) == [commit + 1]
+        return real_commit(spark_, table, commit, *a, **kw)
+
+    monkeypatch.setattr(ing, "_commit", rivals_then_vacuum)
+    slow = ing.foreach_batch_upsert(path, ["origin"], txn_app_id="slow")
+    slow(_batch(spark, ["s"], "slow"), 0)
+    monkeypatch.undo()
+
+    assert rounds == [2]
+    assert ing._list_commit_ids(spark, path) == [3, 4]
+    man = ing.read_table_manifest(spark, path)
+    assert man["commit"] == 4 and man["txn"]["slow"] == 0
+    rows = {r.origin: r.payload
+            for r in ing.read_merged_table(spark, path).collect()}
+    assert rows == {"a": "seed", "r0": "rival", "r1": "rival",
+                    "s": "slow"}
+    assert not [n for n in os.listdir(tmp_path / "t" / "_log")
+                if ".json.tmp-" in n]
+
+
+def _interleave(monkeypatch, op, before):
+    """Run `before()` once, inside the first `_commit` of kind `op`,
+    ahead of that commit's own publish."""
+    real_commit = ing._commit
+    hit = []
+
+    def wrapped(*a, **kw):
+        if kw.get("op", "merge") == op and not hit:
+            hit.append(a[2])
+            before()
+        return real_commit(*a, **kw)
+
+    monkeypatch.setattr(ing, "_commit", wrapped)
+    return hit
+
+
+def test_first_merge_beats_a_clone_to_an_empty_destination(
+        spark, tmp_path, monkeypatch):
+    """A first merge that creates the destination between the clone's
+    emptiness check and its publish: the merge publishes commit 1 and
+    the clone, which would publish at the source's head (3), raises
+    ValueError instead. The log stays dense and the merged rows stay
+    visible."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    seed = _seed(spark, src)
+    seed(_batch(spark, ["d"], "two"), 1)
+    seed(_batch(spark, ["e"], "three"), 2)
+    first = ing.foreach_batch_upsert(dst, ["origin"])
+    hit = _interleave(monkeypatch, "clone",
+                      lambda: first(_batch(spark, ["m"], "merged"), 0))
+    with pytest.raises(ValueError, match="already exists"):
+        ing.clone_table(spark, src, dst)
+    monkeypatch.undo()
+    assert hit == [3]
+    assert ing._list_commit_ids(spark, dst) == [1]
+    rows = {r.origin for r in ing.read_merged_table(spark, dst).collect()}
+    assert rows == {"m"}
+
+
+def test_clone_beats_a_first_merge_to_an_empty_destination(
+        spark, tmp_path, monkeypatch):
+    """A clone that lands while a first merge into the same empty
+    destination is writing: the merge's head re-check sees the clone
+    at the source's head (3), so it rebases onto the clone and lands
+    at 4. The log holds 3 and 4 and no row is lost."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    seed = _seed(spark, src)
+    seed(_batch(spark, ["d"], "two"), 1)
+    seed(_batch(spark, ["e"], "three"), 2)
+    hit = _interleave(monkeypatch, "merge",
+                      lambda: ing.clone_table(spark, src, dst))
+    first = ing.foreach_batch_upsert(dst, ["origin"])
+    first(_batch(spark, ["m"], "merged"), 0)
+    monkeypatch.undo()
+    assert hit == [1]
+    assert ing._list_commit_ids(spark, dst) == [3, 4]
+    rows = {r.origin for r in ing.read_merged_table(spark, dst).collect()}
+    assert rows == {"a", "b", "c", "d", "e", "m"}
 
 
 def test_vacuum_spares_inflight_version_dirs(spark, tmp_path):
@@ -583,30 +822,28 @@ def test_vacuum_spares_inflight_version_dirs(spark, tmp_path):
     must read back intact."""
     path = str(tmp_path / "t")
     _seed(spark, path, keys=["a"])
-    man, commit, claim = ing._acquire_commit(spark, path)
-    nb = man["n_buckets"]
+    man = ing.read_table_manifest(spark, path)
+    commit, nb = man["commit"] + 1, man["n_buckets"]
     batch = _batch(spark, ["n"], "new").withColumn(
         ing.BUCKET_COL, ing.origin_bucket(["origin"], nb))
-    vdir = ing._write_version(batch, path, commit, 1, claim)
+    vdir = ing._write_version(batch, path, commit, 1, "inflight")
 
     ing.vacuum_table(spark, path, keep_manifests=1)  # concurrent vacuum
     assert (tmp_path / "t" / vdir).exists()
 
-    claim.verify()
-    ing._commit(spark, path, commit, nb, ["origin"],
+    ing._commit(spark, path, commit, "inflight", nb, ["origin"],
                 {**man["buckets"], **{r[0]: commit for r in
                                       batch.select(ing.BUCKET_COL)
                                       .distinct().collect()}},
                 vdirs={**ing._vdirs(man), commit: vdir})
-    claim.release()
     rows = {r.origin for r in ing.read_merged_table(spark, path).collect()}
     assert rows == {"a", "n"}
 
 
 def test_put_if_absent_surfaces_transient_errors(spark, monkeypatch):
     """A transient IO error from fs.create must RAISE, not read as
-    'claim already held' (which would silently poll out the whole
-    acquire timeout); only AlreadyExists means contention."""
+    'claim already held' (which would pass every transient fault off
+    as contention); only AlreadyExists means contention."""
     class _FakePath:
         def __init__(self, *a):
             pass
@@ -621,6 +858,144 @@ def test_put_if_absent_surfaces_transient_errors(spark, monkeypatch):
                 "Path": _FakePath})})})})})))
     with pytest.raises(RuntimeError, match="connection reset"):
         ing.put_if_absent(spark, "mock://bucket/t/_log/00000001.claim", "w")
+
+
+class _FakeHadoop:
+    """Stands in for `ingest._fs`'s (FileSystem, jvm) pair on a remote
+    scheme: files live in a dict, and every FileContext rename raises
+    `rename_error`."""
+
+    def __init__(self, rename_error, existing=None):
+        self.files = dict(existing or {})
+        fake = self
+
+        class Path:
+            def __init__(self, p):
+                self.p = p
+
+            def toUri(self):
+                return self.p
+
+        class Out:
+            def __init__(self, p):
+                self.p = p
+
+            def write(self, b):
+                fake.files[self.p] = bytes(b).decode()
+
+            def close(self):
+                pass
+
+        class FileContext:
+            def rename(self, src, dst, opt):
+                raise rename_error
+
+        self.jvm = SimpleNamespace(org=SimpleNamespace(
+            apache=SimpleNamespace(
+                hadoop=SimpleNamespace(fs=SimpleNamespace(
+                    Path=Path,
+                    FileContext=SimpleNamespace(
+                        getFileContext=lambda uri, conf: FileContext()),
+                    Options=SimpleNamespace(
+                        Rename=SimpleNamespace(NONE="NONE")))),
+                commons=SimpleNamespace(io=SimpleNamespace(
+                    IOUtils=SimpleNamespace(
+                        toString=lambda stream, enc: stream.text))))))
+        self.out = Out
+
+    def create(self, p, overwrite):
+        return self.out(p.p)
+
+    def open(self, p):
+        if p.p not in self.files:
+            raise FileNotFoundError(p.p)
+        return SimpleNamespace(text=self.files[p.p], close=lambda: None)
+
+    def exists(self, p):
+        return p.p in self.files
+
+    def delete(self, p, recursive):
+        return self.files.pop(p.p, None) is not None
+
+
+def test_publish_surfaces_transient_rename_errors(spark, monkeypatch):
+    """On a remote store, a manifest rename that fails while the target
+    does not exist is an IO fault, not a lost race: it raises as is,
+    instead of rebasing in silence up to MAX_COMMIT_RETRIES times.
+    Only a target that exists after the failed rename means another
+    writer won: ConcurrentCommitError, and the temp is removed."""
+    root = "mock://bucket/t"
+    final = f"{root}/_log/00000001.json"
+    args = (spark, root, 1, "w0000000", 4, ["origin"], {0: 1})
+    rival = ('{"commit": 1, "n_buckets": 4, "origin": ["origin"], '
+             '"buckets": {"0": 1}}')
+
+    io = _FakeHadoop(RuntimeError("connection reset by peer"))
+    monkeypatch.setattr(ing, "_fs", lambda spark_, p: (io, io.jvm))
+    with pytest.raises(RuntimeError, match="connection reset"):
+        ing._commit(*args)
+    assert final not in io.files
+
+    # the rival publishes after the head re-check, before the rename
+    lost = _FakeHadoop(RuntimeError("FileAlreadyExistsException: x"))
+    real_read = ing.read_table_manifest
+
+    def head_then_rival(spark_, table):
+        head = real_read(spark_, table)
+        lost.files[final] = rival
+        return head
+
+    monkeypatch.setattr(ing, "read_table_manifest", head_then_rival)
+    monkeypatch.setattr(ing, "_fs", lambda spark_, p: (lost, lost.jvm))
+    with pytest.raises(ing.ConcurrentCommitError):
+        ing._commit(*args)
+    assert lost.files == {final: rival}
+
+
+def test_racing_merges_publish_dense_commits_exactly_once(spark, tmp_path):
+    """Six threads (more than the session's cores) race two merges
+    each onto one table, with a short thread switch interval. The log
+    holds dense commit ids 1..13 (a writer publishes N only after it
+    read N-1 as the head), and every batch is applied exactly once:
+    the txn watermarks record each stream's last batch, and replaying
+    every batch afterwards commits nothing."""
+    import sys
+
+    path = str(tmp_path / "t")
+    _seed(spark, path)
+    writers, batches = range(6), range(2)
+    merges = [ing.foreach_batch_upsert(path, ["origin"], txn_app_id=f"s{w}")
+              for w in writers]
+
+    def keys(w, b):
+        return [f"s{w}_{b}_{i}" for i in range(5)]
+
+    def stream(w):
+        def _go():
+            for b in batches:
+                merges[w](_batch(spark, keys(w, b), f"b{b}"), b)
+        return _go
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        _run_threads([stream(w) for w in writers])
+    finally:
+        sys.setswitchinterval(interval)
+    assert ing._list_commit_ids(spark, path) == list(range(1, 14))
+    assert [h.commit for h in ing.table_history(spark, path).collect()] \
+        == list(range(13, 0, -1))
+    man = ing.read_table_manifest(spark, path)
+    assert man["txn"] == {f"s{w}": 1 for w in writers}
+    for w in writers:
+        for b in batches:
+            merges[w](_batch(spark, keys(w, b), "replay"), b)
+    assert ing.read_table_manifest(spark, path)["commit"] == 13
+    rows = {r.origin: r.payload
+            for r in ing.read_merged_table(spark, path).collect()}
+    assert len(rows) == 3 + 60
+    assert all(rows[k] == f"b{b}" for w in writers for b in batches
+               for k in keys(w, b))
 
 
 def test_is_already_exists_classification():
@@ -686,8 +1061,9 @@ def test_compaction_spares_concurrent_delta(spark, tmp_path, monkeypatch):
 
 
 def test_compaction_sweeps_only_stale_tmp(spark, tmp_path):
-    """Orphan staging sweep is age-gated by the claim lease: an old
-    .tmp (crashed writer) is reclaimed, a fresh one is not."""
+    """Orphan staging sweep is age-gated: an old .tmp (crashed writer)
+    is reclaimed, a fresh one is not. A delta claim left by an index
+    written before lease-free deltas is reclaimed too."""
     from engagement_data_pipeline_spark.training import ranking as R
 
     idx = str(tmp_path / "idx")
@@ -701,10 +1077,12 @@ def test_compaction_sweeps_only_stale_tmp(spark, tmp_path):
     os.utime(old_tmp, (ago, ago))
     fresh_tmp = deltas / ".tmp-live"
     fresh_tmp.mkdir()
+    (deltas / ".claim-d0001").write_text("holder")
     R.compact_text_index(spark, idx)
     names = set(os.listdir(deltas))
     assert ".tmp-crashed" not in names
     assert ".tmp-live" in names
+    assert ".claim-d0001" not in names
 
 
 def test_dv_delete_races_merge(spark, tmp_path):

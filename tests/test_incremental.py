@@ -245,9 +245,10 @@ def test_merge_crash_mid_publish_leaves_prior_commit_readable(spark, tmp_path):
     the new version's data but BEFORE publishing the manifest — the
     unreferenced version dir must be invisible and the prior commit
     fully readable; (b) writer dies mid-manifest leaving a partial
-    JSON — the reader must skip it; (c) the re-run of the interrupted
-    batch (what the stream checkpoint does) converges to the correct
-    merged table."""
+    JSON (at its manifest temp: the final name only ever appears by a
+    complete rename) — the reader must skip it; (c) the re-run of the
+    interrupted batch (what the stream checkpoint does) converges to
+    the correct merged table."""
     from unittest import mock
 
     import engagement_data_pipeline_spark.streaming.ingest as ing
@@ -271,8 +272,8 @@ def test_merge_crash_mid_publish_leaves_prior_commit_readable(spark, tmp_path):
             pass
     assert sorted(ing.read_merged_table(spark, table).collect()) == before
 
-    # (b) partial manifest from a torn write on a non-atomic store
-    (tmp_path / "t" / "_log" / "00000002.json").write_text(
+    # (b) partial manifest temp from a writer killed mid-write
+    (tmp_path / "t" / "_log" / "00000002.json.tmp-dead0000").write_text(
         '{"commit": 2, "n_buckets": 4, "ori')
     assert sorted(ing.read_merged_table(spark, table).collect()) == before
     man = ing.read_table_manifest(spark, table)
